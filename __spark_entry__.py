@@ -541,11 +541,10 @@ def _q_exact_dedup_documents(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_lsh_dup_pairs_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH near-dup pairs with integer-exact Jaccard micros.  The
-    0.8-threshold filter is the integer comparison 5·|∩| ≥ 4·|∪| so
-    boundary pairs agree with the oracle bit-for-bit."""
+    """LSH near-dup pairs with integer-exact Jaccard micros
+    (``_integer_jaccard_pairs``)."""
     from datasketches_java_spark.operators.lsh import (
-        add_signatures, band_buckets, candidate_pairs)
+        add_signatures, band_buckets, candidate_pairs, pair_overlaps)
     docs = _read(spark, sf, "documents")
     # lazy localCheckpoint, not persist(): computes once for the three
     # consumers below, and the blocks are released by the ContextCleaner
@@ -557,19 +556,16 @@ def _q_lsh_dup_pairs_documents(spark: SparkSession, sf: str) -> DataFrame:
            .select("doc_id", "shingles", "minhash")
            .localCheckpoint(eager=False))
     pairs = candidate_pairs(band_buckets(sig, "doc_id"), "doc_id")
-    sh = sig.select("doc_id", "shingles")
-    joined = (pairs
-              .join(sh.withColumnRenamed("doc_id", "id_a")
-                      .withColumnRenamed("shingles", "sh_a"), on="id_a")
-              .join(sh.withColumnRenamed("doc_id", "id_b")
-                      .withColumnRenamed("shingles", "sh_b"), on="id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-    uni = F.size(F.array_union("sh_a", "sh_b")).cast("long")
-    return (joined.select(F.col("id_a").alias("doc_a"),
-                          F.col("id_b").alias("doc_b"),
-                          inter.alias("i"), uni.alias("u"))
-            .where(F.col("i") * 5 >= F.col("u") * 4)
-            .select("doc_a", "doc_b",
+    return _integer_jaccard_pairs(pair_overlaps(pairs, sig, "doc_id"))
+
+
+def _integer_jaccard_pairs(overlaps: DataFrame) -> DataFrame:
+    """(id_a, id_b, i, u) → (doc_a, doc_b, jaccard_micros) for pairs at
+    Jaccard ≥ 0.8, in integer arithmetic: the threshold is
+    5·|∩| ≥ 4·|∪| and the micros are div(|∩|·10^6, |∪|), so boundary
+    pairs agree with the oracle bit-for-bit."""
+    return (overlaps.where(F.col("i") * 5 >= F.col("u") * 4)
+            .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
                     F.expr("div(i * 1000000, u)").alias("jaccard_micros"))
             .orderBy("doc_a", "doc_b"))
 
@@ -629,7 +625,7 @@ def _q_simhash_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_simhash_containment.py, which also independently recomputes
     the Hamming distances the driver no longer sees)."""
     from datasketches_java_spark.operators.lsh import (
-        add_signatures, simhash_hamming_pairs)
+        add_signatures, pair_overlaps, simhash_hamming_pairs)
     docs = _read(spark, sf, "documents")
     # lazy localCheckpoint for the same cache-lifetime hygiene as
     # _q_lsh_dup_pairs_documents (blocks GC'd with the DataFrame),
@@ -638,21 +634,7 @@ def _q_simhash_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
            .select("doc_id", "shingles", "simhash")
            .localCheckpoint(eager=False))
     pairs = simhash_hamming_pairs(sig, "doc_id", max_hamming=12)
-    sh = sig.select("doc_id", "shingles")
-    joined = (pairs
-              .join(sh.withColumnRenamed("doc_id", "id_a")
-                      .withColumnRenamed("shingles", "g_a"), on="id_a")
-              .join(sh.withColumnRenamed("doc_id", "id_b")
-                      .withColumnRenamed("shingles", "g_b"), on="id_b"))
-    inter = F.size(F.array_intersect("g_a", "g_b")).cast("long")
-    uni = F.size(F.array_union("g_a", "g_b")).cast("long")
-    return (joined.select(F.col("id_a").alias("doc_a"),
-                          F.col("id_b").alias("doc_b"),
-                          inter.alias("i"), uni.alias("u"))
-            .where(F.col("i") * 5 >= F.col("u") * 4)
-            .select("doc_a", "doc_b",
-                    F.expr("div(i * 1000000, u)").alias("jaccard_micros"))
-            .orderBy("doc_a", "doc_b"))
+    return _integer_jaccard_pairs(pair_overlaps(pairs, sig, "doc_id"))
 
 
 def _q_winnow_fingerprints_documents(spark: SparkSession, sf: str) -> DataFrame:

@@ -155,30 +155,6 @@ def simhash_batch(series: pd.Series, bits: int = SIMHASH_BITS) -> np.ndarray:
     return simhash_flat(values, starts, lengths, bits)
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def minhash128(shingle_hashes: pd.Series) -> pd.Series:
-    """Series-in/Series-out wrapper of minhash_batch (128 perms) for
-    use inside mapInPandas/mapInArrow operators."""
-    sig = minhash_batch(shingle_hashes)
-    return pd.Series(list(sig))
-
-
-@F.pandas_udf(T.LongType())
-def simhash64(shingle_hashes: pd.Series) -> pd.Series:
-    """Series-in/Series-out wrapper of simhash_batch (64 bits)."""
-    return pd.Series(simhash_batch(shingle_hashes))
-
-
-@F.pandas_udf(T.DoubleType())
-def minhash_jaccard(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-    """Signature-space Jaccard estimate: fraction of agreeing
-    permutations (theta/JaccardSimilarity.java:55 counterpart over
-    fixed-width signatures)."""
-    a = np.stack([np.asarray(v, np.int64) for v in sig_a])
-    b = np.stack([np.asarray(v, np.int64) for v in sig_b])
-    return pd.Series((a == b).mean(axis=1))
-
-
 def winnow_batch(series: pd.Series, window: int = 8) -> list:
     """Winnowing fingerprints (Schleimer et al., SIGMOD'03) over
     per-doc k-gram hash sequences: minimum hash of each sliding

@@ -76,11 +76,12 @@ def ordered_shingle_hashes(toks: Column | str, w: int = SHINGLE_W) -> Column:
     return F.transform(shingles(c, w), lambda s: F.xxhash64(s))
 
 
-def exact_jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard of two shingle-hash arrays (verification join;
-    counterpart of theta/JaccardSimilarity.java:55 exact mode)."""
-    inter = F.size(F.array_intersect(a, b))
-    uni = F.size(F.array_union(a, b))
+def exact_jaccard(inter: Column, uni: Column) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| from the two set sizes, 1.0 for two
+    empty sets (verification join; counterpart of
+    theta/JaccardSimilarity.java:55 exact mode).  The sizes come from
+    operators/lsh.pair_overlaps, which evaluates one ``array_union``
+    per pair."""
     return F.when(uni > 0, inter.cast("double") / uni.cast("double")).otherwise(F.lit(1.0))
 
 

@@ -67,10 +67,13 @@ class CheckpointStore:
         else:
             df.write.format(self.fmt).mode("overwrite").save(target)
 
-    def _read(self, target: str) -> DataFrame:
+    def _read(self, target: str, schema=None) -> DataFrame:
         if self.fmt == "iceberg":
             return self.spark.table(target)
-        return self.spark.read.format(self.fmt).load(target)
+        reader = self.spark.read.format(self.fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(target)
 
     # -- core --------------------------------------------------------------
     def run_stage(self, stage: str, build: Callable[[], DataFrame],
@@ -81,7 +84,9 @@ class CheckpointStore:
         t0 = time.time()
         df = build()
         self._write(df, self._data(stage))
-        out = self._read(self._data(stage))
+        # read back with the written schema: inferring it is one Spark
+        # job over the parquet footers; resumes (above) still infer it
+        out = self._read(self._data(stage), df.schema)
         self._write_metrics(stage, out, lineage_col, wall_ms=int((time.time() - t0) * 1000))
         return out
 

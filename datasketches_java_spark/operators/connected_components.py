@@ -12,7 +12,9 @@ lineage would grow unboundedly across iterations, so every round is
 cut with localCheckpoint (cluster deployments should set a checkpoint
 dir and use checkpoint(); the dedup plan's parquet stage checkpoints
 cover durable resume).  Convergence is detected by an exact
-edge-set fixpoint (count of changed edges == 0).
+edge-set fixpoint (count of changed edges == 0); a run that has not
+reached it after ``max_iterations`` rounds raises instead of returning
+partial components.
 """
 
 from __future__ import annotations
@@ -71,6 +73,8 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     """Edge list → (id, component) with component = min node id of the
     component.  Nodes appearing only in ``edges`` are covered; isolated
     nodes are the caller's concern (left-join and coalesce to self).
+    Raises RuntimeError if the edge set has not reached its fixpoint
+    after ``max_iterations`` rounds.
     """
     e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     e = e.localCheckpoint()
@@ -98,6 +102,10 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
         if fp2 == fp:
             break
         fp = fp2
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "rounds; the edge set was still changing")
 
     # fixpoint: a star forest in canonical (min, member) orientation —
     # src is the component minimum, dst the member

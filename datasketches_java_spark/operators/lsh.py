@@ -14,15 +14,18 @@ Scale design (100 TB / 10^12 docs):
     the north rule requires.  Connectivity is preserved (star edges
     keep the bucket one component for clustering) while edge count is
     bounded.
-  - Hot buckets are *detected* with the frequent-items UDAF
-    (frequencies/LongsSketch.java counterpart) for metrics, and the
-    pair-generation shuffle is salted by doc hash so that even a
-    pathological band hash distributes across
-    ``spark.sql.shuffle.partitions`` tasks before the window runs.
+  - Hot buckets are counted with a plain ``groupBy(band, band_hash)``
+    count for metrics (``hot_buckets``).  Buckets above
+    ``bucket_cap · hot_factor`` members take a pair-generation path
+    salted by doc hash, so that even a pathological band hash
+    distributes across ``n_salts`` tasks instead of one window sort.
   - Pair dedup across the 32 bands is a map-side-combinable distinct.
-  - The verification join re-attaches shingle arrays by id; exact
-    Jaccard is F.array_intersect/array_union — JVM-side, codegen
-    (counterpart of theta/JaccardSimilarity.java:55 exact mode).
+  - The verification join re-attaches shingle arrays by id and
+    evaluates ONE ``array_union`` per pair (``pair_overlaps``); the
+    intersection size follows as |A|+|B|−|A∪B|, exact because shingle
+    arrays are distinct.  Exact Jaccard is their ratio — JVM-side,
+    codegen (counterpart of theta/JaccardSimilarity.java:55 exact
+    mode).
 """
 
 from __future__ import annotations
@@ -255,11 +258,20 @@ def hot_buckets(buckets: DataFrame, min_size: int = LSH_BUCKET_CAP) -> DataFrame
             .filter(F.col("bucket_size") > min_size))
 
 
-def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
-                 shingle_col: str = "shingles",
-                 threshold: float = DUP_JACCARD_THRESHOLD) -> DataFrame:
-    """Exact-Jaccard verification join: (id_a, id_b) → rows with
-    jaccard ≥ threshold.  Output: id_a, id_b, jaccard.
+def pair_overlaps(pairs: DataFrame, shingled: DataFrame, id_col: str,
+                  shingle_col: str = "shingles") -> DataFrame:
+    """Pairs (id_a, id_b) → (id_a, id_b, i, u): the exact sizes, as
+    longs, of the intersection and the union of the two ids' shingle
+    sets.
+
+    The shingle arrays must hold distinct elements, as shingle_hashes
+    builds them; then |A∩B| = |A| + |B| − |A∪B|, and one
+    ``array_union`` per pair gives both sizes.  The union runs inside a
+    one-element ``explode``, a Generate the optimizer cannot inline
+    through, so it is evaluated once per pair however many filters and
+    projections downstream read ``i`` and ``u``.  As a plain column,
+    Catalyst pushes a filter on it through the projection with the
+    alias inlined, and the union runs once per reference.
 
     Both joins carry a shuffle_hash hint: the signature side's rows
     hold ~2 KB shingle arrays, and a sort-merge join (Catalyst's
@@ -271,14 +283,29 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
     Same reasoning holds at cluster scale: never sort array payloads.
     """
     sh = shingled.select(F.col(id_col), F.col(shingle_col))
-    joined = (pairs.hint("shuffle_hash")
-              .join(sh.withColumnRenamed(id_col, "id_a")
-                      .withColumnRenamed(shingle_col, "sh_a"), on="id_a")
+    joined = (pairs.select("id_a", "id_b").hint("shuffle_hash")
+              .join(sh.withColumnsRenamed({id_col: "id_a", shingle_col: "sh_a"}),
+                    on="id_a")
               .hint("shuffle_hash")
-              .join(sh.withColumnRenamed(id_col, "id_b")
-                      .withColumnRenamed(shingle_col, "sh_b"), on="id_b"))
-    return (joined
-            .withColumn("jaccard", exact_jaccard(F.col("sh_a"), F.col("sh_b")))
+              .join(sh.withColumnsRenamed({id_col: "id_b", shingle_col: "sh_b"}),
+                    on="id_b"))
+    sizes = joined.select(
+        "id_a", "id_b", "sh_a", "sh_b",
+        (F.size("sh_a").cast("long") + F.size("sh_b").cast("long")).alias("_ab"))
+    uni = F.size(F.array_union("sh_a", "sh_b")).cast("long")
+    return (sizes.select("id_a", "id_b", "_ab", F.explode(F.array(uni)).alias("u"))
+            .select("id_a", "id_b", (F.col("_ab") - F.col("u")).alias("i"), "u"))
+
+
+def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
+                 shingle_col: str = "shingles",
+                 threshold: float = DUP_JACCARD_THRESHOLD) -> DataFrame:
+    """Exact-Jaccard verification join: (id_a, id_b) → rows with
+    jaccard ≥ threshold.  Output: id_a, id_b, jaccard.  The join and the
+    set sizes are ``pair_overlaps``; jaccard is the double quotient
+    i / u."""
+    return (pair_overlaps(pairs, shingled, id_col, shingle_col)
+            .withColumn("jaccard", exact_jaccard(F.col("i"), F.col("u")))
             .filter(F.col("jaccard") >= F.lit(threshold))
             .select("id_a", "id_b", "jaccard"))
 

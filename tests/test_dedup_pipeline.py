@@ -121,6 +121,30 @@ def test_connected_components_chain_and_star(spark):
     assert star_ids == {100}
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """Too few rounds for a long path must fail loudly, not return
+    partial components."""
+    path = [(i, i + 1) for i in range(32)]
+    edges = spark.createDataFrame(path, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, max_iterations=1)
+
+
+def test_checkpoint_read_back_matches_resume(spark, tmp_path):
+    """The just-written stage is read back with the written schema; a
+    resume infers it from the files.  Both must give the same frame."""
+    from datasketches_java_spark.operators.checkpoint import CheckpointStore
+    df = spark.createDataFrame(
+        [(1, "a", [3, 1], 0.5), (2, None, None, None)],
+        "id long, s string, arr array<long>, x double")
+    ckpt = str(tmp_path / "ckpt")
+    written = CheckpointStore(spark, ckpt).run_stage("s", lambda: df, "id")
+    resumed = CheckpointStore(spark, ckpt).run_stage(
+        "s", lambda: pytest.fail("resume recomputed the stage"), "id")
+    assert written.schema == resumed.schema
+    assert sorted(written.collect()) == sorted(resumed.collect())
+
+
 def test_assign_clusters_singletons(spark):
     df = spark.createDataFrame([("a",), ("b",), ("c",)], "url string")
     edges = spark.createDataFrame([("b", "c")], "id_a string, id_b string")

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import SF_TINY
+
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -32,19 +34,43 @@ def test_no_cartesian_product(spark, qname):
     assert "CartesianProduct" not in plan, f"{qname} regressed to a cartesian"
 
 
-def test_verify_join_is_shuffle_hash(spark):
-    """verify_pairs must not sort-merge the shingle-array side."""
-    from pyspark.sql import functions as F
+def _verify_plan(spark) -> str:
     from datasketches_java_spark.operators.lsh import (
         add_signatures, band_buckets, candidate_pairs, verify_pairs)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet")
     sig = add_signatures(docs.select("doc_id", "text"), "text") \
         .localCheckpoint(eager=False)
     pairs = candidate_pairs(band_buckets(sig, "doc_id"), "doc_id")
-    plan = _physical_plan(verify_pairs(pairs, sig, "doc_id"))
+    return _physical_plan(verify_pairs(pairs, sig, "doc_id"))
+
+
+def test_verify_join_is_shuffle_hash(spark):
+    """verify_pairs must not sort-merge the shingle-array side."""
+    plan = _verify_plan(spark)
     assert "ShuffledHashJoin" in plan
     # the fat-array side must not be sorted by a sort-merge join
     assert "SortMergeJoin" not in plan
+
+
+def test_verify_evaluates_one_union_per_pair(spark):
+    """The exact-Jaccard verify runs one array_union per candidate pair
+    and no array_intersect: the intersection size is derived from it,
+    and the union is not re-evaluated by the filter and the projection
+    that read the sizes."""
+    plan = _verify_plan(spark)
+    assert plan.count("array_union(") == 1, plan
+    assert "array_intersect(" not in plan, plan
+
+
+@pytest.mark.parametrize("qname", ["lsh_dup_pairs_documents",
+                                   "simhash_near_pairs"])
+def test_pair_queries_evaluate_one_union(spark, qname):
+    """The entry point's integer-Jaccard pair queries share verify's set
+    sizes."""
+    import __spark_entry__ as entry
+    plan = _physical_plan(entry.queries()[qname](spark, SF_TINY))
+    assert plan.count("array_union(") == 1, plan
+    assert "array_intersect(" not in plan, plan
 
 
 def test_assign_clusters_join_is_shuffle_hash(spark):
