@@ -62,14 +62,3 @@ def get_spark(app_name: str = "datasketches_java_spark",
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read a driver-provided table; Iceberg first (the production
-    format per BASELINE.json input_hint), parquet fallback in sandbox."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if not path.endswith(".parquet"):
-            return spark.read.format("iceberg").load(path)
-    except Exception:
-        pass
-    return spark.read.parquet(path)

@@ -8,9 +8,15 @@ images cross the shuffle; the reduce side unions images per key — the
 
 At 100 TB this is the only viable shape: shuffle volume is
 O(#keys x #partitions x sketch_size), independent of row count.
-Implemented with mapInPandas (partial) + groupBy().applyInPandas
-(final) so every step is Arrow-batched; no per-row Python anywhere
-(BASELINE.json input_hint).
+The partial runs in ``mapInArrow`` and hands each family's builder
+typed Arrow columns (a BIGINT column holding a NULL stays int64); the
+final is an Arrow GROUPED_AGG union.  No per-row Python anywhere
+(BASELINE.json input_hint).  The theta, HLL, CPC, KLL and
+frequent-items builders are the ``functions/sketch_spec`` specs the
+SQL registry registers too.
+
+Every scalar UDF here reads image columns row by row and returns NULL
+for a row whose image (or argument) is NULL.
 """
 
 from __future__ import annotations
@@ -19,6 +25,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..config import (
@@ -28,58 +35,63 @@ from ..config import (
     HLL_DEFAULT_LG_K,
     KLL_DEFAULT_K,
 )
-from ..sketches import hll, theta
+from ..sketches import (cpc, cpc_serde, freq_serde, hll, hll_serde, kll_serde,
+                        req_serde, theta, theta_serde, tuple as tpl, tuple_serde)
 from ..sketches.frequencies import ItemsSketch
 from ..sketches.kll import KllDoublesSketch
+from ..sketches.kll_items import KllItemsSketch
+from ..sketches.req import ReqSketch
 from ..sketches.sampling import PrioritySample, ReservoirSketch
+from ..sketches.varopt import VarOptSketch, VarOptUnion
+from . import sketch_spec as S
+from .sketch_spec import fold, to_numpy
 
 _GLOBAL_KEY = "__ds_global__"
 
 
-def _utf8_flat(strings: pd.Series, binary: bool = False):
-    """pandas string/bytes Series → (flat uint8 buffer, starts,
-    lengths) via the Arrow string/binary layout — no per-row Python;
-    feeds the batch murmur3 (same flat-buffer trick as minhash_flat)."""
-    import pyarrow as pa
-    a = pa.array(strings, type=pa.binary() if binary else pa.string())
-    bufs = a.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int32)[
-        a.offset: a.offset + len(a) + 1].astype(np.int64)
-    data = (np.frombuffer(bufs[2], dtype=np.uint8)
-            if bufs[2] is not None else np.empty(0, np.uint8))
-    return data, offsets[:-1], np.diff(offsets)
-
-
-def _two_phase(df: DataFrame, by: list[str], value_cols: list[str],
-               build: Callable[[pd.DataFrame], bytes],
-               merge: Callable[[list[bytes]], bytes],
-               out_col: str) -> DataFrame:
-    """Generic partial(update)/final(merge) sketch aggregation."""
+def _two_phase(df: DataFrame, by: list[str] | None, value_cols: list[str],
+               spec: S.Spec, out_col: str) -> DataFrame:
+    """Generic partial(update)/final(merge) sketch aggregation:
+    ``spec.build(*value arrays)`` per key and Arrow batch, then
+    ``spec.union`` of the partial images per key."""
+    by = by or []
     group_cols = by or [_GLOBAL_KEY]
     if not by:
         df = df.withColumn(_GLOBAL_KEY, F.lit(0))
     df = df.select(*group_cols, *value_cols)
-
-    key_fields = [df.schema[c] for c in group_cols]
-    out_schema = T.StructType(key_fields + [T.StructField(out_col, T.BinaryType())])
+    out_schema = T.StructType([df.schema[c] for c in group_cols]
+                              + [T.StructField(out_col, T.BinaryType())])
 
     def partial(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for key, grp in pdf.groupby(group_cols, dropna=False, sort=False):
-                key = key if isinstance(key, tuple) else (key,)
-                rows.append((*key, build(grp)))
-            yield pd.DataFrame(rows, columns=group_cols + [out_col])
+        for rb in batches:
+            g = pa.Table.from_batches([rb]).group_by(
+                group_cols, use_threads=False).aggregate(
+                    [(c, "list") for c in value_cols])
+            lists = [g[f"{c}_list"].combine_chunks() for c in value_cols]
+            imgs = [spec.build(*(lst[i].values for lst in lists))
+                    for i in range(g.num_rows)]
+            yield from g.select(group_cols).append_column(
+                out_col, pa.array(imgs, pa.binary())).to_batches()
 
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = merge(list(pdf[out_col]))
-        return pdf.iloc[:1][group_cols].assign(**{out_col: [img]})
-
-    partials = df.mapInPandas(partial, schema=out_schema)
-    merged = partials.groupBy(*group_cols).applyInPandas(final, schema=out_schema)
+    merged = (df.mapInArrow(partial, schema=out_schema)
+              .groupBy(*group_cols)
+              .agg(S.aggregate(spec.union, out_col)(out_col).alias(out_col)))
     return merged.drop(_GLOBAL_KEY) if not by else merged
+
+
+def _image_udf(rtype: T.DataType) -> Callable:
+    """Decorator: ``fn(image, *args)`` per row → scalar pandas UDF over
+    image column(s).  A row with a NULL argument gives NULL, never a
+    worker error — the one NULL rule of every image-reading scalar."""
+    def wrap(fn: Callable) -> Callable:
+        def udf(*cols: pd.Series) -> pd.Series:
+            null = np.logical_or.reduce([c.isna().to_numpy() for c in cols])
+            return pd.Series([None if n else fn(*row)
+                              for n, *row in zip(null, *cols)], dtype=object)
+        udf.__name__ = udf.__qualname__ = fn.__name__
+        udf.__doc__, udf.__module__ = fn.__doc__, fn.__module__
+        return F.pandas_udf(udf, rtype)
+    return wrap
 
 
 # ---------------------------------------------------------------------------
@@ -93,127 +105,93 @@ def theta_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
                      p: float = 1.0) -> DataFrame:
     """groupBy(by).agg(theta_sketch(col)) -> by + theta_sketch:binary.
 
-    Integral columns hash as update(long); STRING columns hash their
-    UTF-8 bytes with the batch murmur3 (null/empty rejected) — exactly
-    theta/UpdateSketch.java:255 — and BINARY columns hash raw bytes
-    (update(byte[]), :271; raw-media exact-dedup keys), so sketches
-    built here are hash-equal to reference sketches of the same items
-    (cross-system set operations work).  If ``prehashed`` the column
-    already holds 63-bit update hashes (the union "backdoor",
-    theta/UnionImpl.java:328).  ``p`` is the builder's up-front
-    sampling probability (UpdateSketchBuilder.setP).
+    Values hash through the reference's update overloads
+    (``sketch_spec.hash_pairs``): integral as update(long), floating as
+    update(double), STRING as its UTF-8 bytes, BINARY as raw bytes
+    (theta/UpdateSketch.java:220-271; NULL and empty rejected), so
+    sketches built here are hash-equal to reference sketches of the
+    same items (cross-system set operations work).  If ``prehashed``
+    the column already holds 63-bit update hashes (the union
+    "backdoor", theta/UnionImpl.java:328).  ``p`` is the builder's
+    up-front sampling probability (UpdateSketchBuilder.setP).
     """
-    from ..sketches.murmur3 import theta_hash_bytes_batch
-    by = by or []
-    dt = df.schema[col].dataType
-    is_string = isinstance(dt, T.StringType)
-    is_binary = isinstance(dt, T.BinaryType)
-
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if prehashed:
-            sk = theta.from_update_hashes(
-                vals.to_numpy().astype(np.uint64), lg_k, seed, p)
-        elif is_string or is_binary:
-            # empty rejected (UpdateSketch.java:255,271)
-            vals = vals[vals.map(len) > 0] if is_binary else vals[vals != ""]
-            flat, starts, lengths = _utf8_flat(vals, binary=is_binary)
-            uh = theta_hash_bytes_batch(flat, starts, lengths, seed)
-            sk = theta.from_update_hashes(uh, lg_k, seed, p)
-        else:
-            sk = theta.sketch_longs(
-                vals.to_numpy().astype(np.int64), lg_k, seed, p)
-        return sk.to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        return theta.union_many([theta.ThetaSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "theta_sketch")
+    return _two_phase(df, by, [col], S.theta(lg_k, seed, p, prehashed),
+                      "theta_sketch")
 
 
 def theta_union_agg(df: DataFrame, sketch_col: str = "theta_sketch",
                     by: list[str] | None = None) -> DataFrame:
-    """Merge an existing sketch column (checkpoint resume path)."""
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return theta.union_many(
-            [theta.ThetaSketch.from_bytes(b) for b in grp[sketch_col]]).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        return theta.union_many([theta.ThetaSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [sketch_col], build, merge, sketch_col)
+    """Merge an existing sketch column (checkpoint resume path); NULL
+    images are skipped."""
+    spec = S.theta()
+    return _two_phase(df, by, [sketch_col], spec._replace(build=spec.union),
+                      sketch_col)
 
 
-@F.pandas_udf(T.DoubleType())
-def theta_estimate(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def theta_estimate(b: bytes) -> float:
     """Distinct-count estimate from a theta image column
     (theta/Sketch.java:264 count/theta estimator)."""
-    return images.map(lambda b: theta.ThetaSketch.from_bytes(b).estimate())
+    return theta.ThetaSketch.from_bytes(b).estimate()
 
 
-@F.pandas_udf(T.BinaryType())
-def theta_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def theta_to_java(b: bytes) -> bytes:
     """Engine image → reference serVer-3 compact-ordered image
     (interop export; theta/PreambleUtil.java:28-133 layout)."""
-    from ..sketches import theta_serde
-    return images.map(
-        lambda b: theta_serde.to_java_bytes(theta.ThetaSketch.from_bytes(b)))
+    return theta_serde.to_java_bytes(theta.ThetaSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def theta_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def theta_from_java(b: bytes) -> bytes:
     """Reference serVer-3 compact image → engine image (heapify
     counterpart, theta/Sketch.java:70)."""
-    from ..sketches import theta_serde
-    return images.map(
-        lambda b: theta_serde.from_java_bytes(b).to_bytes())
+    return theta_serde.from_java_bytes(b).to_bytes()
 
 
-@F.pandas_udf(T.DoubleType())
-def theta_lower_bound(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def theta_lower_bound(b: bytes) -> float:
     """2-sigma lower confidence bound of a theta image column
     (thetacommon/BinomialBoundsN exact port)."""
-    return images.map(lambda b: theta.ThetaSketch.from_bytes(b).bounds(2)[0])
+    return theta.ThetaSketch.from_bytes(b).bounds(2)[0]
 
 
-@F.pandas_udf(T.DoubleType())
-def theta_upper_bound(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def theta_upper_bound(b: bytes) -> float:
     """2-sigma upper confidence bound of a theta image column."""
-    return images.map(lambda b: theta.ThetaSketch.from_bytes(b).bounds(2)[1])
+    return theta.ThetaSketch.from_bytes(b).bounds(2)[1]
 
 
-def _theta_pair_udf(op) -> Callable:
-    @F.pandas_udf(T.BinaryType())
-    def pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([
-            op(theta.ThetaSketch.from_bytes(x), theta.ThetaSketch.from_bytes(y)).to_bytes()
-            for x, y in zip(a, b)])
-    return pair
+def _theta_pair(op: Callable, x: bytes, y: bytes):
+    return op(theta.ThetaSketch.from_bytes(x), theta.ThetaSketch.from_bytes(y))
 
 
-theta_union_pair = _theta_pair_udf(theta.union)
-theta_intersect_pair = _theta_pair_udf(theta.intersect)
-theta_a_not_b_pair = _theta_pair_udf(theta.a_not_b)
-theta_union_pair.__doc__ = (
-    "Pairwise union of two theta image columns (theta-rule, "
-    "theta/UnionImpl.java:300) -> new image column.")
-theta_intersect_pair.__doc__ = (
-    "Pairwise intersection of two theta image columns "
-    "(theta/IntersectionImpl counterpart) -> new image column.")
-theta_a_not_b_pair.__doc__ = (
-    "Pairwise A-and-not-B of two theta image columns "
-    "(theta/AnotBimpl counterpart) -> new image column.")
+@_image_udf(T.BinaryType())
+def theta_union_pair(x: bytes, y: bytes) -> bytes:
+    """Pairwise union of two theta image columns (theta-rule,
+    theta/UnionImpl.java:300) -> new image column."""
+    return _theta_pair(theta.union, x, y).to_bytes()
 
 
-@F.pandas_udf(T.DoubleType())
-def theta_jaccard_pair(a: pd.Series, b: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def theta_intersect_pair(x: bytes, y: bytes) -> bytes:
+    """Pairwise intersection of two theta image columns
+    (theta/IntersectionImpl counterpart) -> new image column."""
+    return _theta_pair(theta.intersect, x, y).to_bytes()
+
+
+@_image_udf(T.BinaryType())
+def theta_a_not_b_pair(x: bytes, y: bytes) -> bytes:
+    """Pairwise A-and-not-B of two theta image columns
+    (theta/AnotBimpl counterpart) -> new image column."""
+    return _theta_pair(theta.a_not_b, x, y).to_bytes()
+
+
+@_image_udf(T.DoubleType())
+def theta_jaccard_pair(x: bytes, y: bytes) -> float:
     """Jaccard estimate of two sketch images
     (theta/JaccardSimilarity.java:55)."""
-    return pd.Series([
-        theta.jaccard(theta.ThetaSketch.from_bytes(x), theta.ThetaSketch.from_bytes(y))[1]
-        for x, y in zip(a, b)])
+    return _theta_pair(theta.jaccard, x, y)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -223,58 +201,39 @@ def theta_jaccard_pair(a: pd.Series, b: pd.Series) -> pd.Series:
 def hll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
                    lg_k: int = HLL_DEFAULT_LG_K,
                    seed: int = DEFAULT_UPDATE_SEED) -> DataFrame:
-    """String columns hash their UTF-8 bytes with the batch murmur3
-    (hll/BaseHllSketch.java:292 update(String) parity); integral
-    columns hash as update(long)."""
-    from ..sketches.murmur3 import hash128_bytes_batch
-    by = by or []
-    is_string = isinstance(df.schema[col].dataType, T.StringType)
-
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if is_string:
-            vals = vals[vals != ""]
-            flat, starts, lengths = _utf8_flat(vals)
-            h1, h2 = hash128_bytes_batch(flat, starts, lengths, seed)
-            return hll.from_hash_pair(h1, h2, lg_k, seed).to_bytes()
-        return hll.sketch_longs(
-            vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        return hll.union_many([hll.HllSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "hll_sketch")
+    """Values hash through the reference's update overloads like the
+    theta agg (hll/BaseHllSketch.java:292-393): integral, floating,
+    STRING (UTF-8 bytes) and BINARY (raw bytes) columns."""
+    return _two_phase(df, by, [col], S.hll(lg_k, seed), "hll_sketch")
 
 
-@F.pandas_udf(T.DoubleType())
-def hll_estimate(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def hll_estimate(b: bytes) -> float:
     """Cardinality estimate from an HLL image column (composite
     estimator, hll/HllSketch.getEstimate counterpart)."""
-    return images.map(lambda b: hll.HllSketch.from_bytes(b).estimate())
+    return hll.HllSketch.from_bytes(b).estimate()
 
 
 def hll_to_java(tgt_type: str = "hll8") -> Callable:
     """Engine image → reference HLL image at the chosen target type
     ('hll4' | 'hll6' | 'hll8'; hll/ToByteArrayImpl counterpart)."""
-    if tgt_type not in ("hll4", "hll6", "hll8"):  # fail at call time,
+    writer = {"hll4": hll_serde.to_java_bytes_hll4,
+              "hll6": hll_serde.to_java_bytes_hll6,
+              "hll8": hll_serde.to_java_bytes}.get(tgt_type)
+    if writer is None:  # fail at call time, not inside a worker
         raise ValueError(f"tgt_type must be hll4/hll6/hll8: {tgt_type}")
 
-    @F.pandas_udf(T.BinaryType())
-    def enc(images: pd.Series) -> pd.Series:
-        from ..sketches import hll_serde
-        writer = {"hll4": hll_serde.to_java_bytes_hll4,
-                  "hll6": hll_serde.to_java_bytes_hll6,
-                  "hll8": hll_serde.to_java_bytes}[tgt_type]
-        return images.map(lambda b: writer(hll.HllSketch.from_bytes(b)))
+    @_image_udf(T.BinaryType())
+    def enc(b: bytes) -> bytes:
+        return writer(hll.HllSketch.from_bytes(b))
     return enc
 
 
-@F.pandas_udf(T.BinaryType())
-def hll_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def hll_from_java(b: bytes) -> bytes:
     """ANY reference HLL image (HLL_4/6/8, LIST/SET modes) → engine
     image (hll/HllSketch.heapify counterpart)."""
-    from ..sketches import hll_serde
-    return images.map(lambda b: hll_serde.from_java_bytes(b).to_bytes())
+    return hll_serde.from_java_bytes(b).to_bytes()
 
 
 # ---------------------------------------------------------------------------
@@ -286,19 +245,7 @@ def kll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
     """groupBy(by).agg(kll_sketch(col)) -> by + kll_sketch:binary —
     two-phase KLL doubles aggregation (kll/KllDoublesSketch update +
     merge split across partial/final)."""
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return KllDoublesSketch.new(k).update_batch(
-            grp[col].dropna().to_numpy().astype(np.float64)).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = KllDoublesSketch.new(k)
-        for b in imgs:
-            out.merge(KllDoublesSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "kll_sketch")
+    return _two_phase(df, by, [col], S.kll(k), "kll_sketch")
 
 
 def kll_items_sketch_agg(df: DataFrame, col: str,
@@ -309,42 +256,27 @@ def kll_items_sketch_agg(df: DataFrame, col: str,
     quantiles/ItemsSketch.java:70 comparator contract) over a long or
     string column — same two-phase update/merge shape as the doubles
     agg."""
-    from ..sketches.kll_items import KllItemsSketch
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if dtype == "long":
-            vals = vals.to_numpy().astype(np.int64)
-        else:
-            vals = vals.to_numpy(dtype=object)
+    def build(values: pa.Array) -> bytes:
+        vals = to_numpy(values.drop_null(), np.int64 if dtype == "long" else object)
         return KllItemsSketch.new(k, dtype).update_batch(vals).to_bytes()
 
-    def merge(imgs: list[bytes]) -> bytes:
-        out = KllItemsSketch.new(k, dtype)
-        for b in imgs:
-            out.merge(KllItemsSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "kll_items_sketch")
+    return _two_phase(df, by, [col], S.Spec(build, lambda imgs: fold(
+        KllItemsSketch.new(k, dtype), KllItemsSketch, imgs)), "kll_items_sketch")
 
 
-@F.pandas_udf(T.BinaryType())
-def kll_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def kll_to_java(b: bytes) -> bytes:
     """Engine KLL-doubles image → reference compact image
     (kll/KllPreambleUtil.java layout)."""
-    from ..sketches import kll_serde
-    return images.map(
-        lambda b: kll_serde.to_java_bytes(KllDoublesSketch.from_bytes(b)))
+    return kll_serde.to_java_bytes(KllDoublesSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def kll_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def kll_from_java(b: bytes) -> bytes:
     """Reference KLL compact image (doubles or floats) → engine image;
     classic-quantiles legacy images route via kll_serde.
     classic_doubles_from_java_bytes."""
-    from ..sketches import kll_serde
-    return images.map(lambda b: kll_serde.from_java_bytes(b).to_bytes())
+    return kll_serde.from_java_bytes(b).to_bytes()
 
 
 def kll_items_to_java(dtype: str = "long") -> Callable:
@@ -353,34 +285,26 @@ def kll_items_to_java(dtype: str = "long") -> Callable:
     ArrayOfLongsSerDe / ArrayOfStringsSerDe; exact-mode states).
     ``dtype`` is checked against the sketch so a wiring mistake fails
     loudly rather than silently encoding the other codec."""
+    from ..sketches.kll_items import _DTYPE_LONG, _DTYPE_STRING
     if dtype not in ("long", "string"):
         raise ValueError(f"dtype must be 'long' or 'string': {dtype}")
+    want = _DTYPE_LONG if dtype == "long" else _DTYPE_STRING
 
-    @F.pandas_udf(T.BinaryType())
-    def enc(images: pd.Series) -> pd.Series:
-        from ..sketches.kll_items import (_DTYPE_LONG, _DTYPE_STRING,
-                                          KllItemsSketch)
-        from ..sketches.kll_serde import classic_items_to_java_bytes
-        want = _DTYPE_LONG if dtype == "long" else _DTYPE_STRING
-
-        def go(b: bytes) -> bytes:
-            sk = KllItemsSketch.from_bytes(b)
-            if sk.dtype_code != want:
-                raise ValueError(
-                    f"kll_items_to_java({dtype!r}) fed a sketch of the "
-                    f"other item type")
-            return classic_items_to_java_bytes(sk)
-        return images.map(go)
+    @_image_udf(T.BinaryType())
+    def enc(b: bytes) -> bytes:
+        sk = KllItemsSketch.from_bytes(b)
+        if sk.dtype_code != want:
+            raise ValueError(f"kll_items_to_java({dtype!r}) fed a sketch "
+                             f"of the other item type")
+        return kll_serde.classic_items_to_java_bytes(sk)
     return enc
 
 
 def kll_items_from_java(dtype: str = "long") -> Callable:
     """Reference classic generic ItemsSketch image → engine image."""
-    @F.pandas_udf(T.BinaryType())
-    def dec(images: pd.Series) -> pd.Series:
-        from ..sketches.kll_serde import classic_items_from_java_bytes
-        return images.map(
-            lambda b: classic_items_from_java_bytes(b, dtype).to_bytes())
+    @_image_udf(T.BinaryType())
+    def dec(b: bytes) -> bytes:
+        return kll_serde.classic_items_from_java_bytes(b, dtype).to_bytes()
     return dec
 
 
@@ -390,70 +314,64 @@ def kll_items_quantiles(ranks: list[float], dtype: str = "long",
     KLL image column of the given dtype ('long' | 'string')."""
     elem = T.LongType() if dtype == "long" else T.StringType()
 
-    @F.pandas_udf(T.ArrayType(elem))
-    def qs(images: pd.Series) -> pd.Series:
-        from ..sketches.kll_items import KllItemsSketch
-        return images.map(
-            lambda b: KllItemsSketch.from_bytes(b).quantiles(ranks, inclusive))
+    @_image_udf(T.ArrayType(elem))
+    def qs(b: bytes) -> list:
+        return KllItemsSketch.from_bytes(b).quantiles(ranks, inclusive)
     return qs
 
 
 def kll_items_rank(value, inclusive: bool = True) -> Callable:
     """Scalar UDF factory: normalized rank of ``value`` from a
     generic-item KLL image column (comparator order)."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        from ..sketches.kll_items import KllItemsSketch
-        return images.map(
-            lambda b: KllItemsSketch.from_bytes(b).rank(value, inclusive))
+    @_image_udf(T.DoubleType())
+    def r(b: bytes) -> float:
+        return KllItemsSketch.from_bytes(b).rank(value, inclusive)
     return r
 
 
 def kll_quantile(rank: float, inclusive: bool = True) -> Callable:
     """Scalar UDF factory: quantile at ``rank`` from a KLL image
     column (kll/KllDoublesSketch.getQuantile counterpart)."""
-    @F.pandas_udf(T.DoubleType())
-    def q(images: pd.Series) -> pd.Series:
-        return images.map(
-            lambda b: KllDoublesSketch.from_bytes(b).quantile(rank, inclusive))
+    @_image_udf(T.DoubleType())
+    def q(b: bytes) -> float:
+        return KllDoublesSketch.from_bytes(b).quantile(rank, inclusive)
     return q
 
 
 def kll_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
     """Scalar UDF factory: array of quantiles at ``ranks`` from a
     KLL image column (one deserialize per row, not per rank)."""
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def qs(images: pd.Series) -> pd.Series:
-        return images.map(
-            lambda b: KllDoublesSketch.from_bytes(b).quantiles(ranks, inclusive))
+    @_image_udf(T.ArrayType(T.DoubleType()))
+    def qs(b: bytes) -> list:
+        return KllDoublesSketch.from_bytes(b).quantiles(ranks, inclusive)
     return qs
 
 
 def kll_rank(value: float) -> Callable:
     """Scalar UDF factory: normalized rank of ``value`` from a KLL
     image column (kll/KllDoublesSketch.getRank counterpart)."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: KllDoublesSketch.from_bytes(b).rank(value))
+    @_image_udf(T.DoubleType())
+    def r(b: bytes) -> float:
+        return KllDoublesSketch.from_bytes(b).rank(value)
     return r
 
 
-@F.pandas_udf(T.LongType())
-def kll_n(images: pd.Series) -> pd.Series:
+@_image_udf(T.LongType())
+def kll_n(b: bytes) -> int:
     """Total update count n recorded in a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).n)
+    return KllDoublesSketch.from_bytes(b).n
 
 
-@F.pandas_udf(T.DoubleType())
-def kll_min(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def kll_min(b: bytes) -> float:
     """Exact stream minimum tracked by a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).min_value)
+    return KllDoublesSketch.from_bytes(b).min_value
 
 
-@F.pandas_udf(T.DoubleType())
-def kll_max(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def kll_max(b: bytes) -> float:
     """Exact stream maximum tracked by a KLL image column."""
-    return images.map(lambda b: KllDoublesSketch.from_bytes(b).max_value)
+    return KllDoublesSketch.from_bytes(b).max_value
 
 
 # ---------------------------------------------------------------------------
@@ -466,56 +384,40 @@ def req_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
     (req/ReqSketch.java:82): HRA mode keeps extreme-tail ranks
     near-exact, the regime KLL's uniform rank error can't serve
     (length/score distribution tails in data pipelines)."""
-    from ..sketches.req import ReqSketch
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return ReqSketch(k, hra).update_batch(
-            grp[col].dropna().to_numpy().astype(np.float64)).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = ReqSketch.from_bytes(imgs[0])
-        for b in imgs[1:]:
-            out.merge(ReqSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "req_sketch")
+    return _two_phase(df, by, [col], S.Spec(
+        lambda v: ReqSketch(k, hra).update_batch(
+            to_numpy(v.drop_null(), np.float64)).to_bytes(),
+        lambda imgs: fold(ReqSketch.from_bytes(imgs[0]), ReqSketch, imgs[1:])),
+        "req_sketch")
 
 
-@F.pandas_udf(T.BinaryType())
-def req_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def req_to_java(b: bytes) -> bytes:
     """Engine REQ image → reference wire format (req/ReqSerDe.java)."""
-    from ..sketches.req import ReqSketch
-    from ..sketches.req_serde import to_java_bytes
-    return images.map(lambda b: to_java_bytes(ReqSketch.from_bytes(b)))
+    return req_serde.to_java_bytes(ReqSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def req_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def req_from_java(b: bytes) -> bytes:
     """Reference REQ wire format → engine image."""
-    from ..sketches.req_serde import from_java_bytes
-    return images.map(lambda b: from_java_bytes(b).to_bytes())
+    return req_serde.from_java_bytes(b).to_bytes()
 
 
 def req_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
     """Scalar UDF factory: quantiles at ``ranks`` from a REQ image
     column (req/ReqSketch.getQuantile counterpart)."""
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def qs(images: pd.Series) -> pd.Series:
-        from ..sketches.req import ReqSketch
-        return images.map(
-            lambda b: ReqSketch.from_bytes(b).quantiles(ranks, inclusive))
+    @_image_udf(T.ArrayType(T.DoubleType()))
+    def qs(b: bytes) -> list:
+        return ReqSketch.from_bytes(b).quantiles(ranks, inclusive)
     return qs
 
 
 def req_rank(value: float, inclusive: bool = True) -> Callable:
     """Scalar UDF factory: normalized rank of ``value`` from a REQ
     image column."""
-    @F.pandas_udf(T.DoubleType())
-    def r(images: pd.Series) -> pd.Series:
-        from ..sketches.req import ReqSketch
-        return images.map(
-            lambda b: ReqSketch.from_bytes(b).rank(value, inclusive))
+    @_image_udf(T.DoubleType())
+    def r(b: bytes) -> float:
+        return ReqSketch.from_bytes(b).rank(value, inclusive)
     return r
 
 
@@ -529,20 +431,8 @@ def freq_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
     """groupBy(by).agg(frequent_items(col[, weight])) -> by +
     freq_sketch:binary — two-phase heavy-hitters aggregation
     (frequencies/ItemsSketch update/merge with median-purge)."""
-    by = by or []
-    value_cols = [col] + ([weight_col] if weight_col else [])
-
-    def build(grp: pd.DataFrame) -> bytes:
-        w = grp[weight_col].to_numpy().astype(np.int64) if weight_col else None
-        return ItemsSketch(max_map_size).update_batch(grp[col].tolist(), w).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = ItemsSketch.from_bytes(imgs[0])
-        for b in imgs[1:]:
-            out.merge(ItemsSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, value_cols, build, merge, "freq_sketch")
+    return _two_phase(df, by, [col] + ([weight_col] if weight_col else []),
+                      S.freq(max_map_size), "freq_sketch")
 
 
 _FREQ_ROW = T.ArrayType(T.StructType([
@@ -553,34 +443,28 @@ _FREQ_ROW = T.ArrayType(T.StructType([
 ]))
 
 
-@F.pandas_udf(T.BinaryType())
-def freq_items_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def freq_items_to_java(b: bytes) -> bytes:
     """Engine frequent-items image → reference string ItemsSketch
     image (frequencies/ItemsSketch.toByteArray:494 with
     ArrayOfStringsSerDe payloads)."""
-    from ..sketches import freq_serde
-    return images.map(
-        lambda b: freq_serde.items_to_java_bytes(ItemsSketch.from_bytes(b)))
+    return freq_serde.items_to_java_bytes(ItemsSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def freq_items_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def freq_items_from_java(b: bytes) -> bytes:
     """Reference string ItemsSketch image → engine image."""
-    from ..sketches import freq_serde
-    return images.map(
-        lambda b: freq_serde.items_from_java_bytes(b).to_bytes())
+    return freq_serde.items_from_java_bytes(b).to_bytes()
 
 
 def freq_items(threshold: int, error_type: str = "NO_FALSE_POSITIVES") -> Callable:
     """Scalar UDF factory: (item, estimate, lb, ub) heavy-hitter rows
     above ``threshold`` from a freq image column, under the chosen
     error regime (NO_FALSE_POSITIVES | NO_FALSE_NEGATIVES)."""
-    @F.pandas_udf(_FREQ_ROW)
-    def items(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: [
-            (str(i), e, lb, ub)
-            for i, e, lb, ub in ItemsSketch.from_bytes(b).frequent_items(
-                threshold, error_type)])
+    @_image_udf(_FREQ_ROW)
+    def items(b: bytes) -> list:
+        return [(str(i), e, lb, ub) for i, e, lb, ub in
+                ItemsSketch.from_bytes(b).frequent_items(threshold, error_type)]
     return items
 
 
@@ -601,39 +485,31 @@ def tuple_sketch_agg(df: DataFrame, key_col: str, value_cols: list[str],
     (IntegerSummary counterpart): integer totals never touch a float,
     so exact-mode sums are order/partition deterministic.
     """
-    from ..sketches import tuple as tpl
-    by = by or []
     np_dtype = np.int64 if values_dtype == "long" else np.float64
 
-    def build(grp: pd.DataFrame) -> bytes:
-        keys = grp[key_col].to_numpy().astype(np.int64)
-        vals = grp[list(value_cols)].to_numpy().astype(np_dtype)
-        return tpl.sketch_keyed_values(
-            keys, vals, lg_k, seed, mode, values_dtype=np_dtype).to_bytes()
+    def build(keys: pa.Array, *values: pa.Array) -> bytes:
+        vals = np.column_stack([to_numpy(v, np_dtype) for v in values])
+        return tpl.sketch_keyed_values(to_numpy(keys, np.int64), vals, lg_k,
+                                       seed, mode, values_dtype=np_dtype).to_bytes()
 
-    def merge(imgs: list[bytes]) -> bytes:
-        return tpl.union_many(
-            [tpl.TupleSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [key_col, *value_cols], build, merge,
-                      "tuple_sketch")
+    return _two_phase(df, by, [key_col, *value_cols], S.Spec(
+        build, lambda imgs: tpl.union_many(
+            [tpl.TupleSketch.from_bytes(b) for b in imgs]).to_bytes()),
+        "tuple_sketch")
 
 
-@F.pandas_udf(T.DoubleType())
-def tuple_estimate(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def tuple_estimate(b: bytes) -> float:
     """Distinct-key estimate from a tuple-sketch image column
     (tuple/Sketch.getEstimate counterpart)."""
-    from ..sketches.tuple import TupleSketch
-    return images.map(lambda b: TupleSketch.from_bytes(b).estimate())
+    return tpl.TupleSketch.from_bytes(b).estimate()
 
 
 def tuple_sum_value(dim: int = 0) -> Callable:
     """Unbiased Σ of summary dimension ``dim`` over all distinct keys."""
-    @F.pandas_udf(T.DoubleType())
-    def s(images: pd.Series) -> pd.Series:
-        from ..sketches.tuple import TupleSketch
-        return images.map(
-            lambda b: float(TupleSketch.from_bytes(b).sum_values()[dim]))
+    @_image_udf(T.DoubleType())
+    def s(b: bytes) -> float:
+        return float(tpl.TupleSketch.from_bytes(b).sum_values()[dim])
     return s
 
 
@@ -642,11 +518,9 @@ def tuple_sum_value_long(dim: int = 0) -> Callable:
     in exact mode the sum is computed in int64 end-to-end (no float
     representation exists anywhere for the value to canonicalize
     differently); estimation-mode results round the unbiased float."""
-    @F.pandas_udf(T.LongType())
-    def s(images: pd.Series) -> pd.Series:
-        from ..sketches.tuple import TupleSketch
-        return images.map(
-            lambda b: int(round(TupleSketch.from_bytes(b).sum_values()[dim])))
+    @_image_udf(T.LongType())
+    def s(b: bytes) -> int:
+        return int(round(tpl.TupleSketch.from_bytes(b).sum_values()[dim]))
     return s
 
 
@@ -654,55 +528,45 @@ def tuple_to_java(summary: str = "int_java") -> Callable:
     """Engine tuple image → reference serVer-3 tuple CompactSketch
     image (tuple/CompactSketch.java:199-249 layout; summary codec
     per sketches/tuple_serde)."""
-    @F.pandas_udf(T.BinaryType())
-    def conv(images: pd.Series) -> pd.Series:
-        from ..sketches import tuple_serde
-        from ..sketches.tuple import TupleSketch
-        return images.map(
-            lambda b: tuple_serde.to_java_bytes(
-                TupleSketch.from_bytes(b), summary))
+    @_image_udf(T.BinaryType())
+    def conv(b: bytes) -> bytes:
+        return tuple_serde.to_java_bytes(tpl.TupleSketch.from_bytes(b), summary)
     return conv
 
 
 def tuple_from_java(summary: str = "int_java") -> Callable:
     """Reference serVer-1/2/3 tuple CompactSketch image → engine image
     (Sketches.heapifySketch counterpart)."""
-    @F.pandas_udf(T.BinaryType())
-    def conv(images: pd.Series) -> pd.Series:
-        from ..sketches import tuple_serde
-        return images.map(
-            lambda b: tuple_serde.from_java_bytes(b, summary).to_bytes())
+    @_image_udf(T.BinaryType())
+    def conv(b: bytes) -> bytes:
+        return tuple_serde.from_java_bytes(b, summary).to_bytes()
     return conv
 
 
-@F.pandas_udf(T.BinaryType())
-def aod_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def aod_to_java(b: bytes) -> bytes:
     """Engine tuple image (float64 values) → reference ArrayOfDoubles
     CompactSketch serVer-1 image."""
-    from ..sketches import tuple_serde
-    from ..sketches.tuple import TupleSketch
-    return images.map(
-        lambda b: tuple_serde.aod_to_java_bytes(TupleSketch.from_bytes(b)))
+    return tuple_serde.aod_to_java_bytes(tpl.TupleSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def aod_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def aod_from_java(b: bytes) -> bytes:
     """Reference ArrayOfDoubles CompactSketch image → engine image."""
-    from ..sketches import tuple_serde
-    return images.map(
-        lambda b: tuple_serde.aod_from_java_bytes(b).to_bytes())
+    return tuple_serde.aod_from_java_bytes(b).to_bytes()
 
 
-@F.pandas_udf(T.DoubleType())
-def tuple_jaccard_pair(a: pd.Series, b: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def tuple_jaccard_pair(x: bytes, y: bytes) -> float:
     """Jaccard estimate of two tuple-sketch images
     (tuple/JaccardSimilarity.java:41)."""
-    from ..sketches import tuple as tpl
-    return pd.Series([
-        tpl.jaccard(tpl.TupleSketch.from_bytes(x),
-                    tpl.TupleSketch.from_bytes(y))[1]
-        for x, y in zip(a, b)])
+    return tpl.jaccard(tpl.TupleSketch.from_bytes(x),
+                       tpl.TupleSketch.from_bytes(y))[1]
 
+
+# ---------------------------------------------------------------------------
+# CPC
+# ---------------------------------------------------------------------------
 
 def cpc_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
                    lg_k: int = 11,
@@ -710,53 +574,32 @@ def cpc_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
     """groupBy(by).agg(cpc_sketch(col)) — the CPC bit-matrix core
     (cpc/CpcSketch.java:64) in the standard two-phase shape; shuffle
     payloads are the engine's sparse-pairs/dense-matrix images.
-    STRING columns hash their UTF-8 bytes with the batch murmur3
-    (update(String), cpc/CpcSketch.java:342), like the theta agg."""
-    from ..sketches import cpc
-    from ..sketches.murmur3 import hash128_bytes_batch
-    by = by or []
-    is_string = isinstance(df.schema[col].dataType, T.StringType)
-
-    def build(grp: pd.DataFrame) -> bytes:
-        vals = grp[col].dropna()
-        if is_string:
-            vals = vals[vals != ""]
-            flat, starts, lengths = _utf8_flat(vals)
-            h0, h1 = hash128_bytes_batch(flat, starts, lengths, seed)
-            return cpc.from_hash_pair(h0, h1, lg_k, seed).to_bytes()
-        return cpc.sketch_longs(
-            vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        return cpc.union_many(
-            [cpc.CpcSketch.from_bytes(b) for b in imgs]).to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "cpc_sketch")
+    Values hash through the reference's update overloads like the
+    theta agg (update(String), cpc/CpcSketch.java:342, and the rest)."""
+    return _two_phase(df, by, [col], S.cpc(lg_k, seed), "cpc_sketch")
 
 
-@F.pandas_udf(T.DoubleType())
-def cpc_estimate(images: pd.Series) -> pd.Series:
+@_image_udf(T.DoubleType())
+def cpc_estimate(b: bytes) -> float:
     """ICON estimate (merge-safe) from a CPC image column."""
-    from ..sketches.cpc import CpcSketch
-    return images.map(lambda b: CpcSketch.from_bytes(b).estimate())
+    return cpc.CpcSketch.from_bytes(b).estimate()
 
 
-@F.pandas_udf(T.BinaryType())
-def cpc_to_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def cpc_to_java(b: bytes) -> bytes:
     """Engine CPC image → reference compressed wire format."""
-    from ..sketches import cpc_serde
-    from ..sketches.cpc import CpcSketch
-    return images.map(
-        lambda b: cpc_serde.to_java_bytes(CpcSketch.from_bytes(b)))
+    return cpc_serde.to_java_bytes(cpc.CpcSketch.from_bytes(b))
 
 
-@F.pandas_udf(T.BinaryType())
-def cpc_from_java(images: pd.Series) -> pd.Series:
+@_image_udf(T.BinaryType())
+def cpc_from_java(b: bytes) -> bytes:
     """Reference compressed CPC image → engine image (heapify)."""
-    from ..sketches import cpc_serde
-    return images.map(
-        lambda b: cpc_serde.from_java_bytes(b).to_bytes())
+    return cpc_serde.from_java_bytes(b).to_bytes()
 
+
+# ---------------------------------------------------------------------------
+# sampling
+# ---------------------------------------------------------------------------
 
 def varopt_sketch_agg(df: DataFrame, item_col: str, weight_col: str,
                       by: list[str] | None = None, k: int = 1024) -> DataFrame:
@@ -764,33 +607,25 @@ def varopt_sketch_agg(df: DataFrame, item_col: str, weight_col: str,
     algorithm, sampling/VarOptItemsSketch.java:72; merge via the
     marked-item union, VarOptItemsUnion.java:205).  The vectorized
     priority_sample_agg remains the batch-optimized alternative."""
-    from ..sketches.varopt import VarOptSketch, VarOptUnion
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        items = grp[item_col].to_numpy().astype(np.int64)
-        weights = grp[weight_col].to_numpy().astype(np.float64)
-        return VarOptSketch(k).update_batch(items, weights).to_bytes()
-
     def merge(imgs: list[bytes]) -> bytes:
         u = VarOptUnion(k)
         for b in imgs:
             u.update(VarOptSketch.from_bytes(b))
         return u.get_result().to_bytes()
 
-    return _two_phase(df, by, [item_col, weight_col], build, merge,
-                      "varopt_sketch")
+    return _two_phase(df, by, [item_col, weight_col], S.Spec(
+        lambda items, w: VarOptSketch(k).update_batch(
+            to_numpy(items, np.int64), to_numpy(w, np.float64)).to_bytes(),
+        merge), "varopt_sketch")
 
 
 def varopt_true_subset_sum(predicate) -> Callable:
     """Unbiased subset-sum estimate from a TRUE VarOpt image
     (VarOptItemsSketch.estimateSubsetSum:636)."""
-    @F.pandas_udf(T.DoubleType())
-    def s(images: pd.Series) -> pd.Series:
-        from ..sketches.varopt import VarOptSketch
-        return images.map(
-            lambda b: VarOptSketch.from_bytes(b)
-            .estimate_subset_sum(lambda it: predicate(it))["estimate"])
+    @_image_udf(T.DoubleType())
+    def s(b: bytes) -> float:
+        return VarOptSketch.from_bytes(b).estimate_subset_sum(
+            lambda it: predicate(it))["estimate"]
     return s
 
 
@@ -807,27 +642,15 @@ def fdt_topk(df: DataFrame, primary_cols: list[str], rest_col: str,
             .limit(k))
 
 
-# ---------------------------------------------------------------------------
-# sampling
-# ---------------------------------------------------------------------------
-
 def reservoir_agg(df: DataFrame, col: str, by: list[str] | None = None,
                   k: int = 1024) -> DataFrame:
     """groupBy(by).agg(reservoir_sample_k(col)) -> by +
     reservoir_sketch:binary — two-phase uniform fixed-k sampling with
     weighted-coin union (sampling/ReservoirItemsUnion)."""
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return ReservoirSketch(k).update_batch(grp[col].tolist()).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = ReservoirSketch.from_bytes(imgs[0])
-        for b in imgs[1:]:
-            out.merge(ReservoirSketch.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [col], build, merge, "reservoir_sketch")
+    return _two_phase(df, by, [col], S.Spec(
+        lambda v: ReservoirSketch(k).update_batch(v.to_pylist()).to_bytes(),
+        lambda imgs: fold(ReservoirSketch.from_bytes(imgs[0]), ReservoirSketch,
+                          imgs[1:])), "reservoir_sketch")
 
 
 def priority_sample_agg(df: DataFrame, item_col: str, weight_col: str,
@@ -836,40 +659,30 @@ def priority_sample_agg(df: DataFrame, item_col: str, weight_col: str,
     varopt_sketch:binary — the vectorized priority-sampling scale
     path for VarOpt-style weighted subset sums (Duffield et al.;
     exact heavy/light VarOpt is varopt_sketch_agg)."""
-    by = by or []
-
-    def build(grp: pd.DataFrame) -> bytes:
-        return PrioritySample(k).update_batch(
-            grp[item_col].to_numpy().astype(np.int64),
-            grp[weight_col].to_numpy().astype(np.float64)).to_bytes()
-
-    def merge(imgs: list[bytes]) -> bytes:
-        out = PrioritySample.from_bytes(imgs[0])
-        for b in imgs[1:]:
-            out.merge(PrioritySample.from_bytes(b))
-        return out.to_bytes()
-
-    return _two_phase(df, by, [item_col, weight_col], build, merge, "varopt_sketch")
+    return _two_phase(df, by, [item_col, weight_col], S.Spec(
+        lambda items, w: PrioritySample(k).update_batch(
+            to_numpy(items, np.int64), to_numpy(w, np.float64)).to_bytes(),
+        lambda imgs: fold(PrioritySample.from_bytes(imgs[0]), PrioritySample,
+                          imgs[1:])), "varopt_sketch")
 
 
-@F.pandas_udf(T.LongType())
-def reservoir_n(images: pd.Series) -> pd.Series:
+@_image_udf(T.LongType())
+def reservoir_n(b: bytes) -> int:
     """Stream length n recorded in a reservoir image column."""
-    return images.map(lambda b: ReservoirSketch.from_bytes(b).n)
+    return ReservoirSketch.from_bytes(b).n
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def reservoir_samples_long(images: pd.Series) -> pd.Series:
+@_image_udf(T.ArrayType(T.LongType()))
+def reservoir_samples_long(b: bytes) -> list:
     """Sorted long samples of a reservoir image."""
-    return images.map(lambda b: sorted(
-        int(x) for x in ReservoirSketch.from_bytes(b).samples))
+    return sorted(int(x) for x in ReservoirSketch.from_bytes(b).samples)
 
 
 def varopt_subset_sum(predicate: Callable) -> Callable:
     """UDF factory: unbiased Σweight over items matching ``predicate``
     (sampling/VarOptItemsSketch.java:636 estimateSubsetSum)."""
-    @F.pandas_udf(T.DoubleType())
-    def subset_sum(images: pd.Series) -> pd.Series:
-        return images.map(lambda b: PrioritySample.from_bytes(b)
-                          .estimate_subset_sum(predicate)["estimate"])
+    @_image_udf(T.DoubleType())
+    def subset_sum(b: bytes) -> float:
+        return PrioritySample.from_bytes(b).estimate_subset_sum(
+            predicate)["estimate"]
     return subset_sum

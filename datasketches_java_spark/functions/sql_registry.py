@@ -13,10 +13,23 @@ the Spark engine the same entry point::
                     AS BIGINT) AS distinct_customers
         FROM customer GROUP BY c_nationkey ORDER BY c_nationkey''')
 
+TYPED DISPATCH — the aggregates are built from the same family specs
+as the DataFrame aggs (``functions/sketch_spec``) and registered as
+Arrow GROUPED_AGG UDFs, so each receives its column as a ``pa.Array``
+of the declared SQL type and hashes it through the reference's
+``update`` overloads: integral → long, floating → canonical double
+bits, STRING → UTF-8 bytes, BINARY → raw bytes; NULLs and empty
+strings/bytes are skipped, any other type raises ``TypeError``.  A SQL
+build and a DataFrame build of the same values give the same bytes.
+Spark refuses one Aggregate that mixes Arrow and pandas GROUPED_AGG
+UDFs ("All aggregate functions must have the same eval type"), so the
+registry aggregates cannot share one ``GROUP BY`` with pandas
+GROUPED_AGG UDFs; compute those in a separate aggregate and join.
+
 SCALE BOUNDARY — read before using the *_build aggregates at 100 TB:
 Spark cannot express partial aggregation for Python UDAFs, so a
-registered GROUPED_AGG pandas UDF ships RAW VALUES to the reducer
-(``AggregateInPandasExec`` has no map-side combine).  Results are
+registered GROUPED_AGG UDF ships RAW VALUES to the reducer
+(``ArrowAggregatePythonExec`` has no map-side combine).  Results are
 identical at any scale, but shuffle volume is O(rows), not the
 O(groups x partitions x sketch_size) of the DataFrame-API two-phase
 aggs in ``functions/sketch_aggs.py`` — those remain the scale path
@@ -24,11 +37,13 @@ for BUILDING sketches.  Two SQL patterns carry no such penalty:
 
 - QUERYING sketch images (``theta_sketch_estimate``, ``kll_sketch_
   quantile``, the pairwise set ops): scalar Arrow-batched UDFs over
-  already-built sketch columns.
+  already-built sketch columns.  Every one returns NULL for a NULL
+  image.
 - MERGING sketch images (``theta_sketch_union``, ``hll_sketch_union``,
   ...): the input rows are already bounded-size partials (e.g. from a
   checkpoint or a two-phase build), so the raw-value shuffle IS the
-  sketch-image shuffle.
+  sketch-image shuffle.  NULL images are skipped; an all-NULL group
+  gives the empty sketch.
 
 Function names follow the reference's Hive adaptor convention
 (``<family>_sketch_<verb>``) so a user migrating SQL text recognizes
@@ -37,9 +52,7 @@ the surface.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, types as T
 
 from ..config import (
     DEFAULT_LG_K,
@@ -48,50 +61,29 @@ from ..config import (
     HLL_DEFAULT_LG_K,
     KLL_DEFAULT_K,
 )
-from ..sketches import cpc, hll, theta
 from ..sketches.frequencies import ItemsSketch
 from ..sketches.kll import KllDoublesSketch
-from . import sketch_aggs as A
-from .sketch_aggs import _utf8_flat
+from . import sketch_aggs as A, sketch_spec as S
+from .sketch_aggs import _image_udf
 
 
-def _kind(vals: pd.Series) -> str:
-    """'binary' | 'string' | 'long' from the values actually present
-    (SQL registration has no declared input type to dispatch on)."""
-    if vals.dtype == object or pd.api.types.is_string_dtype(vals):
-        for v in vals:
-            return "binary" if isinstance(v, (bytes, bytearray)) else "string"
-        return "string"
-    return "long"
+@_image_udf(T.DoubleType())
+def _kll_sketch_quantile(b: bytes, rank: float) -> float:
+    return KllDoublesSketch.from_bytes(b).quantile(float(rank))
 
 
-def _theta_build(vals: pd.Series, lg_k: int, seed: int) -> bytes:
-    from ..sketches.murmur3 import theta_hash_bytes_batch
-    vals = vals.dropna()
-    kind = _kind(vals)
-    if kind != "long":
-        # empty strings/bytes rejected (UpdateSketch.java:255,271),
-        # matching theta_sketch_agg so SQL-built sketches stay
-        # hash-equal to DataFrame/reference sketches of the same items
-        vals = vals[vals.map(len) > 0]
-        flat, starts, lengths = _utf8_flat(vals, binary=kind == "binary")
-        uh = theta_hash_bytes_batch(flat, starts, lengths, seed)
-        return theta.from_update_hashes(uh, lg_k, seed).to_bytes()
-    return theta.sketch_longs(
-        vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
+@_image_udf(T.DoubleType())
+def _kll_sketch_rank(b: bytes, x: float) -> float:
+    return KllDoublesSketch.from_bytes(b).rank(float(x))
 
 
-def _hll_build(vals: pd.Series, lg_k: int, seed: int) -> bytes:
-    from ..sketches.murmur3 import hash128_bytes_batch
-    vals = vals.dropna()
-    kind = _kind(vals)
-    if kind != "long":
-        vals = vals[vals.map(len) > 0]
-        flat, starts, lengths = _utf8_flat(vals, binary=kind == "binary")
-        h1, h2 = hash128_bytes_batch(flat, starts, lengths, seed)
-        return hll.from_hash_pair(h1, h2, lg_k, seed).to_bytes()
-    return hll.sketch_longs(
-        vals.to_numpy().astype(np.int64), lg_k, seed).to_bytes()
+@_image_udf(T.ArrayType(T.StructType([
+    T.StructField("item", T.StringType()),
+    T.StructField("estimate", T.LongType())])))
+def _frequent_strings_sketch_result(b: bytes, threshold: int) -> list:
+    return [(it, int(est)) for it, est, _, _ in
+            ItemsSketch.from_bytes(b).frequent_items(
+                threshold=int(threshold), error_type="NO_FALSE_POSITIVES")]
 
 
 def register_sql_functions(spark: SparkSession,
@@ -104,85 +96,20 @@ def register_sql_functions(spark: SparkSession,
     registered names.  Config (lg_k, k, seed) binds at registration —
     one registry per config, matching the Hive adaptor model where the
     UDAF instance owns its parameters."""
-
-    # -- aggregates (GROUPED_AGG; see module docstring scale note) ----
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def theta_sketch_build(v: pd.Series) -> bytes:
-        return _theta_build(v, lg_k, seed)
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def theta_sketch_union(imgs: pd.Series) -> bytes:
-        sks = [theta.ThetaSketch.from_bytes(b) for b in imgs.dropna()]
-        if not sks:   # all-NULL group (e.g. outer-join side) -> empty
-            return theta.from_update_hashes(
-                np.empty(0, dtype=np.uint64), lg_k, seed).to_bytes()
-        return theta.union_many(sks).to_bytes()
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def hll_sketch_build(v: pd.Series) -> bytes:
-        return _hll_build(v, hll_lg_k, seed)
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def hll_sketch_union(imgs: pd.Series) -> bytes:
-        sks = [hll.HllSketch.from_bytes(b) for b in imgs.dropna()]
-        if not sks:
-            return hll.sketch_longs(
-                np.empty(0, dtype=np.int64), hll_lg_k, seed).to_bytes()
-        return hll.union_many(sks).to_bytes()
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def cpc_sketch_build(v: pd.Series) -> bytes:
-        return cpc.sketch_longs(
-            v.dropna().to_numpy().astype(np.int64), seed=seed).to_bytes()
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def kll_sketch_build(v: pd.Series) -> bytes:
-        return KllDoublesSketch.new(kll_k).update_batch(
-            v.dropna().to_numpy().astype(np.float64)).to_bytes()
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def kll_sketch_merge(imgs: pd.Series) -> bytes:
-        out = KllDoublesSketch.new(kll_k)
-        for b in imgs.dropna():
-            out.merge(KllDoublesSketch.from_bytes(b))
-        return out.to_bytes()
-
-    @F.pandas_udf(T.BinaryType(), F.PandasUDFType.GROUPED_AGG)
-    def frequent_strings_sketch_build(v: pd.Series) -> bytes:
-        return ItemsSketch(freq_map_size).update_batch(
-            v.dropna().tolist()).to_bytes()
-
-    # -- scalars: parameterized query functions (image, arg) ----------
-    @F.pandas_udf(T.DoubleType())
-    def kll_sketch_quantile(imgs: pd.Series, rank: pd.Series) -> pd.Series:
-        return pd.Series([
-            KllDoublesSketch.from_bytes(b).quantile(float(r))
-            for b, r in zip(imgs, rank)])
-
-    @F.pandas_udf(T.DoubleType())
-    def kll_sketch_rank(imgs: pd.Series, x: pd.Series) -> pd.Series:
-        return pd.Series([
-            KllDoublesSketch.from_bytes(b).rank(float(v))
-            for b, v in zip(imgs, x)])
-
-    @F.pandas_udf(T.DoubleType())
-    def cpc_sketch_estimate(imgs: pd.Series) -> pd.Series:
-        return imgs.map(lambda b: cpc.CpcSketch.from_bytes(b).estimate())
-
-    @F.pandas_udf(T.ArrayType(T.StructType([
-        T.StructField("item", T.StringType()),
-        T.StructField("estimate", T.LongType())])))
-    def frequent_strings_sketch_result(imgs: pd.Series,
-                                       threshold: pd.Series) -> pd.Series:
-        return pd.Series([
-            [(it, int(est)) for it, est, _, _ in
-             ItemsSketch.from_bytes(b).frequent_items(
-                 threshold=int(t), error_type="NO_FALSE_POSITIVES")]
-            for b, t in zip(imgs, threshold)])
-
-    fns = {
-        "theta_sketch_build": theta_sketch_build,
-        "theta_sketch_union": theta_sketch_union,
+    theta, hll = S.theta(lg_k, seed), S.hll(hll_lg_k, seed)
+    kll = S.kll(kll_k)
+    aggregates = {
+        "theta_sketch_build": theta.build,
+        "theta_sketch_union": theta.union,
+        "hll_sketch_build": hll.build,
+        "hll_sketch_union": hll.union,
+        "cpc_sketch_build": S.cpc(seed=seed).build,
+        "kll_sketch_build": kll.build,
+        "kll_sketch_merge": kll.union,
+        "frequent_strings_sketch_build": S.freq(freq_map_size).build,
+    }
+    fns = {name: S.aggregate(fn, name) for name, fn in aggregates.items()}
+    fns.update({
         "theta_sketch_estimate": A.theta_estimate,
         "theta_sketch_lower_bound": A.theta_lower_bound,
         "theta_sketch_upper_bound": A.theta_upper_bound,
@@ -192,21 +119,15 @@ def register_sql_functions(spark: SparkSession,
         "theta_sketch_jaccard": A.theta_jaccard_pair,
         "theta_sketch_to_java": A.theta_to_java,
         "theta_sketch_from_java": A.theta_from_java,
-        "hll_sketch_build": hll_sketch_build,
-        "hll_sketch_union": hll_sketch_union,
         "hll_sketch_estimate": A.hll_estimate,
-        "cpc_sketch_build": cpc_sketch_build,
-        "cpc_sketch_estimate": cpc_sketch_estimate,
-        "kll_sketch_build": kll_sketch_build,
-        "kll_sketch_merge": kll_sketch_merge,
-        "kll_sketch_quantile": kll_sketch_quantile,
-        "kll_sketch_rank": kll_sketch_rank,
+        "cpc_sketch_estimate": A.cpc_estimate,
+        "kll_sketch_quantile": _kll_sketch_quantile,
+        "kll_sketch_rank": _kll_sketch_rank,
         "kll_sketch_n": A.kll_n,
         "kll_sketch_min": A.kll_min,
         "kll_sketch_max": A.kll_max,
-        "frequent_strings_sketch_build": frequent_strings_sketch_build,
-        "frequent_strings_sketch_result": frequent_strings_sketch_result,
-    }
+        "frequent_strings_sketch_result": _frequent_strings_sketch_result,
+    })
     for name, fn in fns.items():
         spark.udf.register(name, fn)
     return sorted(fns)

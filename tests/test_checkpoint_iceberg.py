@@ -22,43 +22,42 @@ from __future__ import annotations
 import pytest
 
 
-def _iceberg_spark():
-    from pyspark.sql import SparkSession
-    return (SparkSession.builder.master("local[2]")
-            .appName("iceberg_ckpt_test")
-            .config("spark.sql.catalog.local",
-                    "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.local.type", "hadoop")
-            .config("spark.sql.catalog.local.warehouse",
-                    "/tmp/iceberg_ckpt_warehouse")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate())
+CATALOG = {"spark.sql.catalog.local": "org.apache.iceberg.spark.SparkCatalog",
+           "spark.sql.catalog.local.type": "hadoop",
+           "spark.sql.catalog.local.warehouse": "/tmp/iceberg_ckpt_warehouse"}
 
 
-def test_iceberg_checkpoint_roundtrip():
+@pytest.fixture
+def iceberg_spark(spark):
+    """A child of the shared session with the Iceberg catalog set at
+    runtime, so the test never stops the context other tests use."""
+    child = spark.newSession()
+    for key, value in CATALOG.items():
+        child.conf.set(key, value)
+    return child
+
+
+def test_iceberg_checkpoint_roundtrip(iceberg_spark):
     from datasketches_java_spark.operators.checkpoint import CheckpointStore
-    spark = _iceberg_spark()
+    spark = iceberg_spark
+    store = CheckpointStore(spark, "local.ckpt_test", fmt="iceberg")
     try:
-        store = CheckpointStore(spark, "local.ckpt_test", fmt="iceberg")
-        try:
-            df = store.run_stage(
-                "s01",
-                lambda: spark.range(100).withColumnRenamed("id", "doc_id"),
-                lineage_col="doc_id")
-        except Exception as e:  # no Iceberg runtime in this sandbox
-            msg = str(e)
-            if ("iceberg" in msg.lower() or "ClassNotFound" in msg
-                    or "Cannot find catalog plugin" in msg
-                    or "DATA_SOURCE_NOT_FOUND" in msg):
-                pytest.skip(f"Iceberg runtime not available: {msg[:120]}")
-            raise
-        # full round-trip (runs only where the jar exists)
-        assert df.count() == 100
-        assert store.is_complete("s01")
-        again = store.run_stage("s01", lambda: (_ for _ in ()).throw(
-            AssertionError("resume must not rebuild")))
-        assert again.count() == 100
-        m = store.metrics("s01")
-        assert m.agg({"rows": "sum"}).collect()[0][0] == 100
-    finally:
-        spark.stop()
+        df = store.run_stage(
+            "s01",
+            lambda: spark.range(100).withColumnRenamed("id", "doc_id"),
+            lineage_col="doc_id")
+    except Exception as e:  # no Iceberg runtime in this sandbox
+        msg = str(e)
+        if ("iceberg" in msg.lower() or "ClassNotFound" in msg
+                or "Cannot find catalog plugin" in msg
+                or "DATA_SOURCE_NOT_FOUND" in msg):
+            pytest.skip(f"Iceberg runtime not available: {msg[:120]}")
+        raise
+    # full round-trip (runs only where the jar exists)
+    assert df.count() == 100
+    assert store.is_complete("s01")
+    again = store.run_stage("s01", lambda: (_ for _ in ()).throw(
+        AssertionError("resume must not rebuild")))
+    assert again.count() == 100
+    m = store.metrics("s01")
+    assert m.agg({"rows": "sum"}).collect()[0][0] == 100

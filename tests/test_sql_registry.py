@@ -114,7 +114,7 @@ def test_frequent_strings_roundtrip(sql):
 
 def test_registry_returns_names(spark):
     names = register_sql_functions(spark)
-    assert "theta_sketch_build" in names and len(names) >= 20
+    assert "theta_sketch_build" in names and len(names) == 25
 
 
 def test_union_aggs_survive_all_null_groups(sql, spark):
@@ -141,3 +141,35 @@ def test_theta_build_on_binary_column(sql, spark):
         SELECT CAST(theta_sketch_estimate(theta_sketch_build(blob))
                     AS BIGINT) d FROM blobs""").collect()[0]["d"]
     assert est == 5   # 5 distinct non-empty payloads, b'' rejected
+
+
+IMAGE_SCALARS = [
+    "theta_sketch_estimate(sk)", "theta_sketch_lower_bound(sk)",
+    "theta_sketch_upper_bound(sk)", "theta_sketch_union_pair(sk, sk)",
+    "theta_sketch_intersect(sk, sk)", "theta_sketch_a_not_b(sk, sk)",
+    "theta_sketch_jaccard(sk, sk)", "theta_sketch_to_java(sk)",
+    "theta_sketch_from_java(sk)", "hll_sketch_estimate(sk)",
+    "cpc_sketch_estimate(sk)", "kll_sketch_quantile(sk, 0.5)",
+    "kll_sketch_rank(sk, 1.0)", "kll_sketch_n(sk)", "kll_sketch_min(sk)",
+    "kll_sketch_max(sk)", "frequent_strings_sketch_result(sk, 0)"]
+
+
+def test_scalars_return_null_for_null_images(sql, spark):
+    """A NULL image (outer-join side, empty group) gives NULL from every
+    scalar that reads an image, not an error in the Python worker."""
+    spark.createDataFrame([(None,)] * 3, "sk binary") \
+        .createOrReplaceTempView("null_images")
+    rows = sql(f"SELECT {', '.join(IMAGE_SCALARS)} FROM null_images").collect()
+    assert len(rows) == 3
+    assert all(v is None for r in rows for v in r), rows
+
+
+def test_null_images_beside_valid_ones(sql):
+    rows = sql("""
+        SELECT kll_sketch_quantile(sk, 0.5) q, kll_sketch_n(sk) n
+        FROM (SELECT kll_sketch_build(c_acctbal) sk FROM customer
+              UNION ALL SELECT CAST(NULL AS BINARY) sk)""").collect()
+    exact_n = sql("SELECT COUNT(c_acctbal) FROM customer").collect()[0][0]
+    got = {r["n"]: r["q"] for r in rows}
+    assert set(got) == {exact_n, None}
+    assert got[None] is None and got[exact_n] is not None
