@@ -238,12 +238,10 @@ def _q_long_dup_substrings(spark: SparkSession, sf: str) -> DataFrame:
     exists, verifiable by enumerating stride-1 substrings in DuckDB),
     so this query IS oracle-checked; the exact lcs_len value — not
     SQL-expressible — is covered by the naive-oracle unit tests."""
-    from datasketches_java_spark.operators.lsh import lsh_dup_pairs
-    from datasketches_java_spark.operators.suffix_array import (
-        attach_texts, pair_lcs)
+    from datasketches_java_spark.plans.dedup import dedup_pipeline
     docs = _read(spark, sf, "documents")
-    pairs = lsh_dup_pairs(docs, id_col="doc_id", text_col="text")
-    out = pair_lcs(attach_texts(pairs.select("id_a", "id_b"), docs, "doc_id"))
+    out = dedup_pipeline(spark, docs, id_col="doc_id", text_col="text",
+                         with_lcs=True).dup_pairs
     return (out.select(F.col("id_a").alias("doc_a"),
                        F.col("id_b").alias("doc_b"),
                        "long_dup")
@@ -541,30 +539,20 @@ def _q_exact_dedup_documents(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _q_lsh_dup_pairs_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH near-dup pairs with integer-exact Jaccard micros
-    (``_integer_jaccard_pairs``)."""
-    from datasketches_java_spark.operators.lsh import (
-        add_signatures, band_buckets, candidate_pairs, pair_overlaps)
+    """The dedup plan's verified near-dup pairs, with integer-exact
+    Jaccard micros (``_integer_jaccard_pairs``)."""
+    from datasketches_java_spark.plans.dedup import dedup_pipeline
     docs = _read(spark, sf, "documents")
-    # lazy localCheckpoint, not persist(): computes once for the three
-    # consumers below, and the blocks are released by the ContextCleaner
-    # when this DataFrame is GC'd — a harness running all queries in one
-    # session doesn't accumulate cached signature blocks.  text is
-    # dropped first so the checkpoint stores only what downstream reads
-    # (id + shingles + minhash), not the full documents.
-    sig = (add_signatures(docs.select("doc_id", "text"), "text")
-           .select("doc_id", "shingles", "minhash")
-           .localCheckpoint(eager=False))
-    pairs = candidate_pairs(band_buckets(sig, "doc_id"), "doc_id")
-    return _integer_jaccard_pairs(pair_overlaps(pairs, sig, "doc_id"))
+    return _integer_jaccard_pairs(
+        dedup_pipeline(spark, docs, id_col="doc_id", text_col="text").dup_pairs)
 
 
-def _integer_jaccard_pairs(overlaps: DataFrame) -> DataFrame:
-    """(id_a, id_b, i, u) → (doc_a, doc_b, jaccard_micros) for pairs at
-    Jaccard ≥ 0.8, in integer arithmetic: the threshold is
-    5·|∩| ≥ 4·|∪| and the micros are div(|∩|·10^6, |∪|), so boundary
-    pairs agree with the oracle bit-for-bit."""
-    return (overlaps.where(F.col("i") * 5 >= F.col("u") * 4)
+def _integer_jaccard_pairs(verified: DataFrame) -> DataFrame:
+    """Verified (id_a, id_b, i, u) → (doc_a, doc_b, jaccard_micros):
+    div(|∩|·10^6, |∪|) in integer arithmetic, so the micros agree with
+    the oracle bit-for-bit.  verify_pairs' threshold keeps exactly the
+    oracle's 5·|∩| ≥ 4·|∪| pairs."""
+    return (verified
             .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
                     F.expr("div(i * 1000000, u)").alias("jaccard_micros"))
             .orderBy("doc_a", "doc_b"))
@@ -625,16 +613,17 @@ def _q_simhash_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_simhash_containment.py, which also independently recomputes
     the Hamming distances the driver no longer sees)."""
     from datasketches_java_spark.operators.lsh import (
-        add_signatures, pair_overlaps, simhash_hamming_pairs)
+        add_signatures, simhash_hamming_pairs, verify_pairs)
     docs = _read(spark, sf, "documents")
-    # lazy localCheckpoint for the same cache-lifetime hygiene as
-    # _q_lsh_dup_pairs_documents (blocks GC'd with the DataFrame),
-    # text/minhash dropped before materialization.
+    # lazy localCheckpoint, not persist(): computed once for both band
+    # join sides and verify, blocks released with the DataFrame (no
+    # CacheManager entries across a long session); text/minhash dropped
+    # before materialization.
     sig = (add_signatures(docs.select("doc_id", "text"), "text")
            .select("doc_id", "shingles", "simhash")
            .localCheckpoint(eager=False))
     pairs = simhash_hamming_pairs(sig, "doc_id", max_hamming=12)
-    return _integer_jaccard_pairs(pair_overlaps(pairs, sig, "doc_id"))
+    return _integer_jaccard_pairs(verify_pairs(pairs, sig, "doc_id"))
 
 
 def _q_winnow_fingerprints_documents(spark: SparkSession, sf: str) -> DataFrame:

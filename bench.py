@@ -3,13 +3,13 @@
 Default mode: runs the headline end-to-end dedup pipeline
 (signature + LSH + cluster) on a deterministic webtext fixture plus a
 set of representative operator queries at $SPARK_GRAFT_SF_DIR, on
-local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS, else nproc], and prints ONE JSON line:
 
   {"metric": "docs/sec (signature+LSH+cluster end-to-end)",
    "value": <docs/sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 `--scaling` mode: reruns the identical pipeline job at two parallelism
-levels (local[8] vs local[32]) on the same input — the sandbox
+levels (local[4] vs local[16] by default) on the same input — the sandbox
 evidence for the north rule's N→4N executor scaling-efficiency ≥ 0.8
 criterion (no real cluster here; see BENCH.md).
 """
@@ -25,7 +25,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
 FIXTURE_DIR = os.path.join(REPO, ".cache", f"webtext_bench_{BENCH_DOCS}")
 
@@ -65,7 +64,6 @@ def run_pipeline(spark) -> tuple[float, int, dict]:
     warm = dedup_pipeline(spark, pages.limit(4000), id_col="url",
                           text_col="text")
     warm.clusters.count()
-    warm.unpersist()
     reps = int(os.environ.get("SPARK_GRAFT_PIPE_REPS", "2"))
     best = None
     stats = {}
@@ -75,7 +73,6 @@ def run_pipeline(spark) -> tuple[float, int, dict]:
         n_pairs = res.dup_pairs.count()
         n_clustered = res.clusters.filter("url != cluster_id").count()
         wall = time.time() - t0
-        res.unpersist()
         if best is None or wall < best:
             best = wall
             stats = {"dup_pairs": n_pairs, "clustered_docs": n_clustered}
@@ -106,12 +103,13 @@ def run_queries(spark) -> dict[str, float]:
     return out
 
 
-def _spark(cores: int):
-    from datasketches_java_spark.functions.session import get_spark
+def _spark(cores: int | None = None):
+    from datasketches_java_spark.functions.session import (
+        default_cores, get_spark)
+    cores = cores or default_cores()
     return get_spark("bench", cores=cores,
                      shuffle_partitions=max(cores * 2, 16),
-                     driver_memory=os.environ.get(
-                         "SPARK_GRAFT_DRIVER_MEM", "48g"))
+                     driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
 
 
 def main() -> None:
@@ -184,7 +182,7 @@ def main() -> None:
             "runs": rows, "n_docs": BENCH_DOCS}))
         return
 
-    spark = _spark(CPUS)
+    spark = _spark()
     wall, n_docs, stats = run_pipeline(spark)
     queries = run_queries(spark)
     spark.stop()

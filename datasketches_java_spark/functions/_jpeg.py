@@ -3,8 +3,8 @@
 Decoder: baseline sequential DCT (SOF0), Huffman entropy coding,
 grayscale or YCbCr with any of the common sampling factors
 (4:4:4 / 4:2:2 / 4:2:0), DRI/RSTn restart markers.  Progressive
-(SOF2), arithmetic coding, and 12-bit precision are rejected with a
-clean ValueError — they are the remaining genuine external-decoder
+(SOF2), arithmetic coding, 12-bit precision and 4-component
+(CMYK/YCCK) frames are rejected with a clean ValueError — they are the remaining genuine external-decoder
 seam (functions/multimodal.py routes them to the documented
 NotImplementedError).
 
@@ -235,6 +235,11 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 raise ValueError("only 8-bit JPEG precision supported")
             h, w = struct.unpack_from(">HH", seg, 1)
             nc = seg[5]
+            if nc not in (1, 3):
+                raise ValueError(
+                    f"unsupported JPEG with {nc} components (CMYK/YCCK); "
+                    f"only grayscale and YCbCr baseline are pure-numpy "
+                    f"decodable")
             comps = []
             for c in range(nc):
                 cid, samp, tq = seg[6 + 3 * c:9 + 3 * c]

@@ -12,18 +12,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on
+    (the scheduler affinity mask, what ``nproc`` reports)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "datasketches_java_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
-              driver_memory: str = "48g",
+              driver_memory: str | None = None,
               master: str | None = None,
               executor_memory: str | None = None) -> SparkSession:
     """`master` overrides the default local[cores] — used by the
     scaling bench's local-cluster[N, cores, mem] mode (separate
     executor JVMs + real shuffle transport, the closest in-sandbox
     analogue to multi-executor scaling).  local-cluster needs
-    SPARK_HOME pointing at the pyspark distribution."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    SPARK_HOME pointing at the pyspark distribution.  ``cores`` defaults
+    to ``default_cores()``, ``driver_memory`` to a quarter of physical
+    RAM clamped to 1-8 GiB (local mode runs every task in the driver's
+    heap, and the machine may be shared)."""
+    cores = cores or default_cores()
+    if driver_memory is None:
+        mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        driver_memory = f"{min(max(mem_mb // 4, 1024), 8192)}m"
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     executor_pythonpath = None
     if master is None:

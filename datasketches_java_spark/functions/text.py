@@ -80,7 +80,7 @@ def exact_jaccard(inter: Column, uni: Column) -> Column:
     """Exact Jaccard |A∩B| / |A∪B| from the two set sizes, 1.0 for two
     empty sets (verification join; counterpart of
     theta/JaccardSimilarity.java:55 exact mode).  The sizes come from
-    operators/lsh.pair_overlaps, which evaluates one ``array_union``
+    operators/lsh.verify_pairs, which evaluates one ``array_union``
     per pair."""
     return F.when(uni > 0, inter.cast("double") / uni.cast("double")).otherwise(F.lit(1.0))
 

@@ -9,8 +9,10 @@ format-agnostic — `CheckpointStore(fmt="iceberg")` switches to
 Design:
   - A stage checkpoint is `{root}/{stage}/data` plus
     `{root}/{stage}/metrics` (one row per output partition:
-    partition_id, rows, min/max of the lineage key, wall-clock ms and
-    a KLL length-sketch image for drift checks between epochs).
+    partition_id, rows, min/max of the lineage key as strings, the
+    stage name and the stage's wall-clock ms).  Drift between epochs
+    is checked separately, on a KLL image of the input
+    (scripts/submit_dedup.py).
   - `run_stage(name, build)` = memoized execution: if the stage
     directory exists with Spark's _SUCCESS marker, read it back
     instead of recomputing — resume-mid-run is therefore "rerun the

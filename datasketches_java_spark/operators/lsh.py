@@ -20,12 +20,14 @@ Scale design (100 TB / 10^12 docs):
     salted by doc hash, so that even a pathological band hash
     distributes across ``n_salts`` tasks instead of one window sort.
   - Pair dedup across the 32 bands is a map-side-combinable distinct.
-  - The verification join re-attaches shingle arrays by id and
-    evaluates ONE ``array_union`` per pair (``pair_overlaps``); the
+  - The verification join (``verify_pairs``) re-attaches shingle
+    arrays by id and evaluates ONE ``array_union`` per pair; the
     intersection size follows as |A|+|B|−|A∪B|, exact because shingle
-    arrays are distinct.  Exact Jaccard is their ratio — JVM-side,
-    codegen (counterpart of theta/JaccardSimilarity.java:55 exact
-    mode).
+    arrays are distinct.  It emits both sizes beside the exact Jaccard,
+    their ratio — JVM-side, codegen (counterpart of
+    theta/JaccardSimilarity.java:55 exact mode).
+
+The stages are composed once, in plans/dedup.dedup_pipeline.
 """
 
 from __future__ import annotations
@@ -258,11 +260,15 @@ def hot_buckets(buckets: DataFrame, min_size: int = LSH_BUCKET_CAP) -> DataFrame
             .filter(F.col("bucket_size") > min_size))
 
 
-def pair_overlaps(pairs: DataFrame, shingled: DataFrame, id_col: str,
-                  shingle_col: str = "shingles") -> DataFrame:
-    """Pairs (id_a, id_b) → (id_a, id_b, i, u): the exact sizes, as
-    longs, of the intersection and the union of the two ids' shingle
-    sets.
+def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
+                 shingle_col: str = "shingles",
+                 threshold: float = DUP_JACCARD_THRESHOLD) -> DataFrame:
+    """Exact-Jaccard verification join: pairs (id_a, id_b) → rows with
+    jaccard ≥ threshold.  Output: id_a, id_b, jaccard, i, u — ``i`` and
+    ``u`` are the exact sizes, as longs, of the intersection and the
+    union of the two ids' shingle sets, and jaccard is the double
+    quotient i / u.  For u < 2^52 the double test i / u ≥ 0.8 keeps
+    exactly the pairs with 5·i ≥ 4·u.
 
     The shingle arrays must hold distinct elements, as shingle_hashes
     builds them; then |A∩B| = |A| + |B| − |A∪B|, and one
@@ -294,29 +300,7 @@ def pair_overlaps(pairs: DataFrame, shingled: DataFrame, id_col: str,
         (F.size("sh_a").cast("long") + F.size("sh_b").cast("long")).alias("_ab"))
     uni = F.size(F.array_union("sh_a", "sh_b")).cast("long")
     return (sizes.select("id_a", "id_b", "_ab", F.explode(F.array(uni)).alias("u"))
-            .select("id_a", "id_b", (F.col("_ab") - F.col("u")).alias("i"), "u"))
-
-
-def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
-                 shingle_col: str = "shingles",
-                 threshold: float = DUP_JACCARD_THRESHOLD) -> DataFrame:
-    """Exact-Jaccard verification join: (id_a, id_b) → rows with
-    jaccard ≥ threshold.  Output: id_a, id_b, jaccard.  The join and the
-    set sizes are ``pair_overlaps``; jaccard is the double quotient
-    i / u."""
-    return (pair_overlaps(pairs, shingled, id_col, shingle_col)
+            .select("id_a", "id_b", (F.col("_ab") - F.col("u")).alias("i"), "u")
             .withColumn("jaccard", exact_jaccard(F.col("i"), F.col("u")))
             .filter(F.col("jaccard") >= F.lit(threshold))
-            .select("id_a", "id_b", "jaccard"))
-
-
-def lsh_dup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
-                  threshold: float = DUP_JACCARD_THRESHOLD,
-                  bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """End-to-end near-dup pair detection: signatures → bands →
-    candidates → verified (id_a, id_b, jaccard)."""
-    sig = add_signatures(df.select(id_col, text_col), text_col) \
-        .localCheckpoint(eager=False)
-    buckets = band_buckets(sig, id_col)
-    pairs = candidate_pairs(buckets, id_col, bucket_cap)
-    return verify_pairs(pairs, sig, id_col, threshold=threshold)
+            .select("id_a", "id_b", "jaccard", "i", "u"))

@@ -6,10 +6,12 @@ candidate explode → exact-Jaccard verification → connected components
 (operators/checkpoint.py) and skew/cardinality metrics from the sketch
 UDAF library.
 
-Every stage is a DataFrame transformation; the only Python in the hot
-path is the two Arrow-batched signature UDFs.  On a cluster this file
-is the spark-submit job (see bench.py / scripts) — the plan object is
-deliberately stateless so the same code runs at any parallelism.
+This is the one composition of those stages: scripts/submit_dedup.py
+(the spark-submit job), bench.py and the entry point's LSH queries
+all call ``dedup_pipeline``.  Every stage is a DataFrame
+transformation; the only Python in the hot path is the two
+Arrow-batched signature UDFs, and the plan object is stateless so the
+same code runs at any parallelism.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DUP_JACCARD_THRESHOLD, LSH_BUCKET_CAP
 from ..operators.checkpoint import CheckpointStore
-from ..operators.connected_components import assign_clusters, connected_components
+from ..operators.connected_components import connected_components
 from ..operators.lsh import (
     add_signatures,
     band_buckets,
@@ -33,20 +35,10 @@ from ..operators.suffix_array import attach_texts, pair_lcs
 
 @dataclass
 class DedupResult:
-    signatures: DataFrame     # id, shingles, minhash, simhash
-    dup_pairs: DataFrame      # id_a, id_b, jaccard
+    signatures: DataFrame     # id, shingles, minhash, simhash, _sid
+    dup_pairs: DataFrame      # id_a, id_b, jaccard, i, u
     clusters: DataFrame       # id, cluster_id
     hot_buckets: DataFrame    # band, band_hash, bucket_size
-
-    def unpersist(self) -> None:
-        """Release every cached stage (long-lived sessions running many
-        pipelines would otherwise accumulate CacheManager entries)."""
-        for df in (self.signatures, self.dup_pairs, self.clusters,
-                   self.hot_buckets):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
 
 
 def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
@@ -69,34 +61,33 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
     def stage(name: str, build, lineage: str | None = None) -> DataFrame:
         if store:
             return store.run_stage(name, build, lineage_col=lineage)
-        # no durable checkpoint: persist so multi-consumer stages
-        # (signatures feed both banding and verification) are computed
-        # once — without this every downstream action recomputes the
-        # whole upstream chain
-        return build().persist()
+        # no durable checkpoint: a lazy local checkpoint computes each
+        # multi-consumer stage once (signatures feed banding,
+        # verification and the id map), and its blocks are released
+        # with the DataFrame instead of staying in the CacheManager
+        return build().localCheckpoint(eager=False)
 
-    # Dense int64 surrogate key for string ids (urls): every banding /
-    # candidate / verification / clustering shuffle carries 8-byte sids
-    # instead of ~45-char url strings (~5x less shuffle payload on the
-    # dominant 32x band explode).  The sid is minted INSIDE the
-    # persisted/checkpointed signature stage, so it is stable for the
-    # run and resumable; urls are re-attached only to the final small
-    # outputs (verified pairs, clusters).
-    id_is_string = dict(pages.dtypes).get(id_col) == "string"
-    key = "_sid" if id_is_string else id_col
+    # Every stage after the signatures is keyed on ``_sid``, minted
+    # INSIDE the signature stage so it is stable for the run and
+    # resumable.  For string ids (urls) it is an int64 surrogate: the
+    # banding / candidate / verification / clustering shuffles carry
+    # 8 bytes instead of ~45-char urls (~5x less payload on the 32x
+    # band explode).  Any other id is its own ``_sid``, which keeps
+    # candidate_pairs' window order and so every capped bucket's
+    # candidates.  Ids are re-attached only to the small outputs.
+    sid = (F.monotonically_increasing_id()
+           if dict(pages.dtypes).get(id_col) == "string" else F.col(id_col))
 
-    def build_signatures() -> DataFrame:
-        s = add_signatures(pages.select(id_col, text_col), text_col) \
-            .drop(text_col)  # text is dead weight downstream of shingling
-        if id_is_string:
-            s = s.withColumn(key, F.monotonically_increasing_id())
-        return s
-
-    sig = stage("01_signatures", build_signatures, lineage=id_col)
-    ids = sig.select(key, id_col) if id_is_string else None
+    sig = stage(
+        "01_signatures",
+        # text is dead weight downstream of shingling
+        lambda: add_signatures(pages.select(id_col, text_col), text_col)
+        .drop(text_col).withColumn("_sid", sid),
+        lineage=id_col)
+    ids = sig.select("_sid", id_col)
 
     buckets = stage(
-        "02_band_buckets", lambda: band_buckets(sig, key), lineage=key)
+        "02_band_buckets", lambda: band_buckets(sig, "_sid"), lineage="_sid")
 
     hot = stage(
         "03_hot_buckets",
@@ -104,26 +95,25 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
 
     pairs = stage(
         "04_candidate_pairs",
-        lambda: candidate_pairs(buckets, key, bucket_cap), lineage="id_a")
+        lambda: candidate_pairs(buckets, "_sid", bucket_cap), lineage="id_a")
 
-    # verified pairs stay in sid space (the persisted/checkpointed
-    # artifact); urls are re-attached lazily on top — two equi-joins on
-    # the small O(dups) pair table, never on the banded stream
     verified = stage(
         "05_verified_pairs",
-        lambda: verify_pairs(pairs, sig, key, threshold=threshold),
+        lambda: verify_pairs(pairs, sig, "_sid", threshold=threshold),
         lineage="id_a")
 
-    if id_is_string:
-        dup_pairs = (verified
-                     .join(ids.withColumnsRenamed({key: "id_a", id_col: "_ua"}),
-                           on="id_a")
-                     .join(ids.withColumnsRenamed({key: "id_b", id_col: "_ub"}),
-                           on="id_b")
-                     .select(F.least("_ua", "_ub").alias("id_a"),
-                             F.greatest("_ua", "_ub").alias("id_b"), "jaccard"))
-    else:
-        dup_pairs = verified
+    # ids re-attached with two equi-joins on the small O(dups) pair
+    # table; the verified stage's other columns pass through, so a
+    # stage written before verify emitted i and u still resumes
+    dup_pairs = (verified
+                 .join(ids.withColumnsRenamed({"_sid": "id_a", id_col: "_ua"}),
+                       on="id_a")
+                 .join(ids.withColumnsRenamed({"_sid": "id_b", id_col: "_ub"}),
+                       on="id_b")
+                 .select(F.least("_ua", "_ub").alias("id_a"),
+                         F.greatest("_ua", "_ub").alias("id_b"),
+                         *[c for c in verified.columns
+                           if c not in ("id_a", "id_b")]))
 
     if with_lcs:
         dup_pairs = stage(
@@ -132,19 +122,12 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
             lineage="id_a")
 
     def build_clusters() -> DataFrame:
-        if not id_is_string:
-            return assign_clusters(
-                pages.select(id_col), verified.select("id_a", "id_b"), id_col)
-        # CC runs on int64 sid edges; cluster_id = min member url,
-        # recomputed in url space on the (small) component table so the
-        # output contract (deterministic min-id cluster labels) is
-        # unchanged
-        comp = connected_components(verified.select("id_a", "id_b"))
-        comp_urls = (comp.join(ids.withColumnsRenamed({key: "id"}), on="id")
-                     .select(F.col(id_col), F.col("component")))
-        cmin = (comp_urls.groupBy("component")
-                .agg(F.min(id_col).alias("cluster_id")))
-        members = comp_urls.join(cmin, on="component").select(id_col, "cluster_id")
+        # CC runs on sid edges; cluster_id = min member id,
+        # recomputed in id space on the (small) component table
+        comp = (connected_components(verified.select("id_a", "id_b"))
+                .withColumnRenamed("id", "_sid").join(ids, on="_sid"))
+        cmin = comp.groupBy("component").agg(F.min(id_col).alias("cluster_id"))
+        members = comp.join(cmin, on="component").select(id_col, "cluster_id")
         return (pages.select(id_col).join(members, on=id_col, how="left")
                 .withColumn("cluster_id",
                             F.coalesce("cluster_id", F.col(id_col))))

@@ -5,6 +5,10 @@ Runs every ``queries()[name]`` at a given SF and compares with
 an order-insensitive value hash (columns sorted by name, rows sorted).
 
 Usage: python scripts/verify_queries.py [sf_dir] [only_query_substr]
+
+The last line printed is the verdict on a line of its own: ``ok M/N``
+with M the hash matches among the N queries run, or ``FAIL k/N: name,
+...`` naming the failed queries (exit status 1).
 """
 
 from __future__ import annotations
@@ -51,8 +55,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from datasketches_java_spark.functions.session import get_spark
 
-    spark = get_spark("verify_queries", cores=8, shuffle_partitions=8,
-                      driver_memory="16g")
+    spark = get_spark("verify_queries", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -60,10 +63,10 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    failures = 0
-    for name, fn in qs.items():
-        if only and only not in name:
-            continue
+    names = [name for name in qs if only in name]
+    failures, matched = [], 0
+    for name in names:
+        fn = qs[name]
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
@@ -71,7 +74,7 @@ def main() -> int:
             rows = [tuple(r) for r in df.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
-            failures += 1
+            failures.append(name)
             continue
         wall = time.time() - t0
         if name not in oracles:
@@ -83,7 +86,7 @@ def main() -> int:
             orows = res.fetchall()
         except Exception as e:
             print(f"FAIL  {name}: oracle error {e}")
-            failures += 1
+            failures.append(name)
             continue
         problems = []
         if len(rows) != len(orows):
@@ -98,11 +101,18 @@ def main() -> int:
             problems.append(f"first diffs: {diffs}")
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)} ({wall:.1f}s)")
-            failures += 1
+            failures.append(name)
         else:
             print(f"ok    {name}: rows={len(rows)} hash match ({wall:.1f}s)")
+            matched += 1
     spark.stop()
-    return 1 if failures else 0
+    # own line: Spark's console progress bars end without a newline
+    sys.stderr.flush()
+    if failures:
+        print(f"\nFAIL {len(failures)}/{len(names)}: {', '.join(failures)}")
+        return 1
+    print(f"\nok {matched}/{len(names)}")
+    return 0
 
 
 if __name__ == "__main__":

@@ -14,6 +14,6 @@ SF_SMALL = "/root/testdata/sf0.01"
 def spark():
     from datasketches_java_spark.functions.session import get_spark
 
-    s = get_spark("tests", cores=8, shuffle_partitions=8, driver_memory="16g")
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -3,6 +3,9 @@ byte-identity, connected components, suffix-array LCS, resume."""
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -97,6 +100,29 @@ def test_pipeline_checkpoint_resume(spark, pages, tmp_path):
     m = store.all_metrics()
     assert {"partition_id", "rows", "stage", "wall_ms"} <= set(m.columns)
     assert m.select("stage").distinct().count() >= 5
+
+
+def test_resume_from_frozen_checkpoint(spark, tmp_path):
+    """tests/golden/dedup_ckpt is a checkpoint tree written by an
+    earlier version of the plan (60 generate_webtext pages, seed 7, url
+    ids; its verified stage has no i/u columns).  Resuming from it must
+    recompute nothing and give the pairs and clusters of a fresh run."""
+    golden = Path(__file__).parent / "golden" / "dedup_ckpt"
+    ckpt = tmp_path / "ckpt"
+    shutil.copytree(golden, ckpt)
+    t = generate_webtext(60, seed=7)
+    pages = spark.createDataFrame(t["pages"]).select("url", "text")
+
+    def outputs(res):
+        return (sorted(res.dup_pairs.select("id_a", "id_b", "jaccard").collect()),
+                sorted(res.clusters.collect()))
+
+    resumed = outputs(dedup_pipeline(spark, pages, checkpoint_dir=str(ckpt)))
+    assert resumed == outputs(dedup_pipeline(spark, pages))
+    assert len(resumed[0]) == 46
+    assert sum(r.url != r.cluster_id for r in resumed[1]) == 17
+    assert sorted(p.name for p in ckpt.iterdir()) == \
+        sorted(p.name for p in golden.iterdir())
 
 
 def test_connected_components_basic(spark):

@@ -160,6 +160,22 @@ def _patch_sof(buf: bytes, patch) -> bytes:
     raise AssertionError("no SOF0")
 
 
+def test_cmyk_rejected_cleanly():
+    """A 4-component (Adobe CMYK/YCCK) frame header raises right after
+    SOF, not later while decoding the first three planes as YCbCr."""
+    import struct as s
+    comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3, 4))
+    sof = bytes([8]) + s.pack(">HH", 8, 8) + bytes([4]) + comps
+    sos = bytes([4]) + b"".join(bytes([cid, 0]) for cid in (1, 2, 3, 4)) \
+        + bytes([0, 63, 0])
+    buf = (b"\xFF\xD8"
+           + b"\xFF\xC0" + s.pack(">H", len(sof) + 2) + sof
+           + b"\xFF\xDA" + s.pack(">H", len(sos) + 2) + sos
+           + b"\x00" * 16 + b"\xFF\xD9")
+    with pytest.raises(ValueError, match="4 components"):
+        decode_jpeg(buf)
+
+
 def test_nonpow2_sampling_rejected_cleanly():
     img = np.zeros((16, 16, 3), dtype=np.uint8)
 

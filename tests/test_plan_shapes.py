@@ -18,6 +18,24 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _query_plans(spark, qname: str, sf: str, monkeypatch) -> str:
+    """The physical plans a driver query runs: its own, and the plan of
+    every stage it local-checkpoints on the way (a checkpointed stage
+    shows up in the final plan only as ``Scan ExistingRDD``)."""
+    import __spark_entry__ as entry
+    DataFrame = type(spark.range(1))   # the session's concrete class
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(_physical_plan(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    plans.append(_physical_plan(entry.queries()[qname](spark, sf)))
+    return "\n".join(plans)
+
+
 @pytest.mark.parametrize("qname", [
     "simhash_near_pairs",
     "ngram_jaccard_pairs",
@@ -27,10 +45,8 @@ def _physical_plan(df) -> str:
     "ann_cosine_topk_ivf",
     "lsh_dup_pairs_documents",
 ])
-def test_no_cartesian_product(spark, qname):
-    import __spark_entry__ as entry
-    df = entry.queries()[qname](spark, "/root/testdata/sf0.001")
-    plan = _physical_plan(df)
+def test_no_cartesian_product(spark, qname, monkeypatch):
+    plan = _query_plans(spark, qname, SF_TINY, monkeypatch)
     assert "CartesianProduct" not in plan, f"{qname} regressed to a cartesian"
 
 
@@ -64,11 +80,10 @@ def test_verify_evaluates_one_union_per_pair(spark):
 
 @pytest.mark.parametrize("qname", ["lsh_dup_pairs_documents",
                                    "simhash_near_pairs"])
-def test_pair_queries_evaluate_one_union(spark, qname):
+def test_pair_queries_evaluate_one_union(spark, qname, monkeypatch):
     """The entry point's integer-Jaccard pair queries share verify's set
-    sizes."""
-    import __spark_entry__ as entry
-    plan = _physical_plan(entry.queries()[qname](spark, SF_TINY))
+    sizes: one union per pair across every plan the query runs."""
+    plan = _query_plans(spark, qname, SF_TINY, monkeypatch)
     assert plan.count("array_union(") == 1, plan
     assert "array_intersect(" not in plan, plan
 

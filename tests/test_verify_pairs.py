@@ -25,9 +25,14 @@ SETS = {
 PAIRS = [(1, 2), (3, 4), (5, 6), (7, 8), (7, 9), (10, 11), (1, 10)]
 
 
-def _python_jaccard(a: int, b: int) -> float:
+def _python_sizes(a: int, b: int) -> tuple[int, int]:
     sa, sb = set(SETS[a]), set(SETS[b])
-    return len(sa & sb) / len(sa | sb)
+    return len(sa & sb), len(sa | sb)
+
+
+def _python_jaccard(a: int, b: int) -> float:
+    i, u = _python_sizes(a, b)
+    return i / u
 
 
 @pytest.mark.parametrize("threshold", [DUP_JACCARD_THRESHOLD, 0.0])
@@ -35,10 +40,16 @@ def test_verify_pairs_matches_python_sets(spark, threshold):
     shingled = spark.createDataFrame(
         sorted(SETS.items()), "id long, shingles array<long>")
     pairs = spark.createDataFrame(PAIRS, "id_a long, id_b long")
-    got = {(r.id_a, r.id_b): r.jaccard for r in
-           verify_pairs(pairs, shingled, "id", threshold=threshold).collect()}
+    rows = verify_pairs(pairs, shingled, "id", threshold=threshold).collect()
+    got = {(r.id_a, r.id_b): r.jaccard for r in rows}
     want = {p: _python_jaccard(*p) for p in PAIRS
             if _python_jaccard(*p) >= threshold}
     assert got == want      # float ==: the quotients must be bit-identical
+    # the exact set sizes ride along with the quotient
+    assert {(r.id_a, r.id_b): (r.i, r.u) for r in rows} == \
+        {p: _python_sizes(*p) for p in want}
     if threshold == DUP_JACCARD_THRESHOLD:
         assert set(got) == {(1, 2), (5, 6), (7, 8)}
+        # the double threshold keeps exactly the integer 5·i ≥ 4·u pairs
+        assert set(got) == {p for p in PAIRS
+                            if 5 * _python_sizes(*p)[0] >= 4 * _python_sizes(*p)[1]}
