@@ -1,17 +1,12 @@
 """Benchmark entry point (driver contract).
 
-Default mode: runs the headline end-to-end dedup pipeline
-(signature + LSH + cluster) on a deterministic webtext fixture plus a
-set of representative operator queries at $SPARK_GRAFT_SF_DIR, on
+Runs the headline end-to-end dedup pipeline (signature + LSH +
+cluster) on a deterministic webtext fixture plus a set of
+representative operator queries at $SPARK_GRAFT_SF_DIR, on
 local[$SPARK_GRAFT_CPUS, else nproc], and prints ONE JSON line:
 
   {"metric": "docs/sec (signature+LSH+cluster end-to-end)",
-   "value": <docs/sec>, "unit": "sec", "queries": {...}, "sf": ...}
-
-`--scaling` mode: reruns the identical pipeline job at two parallelism
-levels (local[4] vs local[16] by default) on the same input — the sandbox
-evidence for the north rule's N→4N executor scaling-efficiency ≥ 0.8
-criterion (no real cluster here; see BENCH.md).
+   "value": <docs/sec>, "unit": "docs/sec", "queries": {...}, "sf": ...}
 """
 
 from __future__ import annotations
@@ -103,85 +98,16 @@ def run_queries(spark) -> dict[str, float]:
     return out
 
 
-def _spark(cores: int | None = None):
+def _spark():
     from datasketches_java_spark.functions.session import (
         default_cores, get_spark)
-    cores = cores or default_cores()
+    cores = default_cores()
     return get_spark("bench", cores=cores,
                      shuffle_partitions=max(cores * 2, 16),
                      driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
 
 
 def main() -> None:
-    if "--scaling-cluster" in sys.argv:
-        # N -> 4N EXECUTOR scaling on Spark's local-cluster mode:
-        # separate executor JVMs + real shuffle transport — the closest
-        # in-sandbox analogue to the north rule's multi-executor
-        # criterion (local[N] thread mode shares one JVM heap and no
-        # network path).  1 executor x 4 cores vs 4 executors x 4
-        # cores on the 32-core box (the 4-exec level uses 16 of 32
-        # cores so executor JVM + Python worker pairs don't
-        # oversubscribe; see BENCH.md).
-        from datasketches_java_spark.functions.session import get_spark
-        os.environ.setdefault("SPARK_GRAFT_PIPE_REPS", "1")  # outer reps
-        lo = int(os.environ.get("SPARK_GRAFT_CLUSTER_LO", "1"))
-        hi = int(os.environ.get("SPARK_GRAFT_CLUSTER_HI", str(lo * 4)))
-        cores_per = int(os.environ.get("SPARK_GRAFT_CLUSTER_CORES", "4"))
-        mem = os.environ.get("SPARK_GRAFT_CLUSTER_MEM", "8192")
-        reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-        rows = []
-        for n_exec in (lo, hi):
-            best = None
-            for _ in range(reps):
-                spark = get_spark(
-                    "bench-cluster",
-                    master=f"local-cluster[{n_exec},{cores_per},{mem}]",
-                    shuffle_partitions=max(n_exec * cores_per * 2, 16),
-                    executor_memory=f"{mem}m")
-                wall, n_docs, _ = run_pipeline(spark)
-                spark.stop()
-                if best is None or wall < best:
-                    best = wall
-            rows.append({"executors": n_exec, "cores_per_executor": cores_per,
-                         "wall_s": round(best, 2),
-                         "docs_per_sec": round(n_docs / best, 1)})
-        eff = rows[1]["docs_per_sec"] / rows[0]["docs_per_sec"] / (hi / lo)
-        print(json.dumps({
-            "metric": (f"executor scaling efficiency local-cluster "
-                       f"{lo}x{cores_per} -> {hi}x{cores_per}"),
-            "value": round(eff, 3), "unit": "ratio",
-            "runs": rows, "n_docs": BENCH_DOCS}))
-        return
-
-    if "--scaling" in sys.argv:
-        # N → 4N evidence (north rule).  4 vs 16 cores on the 32-core
-        # sandbox: each Spark task slot pairs a JVM thread with a
-        # Python worker process, so local[32] would oversubscribe the
-        # box and measure the machine, not the job.  Best-of-2 per
-        # level because the sandbox shows multi-percent CPU steal
-        # bursts (see BENCH.md).
-        os.environ.setdefault("SPARK_GRAFT_PIPE_REPS", "1")  # outer reps
-        lo = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "4"))
-        hi = int(os.environ.get("SPARK_GRAFT_SCALE_HI", str(lo * 4)))
-        reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-        rows = []
-        for cores in (lo, hi):
-            best = None
-            for _ in range(reps):
-                spark = _spark(cores)
-                wall, n_docs, _ = run_pipeline(spark)
-                spark.stop()
-                if best is None or wall < best:
-                    best = wall
-            rows.append({"cores": cores, "wall_s": round(best, 2),
-                         "docs_per_sec": round(n_docs / best, 1)})
-        eff = rows[1]["docs_per_sec"] / rows[0]["docs_per_sec"] / (hi / lo)
-        print(json.dumps({
-            "metric": f"scaling efficiency local[{lo}]->local[{hi}]",
-            "value": round(eff, 3), "unit": "ratio",
-            "runs": rows, "n_docs": BENCH_DOCS}))
-        return
-
     spark = _spark()
     wall, n_docs, stats = run_pipeline(spark)
     queries = run_queries(spark)

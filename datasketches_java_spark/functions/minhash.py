@@ -26,7 +26,6 @@ from ..config import MINHASH_PERMS, MINHASH_SEED, SIMHASH_BITS
 from ..sketches.murmur3 import hash128_u64_pair
 
 _EMPTY_SIG = np.uint64(0xFFFFFFFFFFFFFFFF)
-_PERM_CHUNK = 32
 
 
 def _permutation_params(n_perms: int = MINHASH_PERMS,

@@ -1,8 +1,8 @@
 """SparkSession factory with the engine's scale-aware defaults.
 
-Local mode is for correctness tests and the two-parallelism-level
-scaling bench; the same config block is what we'd ship in
-spark-submit --py-files on a real cluster (AQE, skew join, Arrow).
+Local mode is for tests, the benchmarks and sandbox runs; the same
+config block is what we'd ship in spark-submit --py-files on a real
+cluster (AQE, skew join, Arrow).
 """
 
 from __future__ import annotations
@@ -25,11 +25,11 @@ def get_spark(app_name: str = "datasketches_java_spark",
               driver_memory: str | None = None,
               master: str | None = None,
               executor_memory: str | None = None) -> SparkSession:
-    """`master` overrides the default local[cores] — used by the
-    scaling bench's local-cluster[N, cores, mem] mode (separate
-    executor JVMs + real shuffle transport, the closest in-sandbox
-    analogue to multi-executor scaling).  local-cluster needs
-    SPARK_HOME pointing at the pyspark distribution.  ``cores`` defaults
+    """`master` overrides the default local[cores], e.g. with
+    local-cluster[N, cores, mem] (separate executor JVMs + real shuffle
+    transport), for which SPARK_HOME is pointed at the pyspark
+    distribution and the repo is put on the executors' PYTHONPATH
+    (what --py-files provides on a real cluster).  ``cores`` defaults
     to ``default_cores()``, ``driver_memory`` to a quarter of physical
     RAM clamped to 1-8 GiB (local mode runs every task in the driver's
     heap, and the machine may be shared)."""

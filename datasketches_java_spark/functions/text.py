@@ -161,12 +161,6 @@ def lang_guess(text: Column | str) -> Column:
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def doc_fingerprint(text: Column | str) -> Column:
-    """64-bit document fingerprint: xxhash64 of the normalized token
-    stream (rolling-hash counterpart; exact-dup key)."""
-    return F.xxhash64(F.concat_ws(" ", tokens(text)))
-
-
 def text_sha256(text: Column | str) -> Column:
     """Byte-identity invariant column (BASELINE.json input_hint:
     byte-identical extracted text per url)."""

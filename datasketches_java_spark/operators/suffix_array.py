@@ -90,13 +90,6 @@ def _lcp_from_levels(sa: np.ndarray, levels: list) -> np.ndarray:
     return lcp
 
 
-def lcp_array(s: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """lcp[i] = longest common prefix of suffixes sa[i], sa[i-1]
-    (Kasai-array contract; computed vectorized from doubling levels)."""
-    _, levels = _prefix_doubling(np.asarray(s))
-    return _lcp_from_levels(np.asarray(sa), levels)
-
-
 def longest_common_substring(a: bytes, b: bytes) -> int:
     """Length of the longest substring shared by two byte strings —
     suffix array over a#b with a cross-document LCP scan."""

@@ -245,10 +245,6 @@ def approximate_upper_bound_on_p(n: int, k: int, num_stdevs: float) -> float:
     return 1.0 - x
 
 
-def estimate_unknown_p(n: int, k: int) -> float:
-    return 0.5 if n == 0 else k / n
-
-
 # ---------------------------------------------------------------------------
 # BoundsOnRatiosInSampledSets (|B|/|A| under Bernoulli sampling)
 # ---------------------------------------------------------------------------

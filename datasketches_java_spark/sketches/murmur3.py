@@ -203,15 +203,6 @@ def hash128_bytes_batch(flat: np.ndarray, starts: np.ndarray,
     return h1, h2
 
 
-def theta_hash_bytes_batch(flat: np.ndarray, starts: np.ndarray,
-                           lengths: np.ndarray, seed: int) -> np.ndarray:
-    """Batch sketch-update hashes of UTF-8/byte strings:
-    murmur3(bytes)[0] >>> 1 (theta/UpdateSketch.java:260) — the
-    reference-parity string path for theta/HLL aggregation."""
-    h1, _ = hash128_bytes_batch(flat, starts, lengths, seed)
-    return h1 >> np.uint64(1)
-
-
 # ---------------------------------------------------------------------------
 # scalar bytes path (parity with hash(byte[], seed), hash/MurmurHash3.java:259)
 # ---------------------------------------------------------------------------

@@ -34,7 +34,6 @@ _SER_VER = 1
 _HDR = struct.Struct("<BBBBHHQIHBx")
 _MODES = {"Sum": 0, "Min": 1, "Max": 2, "AlwaysOne": 3}
 _MODES_INV = {v: k for k, v in _MODES.items()}
-_DTYPES = {0: np.float64, 1: np.int64}
 _DTYPE_CODES = {np.dtype(np.float64): 0, np.dtype(np.int64): 1}
 _DTYPE_FMT = {0: "<f8", 1: "<i8"}
 
@@ -263,16 +262,3 @@ def dissimilarity_test(a, b, threshold: float) -> bool:
     (tuple/JaccardSimilarity.java:170 analogue)."""
     _, _, ub = jaccard(a, b)
     return ub <= threshold
-
-
-def fdt_estimate(keys_primary, keys_rest, lg_k: int = DEFAULT_LG_K,
-                 seed: int = DEFAULT_UPDATE_SEED):
-    """Frequent-distinct-tuples core idea (fdt/FdtSketch.java:49):
-    per primary-key group, a distinct-count of the remaining dims.
-    In Spark this is a pure groupBy composition (SURVEY.md §2.7);
-    this helper exists for parity tests only."""
-    from collections import defaultdict
-    groups = defaultdict(set)
-    for p, r in zip(keys_primary, keys_rest):
-        groups[p].add(r)
-    return {p: len(s) for p, s in groups.items()}

@@ -77,7 +77,6 @@ from .theta_serde import _lg_k_for_count
 from .tuple import TupleSketch, _MODES_INV
 
 _FAMILY_TUPLE = 9
-_TYPE_QS = 0
 _TYPE_COMPACT = 1
 _TYPE_AOD_QS = 2
 _TYPE_AOD_COMPACT = 3

@@ -35,8 +35,6 @@ import pickle
 
 import numpy as np
 
-_EMPTY = object()
-
 
 class VarOptSketch:
     """Variance-optimal weighted sample of at most k items."""

@@ -3,17 +3,19 @@
 The reference's "streaming" is single-pass update (SURVEY.md §2.11 —
 no time semantics); in Spark that maps to two shapes, both here:
 
-1. **Batch-incremental** (production shape for WARC crawls): new
-   partitions are processed as a delta — anti-join against the
-   checkpointed id set, signatures computed only for new docs, sketch
-   state merged via sketch-column union (the update/merge algebra is
-   exactly what makes this correct: union(state, sketch(delta)) ==
-   sketch(all)).
+1. **Batch-incremental** (production shape for WARC crawls):
+   `delta_new_docs` finds the rows not yet processed (anti-join against
+   the checkpointed id set) and `incremental_theta_state` merges a
+   batch's sketches into the stored state via sketch-column union (the
+   update/merge algebra is exactly what makes this correct:
+   union(state, sketch(delta)) == sketch(all)).
 2. **Structured Streaming**: `incremental_sketch_stream` wires the
    same two-phase sketch aggregation into a streaming query with
    watermarked event-time windows via foreachBatch — each micro-batch
    unions its partial sketches into a parquet state table; the merge
    algebra makes micro-batch boundaries invisible.
+   `stateful_theta_distinct` keeps the sketch itself as per-key
+   streaming state.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.sketch_aggs import theta_sketch_agg, theta_union_agg
-from ..operators.lsh import add_signatures
 
 
 def delta_new_docs(all_pages: DataFrame, processed_ids: DataFrame,
@@ -32,23 +33,6 @@ def delta_new_docs(all_pages: DataFrame, processed_ids: DataFrame,
     checkpointed id set — SURVEY.md §7.8)."""
     return all_pages.join(processed_ids.select(id_col), on=id_col,
                           how="left_anti")
-
-
-def incremental_signatures(spark: SparkSession, pages: DataFrame,
-                           state_dir: str, id_col: str = "url",
-                           text_col: str = "text") -> DataFrame:
-    """Signature table maintained incrementally: compute only the
-    delta, append, return the full table."""
-    path = os.path.join(state_dir, "signatures")
-    have = os.path.exists(os.path.join(path, "_SUCCESS"))
-    if have:
-        state = spark.read.parquet(path)
-        delta = delta_new_docs(pages, state, id_col)
-    else:
-        state, delta = None, pages
-    sig = add_signatures(delta.select(id_col, text_col), text_col)
-    sig.write.mode("append").parquet(path)
-    return spark.read.parquet(path)
 
 
 def incremental_theta_state(spark: SparkSession, batch: DataFrame,
@@ -159,13 +143,20 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
     Structured Streaming state — the sketch IS the state, bounded at
     O(k) bytes per key regardless of stream length, and the union
     algebra makes results independent of micro-batch boundaries
-    (asserted in tests/test_multimodal_streaming.py).
+    (asserted in tests/test_multimodal_streaming.py).  Values hash by
+    the column's declared type, as in the sketch aggregates
+    (``sketch_spec.hash_pairs``); NULLs, and NaN doubles, which pandas
+    cannot tell from NULL, are skipped.  A BIGINT batch holding a NULL
+    reaches pandas as float64, so its longs beyond 2^53 lose precision.
     """
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..sketches import theta as theta_mod
+    from ..functions import sketch_spec
+    from ..sketches.theta import ThetaSketch
 
     out_schema = T.StructType([
         T.StructField("key", T.StringType()),
@@ -177,26 +168,22 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
         T.StructField("rows", T.LongType()),
     ])
 
+    spec = sketch_spec.theta(lg_k)
+    arrow_type = to_arrow_type(stream.schema[value_col].dataType)
+
     def update(key, pdfs, state: GroupState):
-        batch_vals = []
-        n = 0
-        for pdf in pdfs:
-            batch_vals.append(pdf[value_col].dropna().to_numpy())
-            n += len(pdf)
-        import numpy as np
-        vals = np.concatenate(batch_vals) if batch_vals else np.empty(0)
-        part = theta_mod.sketch_longs(vals.astype(np.int64), lg_k)
+        vals = pd.concat(list(pdfs))[value_col]
+        image = spec.build(pa.Array.from_pandas(vals, type=arrow_type))
+        rows = len(vals)
         if state.exists:
-            img, rows = state.get
-            merged = theta_mod.union(
-                theta_mod.ThetaSketch.from_bytes(bytes(img)), part)
-            rows = int(rows) + n
-        else:
-            merged, rows = part, n
-        state.update((bytearray(merged.to_bytes()), rows))
-        yield pd.DataFrame({"key": [str(key[0])],
-                            "distinct_estimate": [merged.estimate()],
-                            "rows_seen": [rows]})
+            prev, prev_rows = state.get
+            image = spec.merge([bytes(prev), image])
+            rows += int(prev_rows)
+        state.update((bytearray(image), rows))
+        yield pd.DataFrame({
+            "key": [str(key[0])],
+            "distinct_estimate": [ThetaSketch.from_bytes(image).estimate()],
+            "rows_seen": [rows]})
 
     return (stream.groupBy(F.col(key_col).cast("string").alias(key_col))
             .applyInPandasWithState(update, out_schema, state_schema,

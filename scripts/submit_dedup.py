@@ -9,10 +9,11 @@ Cluster usage (the production shape required by the north rule):
         --output <checkpoint/output root> \\
         [--id-col url --text-col text --threshold 0.8 --with-lcs]
 
-Local sandbox equivalent (what bench.py drives):
+Local run (``--cores N`` runs local[N] with the engine's session
+defaults from functions/session.get_spark):
 
     python scripts/submit_dedup.py --input .cache/webtext_bench_20000/pages.parquet \\
-        --output /tmp/dedup_out --cores 32
+        --output /tmp/dedup_out --cores 4
 
 The job is a thin arg-parser around plans.dedup.dedup_pipeline — all
 logic lives in the package so the same code path runs in tests, bench,

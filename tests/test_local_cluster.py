@@ -1,6 +1,6 @@
 """local-cluster mode (separate executor JVMs + real shuffle
-transport) — the bench's --scaling-cluster path.  Guards the
-executor-PYTHONPATH plumbing in functions/session.get_spark: pandas
+transport), the in-sandbox stand-in for a --py-files cluster.  Guards
+the executor-PYTHONPATH plumbing in functions/session.get_spark: pandas
 UDFs must import the package inside executor-spawned Python workers,
 which do NOT inherit the driver's sys.path (on a real cluster,
 --py-files provides this).

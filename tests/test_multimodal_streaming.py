@@ -1,5 +1,5 @@
-"""Tests: multimodal column plumbing, similarity search, incremental
-streaming state."""
+"""Tests: raw-media exact dedup over BINARY blobs, similarity search,
+incremental streaming state."""
 
 from __future__ import annotations
 
@@ -7,12 +7,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from datasketches_java_spark.functions.multimodal import (
-    audio_stats,
-    decode_image,
-    frame_sample,
-    image_features,
-)
 from datasketches_java_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_blas,
@@ -26,200 +20,6 @@ def media(spark):
                                                         dtype=np.uint8)))
             for i in range(20)]
     return spark.createDataFrame(rows, "media_id long, blob binary").cache()
-
-
-def test_decode_image_contract(spark, media):
-    out = decode_image(media, "blob", "media_id", width=8, height=8)
-    rows = out.collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r["meta"]["width"] == 8 and r["meta"]["channels"] == 3
-        assert len(r["pixels"]) == 8 * 8 * 3
-        assert all(0 <= p <= 255 for p in r["pixels"][:10])
-    # deterministic: same content -> same pixels
-    again = decode_image(media, "blob", "media_id", width=8, height=8)
-    assert again.exceptAll(out).count() == 0
-
-
-def test_decode_image_real_path_raises_for_compressed(spark, media):
-    """Non-BMP bytes on the real path still raise at the Pillow seam."""
-    with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-        decode_image(media.limit(1), "blob", "media_id", fake=False).collect()
-
-
-def test_decode_image_real_bmp(spark):
-    """REAL pure-numpy BMP decode through the Spark operator: exact
-    pixel recovery at native size, deterministic nearest-neighbor
-    downsample otherwise; meta.width/height describe the emitted
-    array, meta.src_width/src_height the original image."""
-    from datasketches_java_spark.functions.multimodal import (
-        _decode_bmp, encode_bmp)
-    rng = np.random.default_rng(7)
-    imgs = {i: rng.integers(0, 256, (16, 20, 3), dtype=np.uint8)
-            for i in range(4)}
-    # library-level exact roundtrip (incl. row padding: w=20 -> 60B rows)
-    for px in imgs.values():
-        assert np.array_equal(_decode_bmp(encode_bmp(px)), px)
-    df = spark.createDataFrame(
-        [(i, bytearray(encode_bmp(px))) for i, px in imgs.items()],
-        "media_id long, blob binary")
-    rows = decode_image(df, "blob", "media_id", width=20, height=16,
-                        fake=False).collect()
-    assert len(rows) == 4
-    for r in rows:
-        assert (r["meta"]["width"], r["meta"]["height"],
-                r["meta"]["format"]) == (20, 16, "bmp")
-        got = np.array(r["pixels"], dtype=np.uint8).reshape(16, 20, 3)
-        assert np.array_equal(got, imgs[r["media_id"]])
-    # resample path keeps the contract shape; meta dims must describe
-    # the EMITTED array (reshape-safe), source dims kept separately
-    small = decode_image(df, "blob", "media_id", width=8, height=8,
-                         fake=False).collect()
-    assert all(len(r["pixels"]) == 8 * 8 * 3 for r in small)
-    for r in small:
-        m = r["meta"]
-        assert (m["width"], m["height"]) == (8, 8)
-        assert (m["src_width"], m["src_height"]) == (20, 16)
-        np.array(r["pixels"], dtype=np.uint8).reshape(
-            m["height"], m["width"], m["channels"])
-
-
-def test_png_roundtrip_every_filter():
-    """Library-level exact PNG roundtrip through EVERY scanline filter
-    (None/Sub/Up/Average/Paeth) — real zlib-compressed PNG bytes, no
-    image library."""
-    from datasketches_java_spark.functions.multimodal import (
-        _decode_png, encode_png)
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, (13, 17, 3), dtype=np.uint8)
-    for ftype in range(5):
-        buf = encode_png(px, filter_type=ftype)
-        assert buf[:8] == b"\x89PNG\r\n\x1a\n"
-        assert np.array_equal(_decode_png(buf), px), f"filter {ftype}"
-    # gradient image (the case where Sub/Paeth actually compress)
-    grad = (np.arange(24 * 24 * 3, dtype=np.int64) % 256).astype(
-        np.uint8).reshape(24, 24, 3)
-    for ftype in range(5):
-        assert np.array_equal(_decode_png(encode_png(grad, ftype)), grad)
-
-
-def test_png_rejects_unsupported():
-    from datasketches_java_spark.functions.multimodal import (
-        _decode_png, encode_png)
-    import struct as _s
-    import zlib as _z
-    with pytest.raises(ValueError, match="not a PNG"):
-        _decode_png(b"\x00" * 20)
-    # interlaced IHDR must be rejected at the documented seam
-    def chunk(tag, body):
-        c = tag + body
-        return _s.pack(">I", len(body)) + c + _s.pack(">I", _z.crc32(c))
-    ihdr = _s.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 1)  # interlace=1
-    buf = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-           + chunk(b"IDAT", _z.compress(b"\x00" * 52))
-           + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="interlace"):
-        _decode_png(buf)
-    # truncated pixel stream
-    good = encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
-    # corrupt the IDAT length contract by re-wrapping a short stream
-    bad = (good[:8] + chunk(b"IHDR", _s.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0))
-           + chunk(b"IDAT", _z.compress(b"\x00" * 10)) + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="length mismatch"):
-        _decode_png(bad)
-
-
-def test_decode_image_real_png(spark):
-    """REAL PNG decode through the Spark operator: exact pixel recovery
-    at native size, emitted-dims meta contract, gray + RGBA variants."""
-    from datasketches_java_spark.functions.multimodal import (
-        _decode_png, encode_png)
-    import struct as _s
-    import zlib as _z
-    rng = np.random.default_rng(23)
-    imgs = {i: rng.integers(0, 256, (12, 15, 3), dtype=np.uint8)
-            for i in range(4)}
-    df = spark.createDataFrame(
-        [(i, bytearray(encode_png(px, filter_type=i % 5)))
-         for i, px in imgs.items()],
-        "media_id long, blob binary")
-    rows = decode_image(df, "blob", "media_id", width=15, height=12,
-                        fake=False).collect()
-    assert len(rows) == 4
-    for r in rows:
-        m = r["meta"]
-        assert (m["width"], m["height"], m["format"]) == (15, 12, "png")
-        assert (m["src_width"], m["src_height"]) == (15, 12)
-        got = np.array(r["pixels"], dtype=np.uint8).reshape(12, 15, 3)
-        assert np.array_equal(got, imgs[r["media_id"]])
-    # grayscale (color type 0) expands to 3 channels; RGBA (6) drops alpha
-    def chunk(tag, body):
-        c = tag + body
-        return _s.pack(">I", len(body)) + c + _s.pack(">I", _z.crc32(c))
-    def raw_png(arr, ct):
-        h, w = arr.shape[:2]
-        scan = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-        return (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", _s.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0))
-                + chunk(b"IDAT", _z.compress(scan)) + chunk(b"IEND", b""))
-    gray = rng.integers(0, 256, (6, 7, 1), dtype=np.uint8)
-    rgba = rng.integers(0, 256, (6, 7, 4), dtype=np.uint8)
-    assert np.array_equal(_decode_png(raw_png(gray, 0)),
-                          np.repeat(gray, 3, axis=2))
-    assert np.array_equal(_decode_png(raw_png(rgba, 6)), rgba[:, :, :3])
-
-
-def test_audio_stats_real_wav(spark):
-    """REAL pure-numpy WAV parse through the Spark operator: exact
-    sample count and RMS for synthesized PCM-16 audio, including a
-    stereo file and a RIFF layout with a leading junk chunk."""
-    from datasketches_java_spark.functions.multimodal import (
-        _decode_wav, encode_wav)
-    t = np.arange(1600)
-    mono = (np.sin(2 * np.pi * 440 * t / 16000) * 12000).astype(np.int16)
-    stereo = np.column_stack([mono, (mono // 2)]).ravel()
-    wav_mono = encode_wav(mono)
-    wav_stereo = encode_wav(stereo, channels=2)
-    # chunk-walk robustness: junk chunk before fmt
-    junk = (wav_mono[:12] + b"JUNK" + np.int32(4).tobytes() + b"zzzz"
-            + wav_mono[12:])
-    s, rate, ch = _decode_wav(junk)
-    assert (len(s), rate, ch) == (1600, 16000, 1)
-    df = spark.createDataFrame(
-        [(0, bytearray(wav_mono)), (1, bytearray(wav_stereo))],
-        "media_id long, blob binary")
-    out = {r["media_id"]: r for r in
-           audio_stats(df, "blob", "media_id", fake=False).collect()}
-    assert out[0]["n_samples"] == 1600
-    assert out[1]["n_samples"] == 3200
-    expect = float(np.sqrt(np.mean(mono.astype(np.float64) ** 2)))
-    assert abs(out[0]["rms"] - expect) < 1e-9
-    with pytest.raises(Exception, match="NotImplementedError|libsndfile"):
-        audio_stats(spark.createDataFrame([(9, b"\xffmp3data")],
-                                          "media_id long, blob binary"),
-                    "blob", "media_id", fake=False).collect()
-
-
-def test_image_feature_shape(spark, media):
-    px = decode_image(media, "blob", "media_id", width=8, height=8)
-    feats = image_features(px, "pixels", "media_id", dim=16).collect()
-    assert len(feats) == 20
-    assert all(len(r["features"]) == 16 for r in feats)
-
-
-def test_frame_sample(spark, media):
-    out = frame_sample(media, "blob", "media_id", n_frames=4, frame_size=128)
-    rows = out.collect()
-    assert len(rows) == 80
-    assert all(len(r["frame_bytes"]) <= 128 for r in rows)
-    idx = sorted({r["frame_idx"] for r in rows})
-    assert idx == [0, 1, 2, 3]
-
-
-def test_audio_stats(spark, media):
-    rows = audio_stats(media, "blob", "media_id").collect()
-    assert len(rows) == 20
-    assert all(r["n_samples"] == 2048 and r["rms"] > 0 for r in rows)
 
 
 # ---------------------------------------------------------------------------
@@ -362,32 +162,42 @@ def test_ivf_cosine_topk_recall(spark):
     assert all(q != n for q, n in approx)
 
 
-def test_stateful_theta_distinct_stream(spark, tmp_path):
+# value column type -> value of the row numbered v
+_STREAM_VALUES = {"long": lambda v: v,
+                  "double": lambda v: v / 4.0,  # 0.25, 0.5, 0.75 distinct
+                  "string": lambda v: f"s{v}"}
+
+
+@pytest.mark.parametrize("vtype", list(_STREAM_VALUES))
+def test_stateful_theta_distinct_stream(spark, tmp_path, vtype):
     """applyInPandasWithState theta state: feed the same rows in TWO
     micro-batches (maxFilesPerTrigger=1); the final per-key estimate
     must equal the exact distinct count over BOTH batches — the state
-    really persists and the union algebra hides batch boundaries."""
+    really persists and the union algebra hides batch boundaries.  The
+    value column hashes by its declared type, so the counts do not
+    depend on it."""
     import pandas as pd
     from datasketches_java_spark.streaming.incremental import (
         stateful_theta_distinct)
+    conv = _STREAM_VALUES[vtype]
     src = tmp_path / "stream_src"
     src.mkdir()
     # batch 1: keys a,b ; batch 2: overlapping values for a, new key c
     pd.DataFrame({"k": ["a"] * 60 + ["b"] * 40,
-                  "v": list(range(60)) + list(range(40))}) \
+                  "v": [conv(v) for v in [*range(60), *range(40)]]}) \
         .to_parquet(src / "b1.parquet")
     pd.DataFrame({"k": ["a"] * 50 + ["c"] * 30,
-                  "v": list(range(30, 80)) + list(range(30))}) \
+                  "v": [conv(v) for v in [*range(30, 80), *range(30)]]}) \
         .to_parquet(src / "b2.parquet")
-    stream = (spark.readStream.schema("k string, v long")
+    stream = (spark.readStream.schema(f"k string, v {vtype}")
               .option("maxFilesPerTrigger", "1").parquet(str(src)))
     out = stateful_theta_distinct(stream, "k", "v", lg_k=12)
-    q = (out.writeStream.format("memory").queryName("theta_state")
+    q = (out.writeStream.format("memory").queryName(f"theta_state_{vtype}")
          .outputMode("update")
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM theta_state").collect()
+    rows = spark.sql(f"SELECT * FROM theta_state_{vtype}").collect()
     # last emission per key wins (update mode emits per batch)
     latest = {}
     for r in rows:
