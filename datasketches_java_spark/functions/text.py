@@ -56,8 +56,7 @@ def shingle_hashes(text: Column | str, w: int = SHINGLE_W) -> Column:
     tokenizer rides inside.  Hot paths must bind the token array to a
     real column first and use ``shingle_hashes_from_tokens``
     (operators/lsh.add_signatures does)."""
-    sh = shingles(tokens(text), w)
-    return F.array_sort(F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s))))
+    return shingle_hashes_from_tokens(tokens(text), w)
 
 
 def shingle_hashes_from_tokens(toks: Column | str, w: int = SHINGLE_W) -> Column:

@@ -30,19 +30,13 @@ def normalize_text(text_col: str | Column) -> Column:
 
 
 def exact_dedup(docs: DataFrame, id_col: str, text_col: str,
-                key: Column | None = None, eager: bool = True) -> DataFrame:
+                key: Column | None = None) -> DataFrame:
     """Return (id_col, canonical_id, group_size) — one row per input
     document, grouped by EXACT equality of the normalized text.
 
-    **EAGER BY DEFAULT — constructing this DataFrame runs a Spark
-    job.** With ``eager=True`` the collision gate below executes
-    immediately (a full scan + aggregate of ``docs``, materializing
-    the lazily-checkpointed ``canon``), and calling the function twice
-    runs it twice even if the result is never acted on.  Callers that
-    COMPOSE a plan they may not execute should pass ``eager=False``,
-    which returns a fully lazy plan keeping both the clean and the
-    collision branch — correct on every corpus, at the cost of the
-    higher scan count documented below when it does run.
+    Constructing this DataFrame runs a Spark job: the collision gate
+    below executes immediately (a full scan + aggregate of ``docs``,
+    materializing the lazily-checkpointed ``canon``).
 
     Read-amplification note (measured, sf0.01 AQE final plan): leaving
     the collision branch in the lazy plan unconditionally cost 10
@@ -74,24 +68,16 @@ def exact_dedup(docs: DataFrame, id_col: str, text_col: str,
              .agg(F.min("gid").alias("canonical_id"),
                   F.sum("gsize").alias("group_size"),
                   F.count("*").alias("n_norms")))
-    if eager:
-        # NOTE: under AQE even eager=False localCheckpoint materializes
-        # the upstream stages at construction time (toRdd on an
-        # adaptive plan), so the checkpoint lives on the eager path
-        # only — which is fine: the gate right below runs a job anyway
-        # and the checkpoint exists precisely so that job's work is
-        # reused by the branches.
-        canon = canon.localCheckpoint(eager=False)
+    # the gate below runs a job anyway; the checkpoint lets the
+    # branches reuse that job's work
+    canon = canon.localCheckpoint(eager=False)
     clean = (docs2.select(id_col, "normkey")
              .join(canon.where(F.col("n_norms") == 1)
                    .select("normkey", "canonical_id", "group_size"),
                    on="normkey")
              .select(id_col, "canonical_id", "group_size"))
-    if eager:
-        has_collisions = bool(
-            canon.where(F.col("n_norms") > 1).limit(1).count())
-        if not has_collisions:
-            return clean
+    if not canon.where(F.col("n_norms") > 1).limit(1).count():
+        return clean
     collided = (docs2
                 .join(canon.where(F.col("n_norms") > 1).select("normkey"),
                       on="normkey")

@@ -1,4 +1,5 @@
-"""KLL quantiles sketch over doubles — numpy level-buffer core.
+"""KLL quantiles sketch — the numpy level-buffer engine, shared by
+every item type, and its doubles sketch.
 
 Re-expresses the reference's KLL (kll/KllSketch.java:76,
 kll/KllDoublesSketch.java:295, kll/KllDoublesHelper.java:38,215,
@@ -12,12 +13,15 @@ kll/KllHelper.java:142,870) with batch ingestion:
     halve");
   - merge: concatenate level-wise then compact while over capacity
     (kll/KllDoublesHelper.java:38 mergeDoubleImpl);
-  - queries via the cumulative-weight sorted view
-    (kll/KllDoublesSketchSortedView.java:37,76) with INCLUSIVE /
-    EXCLUSIVE search criteria
-    (quantilescommon/QuantileSearchCriteria.java:41,44);
+  - queries via the cumulative-weight sorted view of
+    sketches/quantiles_common.py;
   - normalized rank error 2.296/k^0.9723 single-sided
     (kll/KllHelper.java:104-107) — exported for test tolerances.
+
+:class:`KllLevels` holds these rules once; an item type
+(:class:`KllDoublesSketch` here, sketches/kll_items.py for longs and
+strings) supplies only its empty level, its input cleaning, how it
+tracks the extremes, and its image format.
 
 While n <= the retained capacity no compaction happens and every query
 is EXACT (the oracle-comparison mode used by __spark_entry__).
@@ -32,6 +36,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from ..config import KLL_DEFAULT_K
+from .quantiles_common import QuantileQueries, SortedView
 
 _FAMILY_KLL = 15
 _SER_VER = 1
@@ -49,18 +54,11 @@ def _cap(k: int, num_levels: int, level: int) -> int:
     return max(8, int(np.ceil(k * (2.0 / 3.0) ** depth)))
 
 
-@dataclass
-class KllDoublesSketch:
-    k: int
-    n: int
-    min_value: float
-    max_value: float
-    levels: list[np.ndarray]  # levels[i] = float64 items with weight 2^i
-
-    # -- construction ---------------------------------------------------
-    @staticmethod
-    def new(k: int = KLL_DEFAULT_K) -> "KllDoublesSketch":
-        return KllDoublesSketch(k, 0, np.inf, -np.inf, [np.empty(0, np.float64)])
+class KllLevels(QuantileQueries):
+    """The KLL level engine over ``self.k``, ``self.n`` and
+    ``self.levels`` (levels[i] = items with weight 2^i).  An item type
+    defines ``_empty_level()``, ``_clean(xs)`` (the items to insert),
+    ``_extremes()`` and ``_widen(lo, hi)``."""
 
     def _total_retained(self) -> int:
         return sum(lv.shape[0] for lv in self.levels)
@@ -68,16 +66,14 @@ class KllDoublesSketch:
     def _capacity(self) -> int:
         return sum(_cap(self.k, len(self.levels), i) for i in range(len(self.levels)))
 
-    def update_batch(self, xs: np.ndarray) -> "KllDoublesSketch":
+    def update_batch(self, xs):
         """Batch insert (kll/KllDoublesSketch.java:295 scalar loop,
         vectorized)."""
-        xs = np.asarray(xs, dtype=np.float64)
-        xs = xs[~np.isnan(xs)]
+        xs = self._clean(xs)
         if xs.size == 0:
             return self
         self.n += int(xs.size)
-        self.min_value = min(self.min_value, float(xs.min()))
-        self.max_value = max(self.max_value, float(xs.max()))
+        self._widen(xs.min(), xs.max())
         self.levels[0] = np.concatenate([self.levels[0], xs])
         self._compress()
         return self
@@ -99,77 +95,55 @@ class KllDoublesSketch:
             buf = np.sort(self.levels[target])
             off = int(rng.integers(0, 2))
             promoted = buf[off::2]
-            self.levels[target] = np.empty(0, np.float64)
+            self.levels[target] = self._empty_level()
             if target + 1 == len(self.levels):
-                self.levels.append(np.empty(0, np.float64))
+                self.levels.append(self._empty_level())
             self.levels[target + 1] = np.concatenate(
                 [self.levels[target + 1], promoted])
 
-    # -- merge ------------------------------------------------------------
-    def merge(self, other: "KllDoublesSketch") -> "KllDoublesSketch":
+    def merge(self, other):
         """Level-wise merge + recompact (kll/KllDoublesHelper.java:38)."""
         if other.n == 0:
             return self
-        if self.n == 0:
-            self.k = min(self.k, other.k)
         self.k = min(self.k, other.k)
         while len(self.levels) < len(other.levels):
-            self.levels.append(np.empty(0, np.float64))
+            self.levels.append(self._empty_level())
         for i, lv in enumerate(other.levels):
             self.levels[i] = np.concatenate([self.levels[i], lv])
         self.n += other.n
-        self.min_value = min(self.min_value, other.min_value)
-        self.max_value = max(self.max_value, other.max_value)
+        self._widen(*other._extremes())
         self._compress()
         return self
 
-    # -- queries ------------------------------------------------------------
-    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted items, cumulative weights) —
-        kll/KllDoublesSketchSortedView.java:37."""
-        items = np.concatenate(self.levels)
-        weights = np.concatenate([
-            np.full(lv.shape[0], 1 << i, dtype=np.int64)
-            for i, lv in enumerate(self.levels)])
-        order = np.argsort(items, kind="stable")
-        return items[order], np.cumsum(weights[order])
+    def _sorted_view(self) -> SortedView:
+        return SortedView(self.levels, range(len(self.levels)), self.n)
 
-    def quantile(self, rank: float, inclusive: bool = True) -> float:
-        """Quantile at normalized rank (kll/KllDoublesSketch.java:197).
 
-        INCLUSIVE: smallest item whose cumulative weight >= rank*n —
-        the exact order statistic in exact mode (matches DuckDB
-        quantile_disc)."""
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        pos = rank * self.n
-        if inclusive:
-            idx = int(np.searchsorted(cw, pos - 1e-9, side="left"))
-        else:
-            idx = int(np.searchsorted(cw, pos, side="right"))
-        idx = min(max(idx, 0), items.shape[0] - 1)
-        return float(items[idx])
+@dataclass
+class KllDoublesSketch(KllLevels):
+    k: int
+    n: int
+    min_value: float
+    max_value: float
+    levels: list[np.ndarray]  # levels[i] = float64 items with weight 2^i
 
-    def quantiles(self, ranks: list[float], inclusive: bool = True) -> list[float]:
-        return [self.quantile(r, inclusive) for r in ranks]
+    @staticmethod
+    def new(k: int = KLL_DEFAULT_K) -> "KllDoublesSketch":
+        return KllDoublesSketch(k, 0, np.inf, -np.inf, [np.empty(0, np.float64)])
 
-    def rank(self, x: float, inclusive: bool = True) -> float:
-        """Normalized rank of x (kll/KllDoublesSketch.java:245)."""
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        idx = int(np.searchsorted(items, x, side="right" if inclusive else "left"))
-        return 0.0 if idx == 0 else float(cw[idx - 1]) / self.n
+    def _empty_level(self) -> np.ndarray:
+        return np.empty(0, np.float64)
 
-    def pmf(self, split_points: list[float]) -> list[float]:
-        """Probability mass between split points
-        (kll/KllDoublesSketch.java:190)."""
-        cdf = self.cdf(split_points)
-        return [cdf[0]] + [cdf[i] - cdf[i - 1] for i in range(1, len(cdf))]
+    def _clean(self, xs) -> np.ndarray:
+        xs = np.asarray(xs, dtype=np.float64)
+        return xs[~np.isnan(xs)]
 
-    def cdf(self, split_points: list[float]) -> list[float]:
-        return [self.rank(p) for p in split_points] + [1.0]
+    def _extremes(self) -> tuple[float, float]:
+        return self.min_value, self.max_value
+
+    def _widen(self, lo, hi) -> None:
+        self.min_value = min(self.min_value, float(lo))
+        self.max_value = max(self.max_value, float(hi))
 
     # -- serde ------------------------------------------------------------
     def to_bytes(self) -> bytes:
@@ -199,14 +173,11 @@ class KllDoublesSketch:
 
 def ks_statistic(a: KllDoublesSketch, b: KllDoublesSketch) -> float:
     """Kolmogorov-Smirnov D statistic between two sketched distributions
-    (quantiles/KolmogorovSmirnov.java:38 computeKSDelta)."""
-    ia, _ = a._sorted_view()
-    ib, _ = b._sorted_view()
-    pts = np.union1d(ia, ib)
-    d = 0.0
-    for p in pts:
-        d = max(d, abs(a.rank(float(p)) - b.rank(float(p))))
-    return d
+    (quantiles/KolmogorovSmirnov.java:38 computeKSDelta): the largest
+    rank gap over every retained item of either sketch."""
+    va, vb = a._sorted_view(), b._sorted_view()
+    pts = np.union1d(va.items, vb.items)
+    return float(np.max(np.abs(va.ranks(pts) - vb.ranks(pts)), initial=0.0))
 
 
 def ks_test(a: KllDoublesSketch, b: KllDoublesSketch, p_value: float = 0.01) -> bool:

@@ -5,9 +5,10 @@ Counterparts: kll/KllLongsSketch.java (longs are a direct dtype
 parameterization of the doubles core), quantiles/ItemsSketch.java:70
 with the pluggable-comparator contract and common/ArrayOfItemsSerDe
 .java:30 (generic items; modern form kll/KllItemsSketch.java).  The
-level/capacity/compaction/merge rules are identical to
-sketches/kll.py (kll/KllHelper.java:142,870); only the item dtype,
-the comparator, and the per-item serde differ:
+level/capacity/compaction/merge rules are the shared KLL level engine
+(sketches/kll.KllLevels) and the queries its sorted view
+(sketches/quantiles_common.py); this module supplies only the item
+dtype, the comparator, and the per-item serde:
 
   - longs: numpy int64 arrays, natural order; 8-byte LE items.
   - strings: numpy object arrays of Python str, code-point order.
@@ -20,6 +21,9 @@ the comparator, and the per-item serde differ:
     SQL engines we verify against.  Items serialize length-prefixed
     UTF-8 (common/ArrayOfStringsSerDe.java layout: int32 length +
     bytes per item).
+
+``pack_items`` / ``unpack_items`` are that per-item serde, shared with
+the classic ItemsSketch wire format of sketches/kll_serde.py.
 
 Exactness contract matches sketches/kll.py: while n <= retained
 capacity no compaction happens and every INCLUSIVE quantile is the
@@ -34,43 +38,46 @@ from dataclasses import dataclass
 import numpy as np
 
 from ..config import KLL_DEFAULT_K
-from .kll import _cap, rank_error  # same capacity rule / error model
+from .kll import KllLevels, rank_error
 
 _FAMILY_KLL = 15
 _SER_VER_ITEMS = 2
 _HDR = struct.Struct("<BBBxHHQ")  # family, serVer, dtypeCode, k, numLevels, n
-_RNG_SEED = 137
 _DTYPE_LONG = 0
 _DTYPE_STRING = 1
 
 __all__ = ["KllItemsSketch", "rank_error"]
 
 
-def _empty_level(dtype_code: int) -> np.ndarray:
+def empty_items(dtype_code: int) -> np.ndarray:
     return (np.empty(0, np.int64) if dtype_code == _DTYPE_LONG
             else np.empty(0, dtype=object))
 
 
-def _pack_items(arr: np.ndarray, dtype_code: int) -> bytes:
+def pack_items(arr, dtype_code: int) -> bytes:
+    """common/ArrayOfLongsSerDe (8-byte LE longs) or
+    common/ArrayOfStringsSerDe (int32 length + UTF-8 bytes)."""
     if dtype_code == _DTYPE_LONG:
-        return arr.astype("<i8").tobytes()
+        return np.asarray(arr, dtype="<i8").tobytes()
     out = []
     for s in arr:
         b = s.encode("utf-8")
-        out.append(struct.pack("<I", len(b)))
+        out.append(struct.pack("<i", len(b)))
         out.append(b)
     return b"".join(out)
 
 
-def _unpack_items(buf: bytes, off: int, count: int,
-                  dtype_code: int) -> tuple[np.ndarray, int]:
+def unpack_items(buf: bytes, off: int, count: int,
+                 dtype_code: int) -> tuple[np.ndarray, int]:
+    """``count`` items written by :func:`pack_items` at ``off`` → (items,
+    offset past them)."""
     if dtype_code == _DTYPE_LONG:
         arr = np.frombuffer(buf, dtype="<i8", count=count,
                             offset=off).astype(np.int64)
         return arr, off + count * 8
     items = np.empty(count, dtype=object)
     for i in range(count):
-        (ln,) = struct.unpack_from("<I", buf, off)
+        (ln,) = struct.unpack_from("<i", buf, off)
         off += 4
         items[i] = buf[off:off + ln].decode("utf-8")
         off += ln
@@ -78,7 +85,7 @@ def _unpack_items(buf: bytes, off: int, count: int,
 
 
 @dataclass
-class KllItemsSketch:
+class KllItemsSketch(KllLevels):
     k: int
     dtype_code: int
     n: int
@@ -86,124 +93,43 @@ class KllItemsSketch:
     max_item: object
     levels: list[np.ndarray]
 
-    # -- construction ---------------------------------------------------
     @staticmethod
     def new(k: int = KLL_DEFAULT_K, dtype: str = "long") -> "KllItemsSketch":
         code = _DTYPE_LONG if dtype == "long" else _DTYPE_STRING
-        return KllItemsSketch(k, code, 0, None, None, [_empty_level(code)])
+        return KllItemsSketch(k, code, 0, None, None, [empty_items(code)])
 
-    def _total_retained(self) -> int:
-        return sum(lv.shape[0] for lv in self.levels)
+    def _empty_level(self) -> np.ndarray:
+        return empty_items(self.dtype_code)
 
-    def _capacity(self) -> int:
-        return sum(_cap(self.k, len(self.levels), i)
-                   for i in range(len(self.levels)))
-
-    def update_batch(self, xs) -> "KllItemsSketch":
+    def _clean(self, xs) -> np.ndarray:
         if self.dtype_code == _DTYPE_LONG:
-            xs = np.asarray(xs, dtype=np.int64)
-        else:
-            xs = np.asarray([x for x in xs if x is not None], dtype=object)
-        if xs.size == 0:
-            return self
-        self.n += int(xs.size)
-        lo, hi = xs.min(), xs.max()
+            return np.asarray(xs, dtype=np.int64)
+        return np.asarray([x for x in xs if x is not None], dtype=object)
+
+    def _extremes(self) -> tuple:
+        return self.min_item, self.max_item
+
+    def _widen(self, lo, hi) -> None:
         self.min_item = lo if self.min_item is None else min(self.min_item, lo)
         self.max_item = hi if self.max_item is None else max(self.max_item, hi)
-        self.levels[0] = np.concatenate([self.levels[0], xs])
-        self._compress()
-        return self
 
-    def _compress(self) -> None:
-        rng = np.random.default_rng(_RNG_SEED + self.n)
-        while self._total_retained() > self._capacity():
-            num = len(self.levels)
-            target = None
-            for lvl in range(num):
-                if self.levels[lvl].shape[0] > _cap(self.k, num, lvl):
-                    target = lvl
-                    break
-            if target is None:
-                target = int(np.argmax([lv.shape[0] for lv in self.levels]))
-            buf = np.sort(self.levels[target], kind="stable")
-            off = int(rng.integers(0, 2))
-            promoted = buf[off::2]
-            self.levels[target] = _empty_level(self.dtype_code)
-            if target + 1 == len(self.levels):
-                self.levels.append(_empty_level(self.dtype_code))
-            self.levels[target + 1] = np.concatenate(
-                [self.levels[target + 1], promoted])
-
-    # -- merge ------------------------------------------------------------
     def merge(self, other: "KllItemsSketch") -> "KllItemsSketch":
         if other.dtype_code != self.dtype_code:
             raise ValueError("item dtype mismatch in KLL merge")
-        if other.n == 0:
-            return self
-        self.k = min(self.k, other.k)
-        while len(self.levels) < len(other.levels):
-            self.levels.append(_empty_level(self.dtype_code))
-        for i, lv in enumerate(other.levels):
-            self.levels[i] = np.concatenate([self.levels[i], lv])
-        self.n += other.n
-        if self.min_item is None:
-            self.min_item, self.max_item = other.min_item, other.max_item
-        else:
-            self.min_item = min(self.min_item, other.min_item)
-            self.max_item = max(self.max_item, other.max_item)
-        self._compress()
-        return self
-
-    # -- queries ----------------------------------------------------------
-    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        items = np.concatenate(self.levels)
-        weights = np.concatenate([
-            np.full(lv.shape[0], 1 << i, dtype=np.int64)
-            for i, lv in enumerate(self.levels)])
-        order = np.argsort(items, kind="stable")
-        return items[order], np.cumsum(weights[order])
-
-    def quantile(self, rank: float, inclusive: bool = True):
-        """Smallest item whose cumulative weight >= rank*n (INCLUSIVE —
-        the exact order statistic in exact mode)."""
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        pos = rank * self.n
-        if inclusive:
-            idx = int(np.searchsorted(cw, pos - 1e-9, side="left"))
-        else:
-            idx = int(np.searchsorted(cw, pos, side="right"))
-        idx = min(max(idx, 0), items.shape[0] - 1)
-        item = items[idx]
-        return int(item) if self.dtype_code == _DTYPE_LONG else item
-
-    def quantiles(self, ranks: list[float], inclusive: bool = True) -> list:
-        return [self.quantile(r, inclusive) for r in ranks]
-
-    def rank(self, x, inclusive: bool = True) -> float:
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        idx = int(np.searchsorted(items, x,
-                                  side="right" if inclusive else "left"))
-        return 0.0 if idx == 0 else float(cw[idx - 1]) / self.n
+        return super().merge(other)
 
     # -- serde ------------------------------------------------------------
     def to_bytes(self) -> bytes:
         parts = [_HDR.pack(_FAMILY_KLL, _SER_VER_ITEMS, self.dtype_code,
                            self.k, len(self.levels), self.n)]
         # min/max as a 0/2-item payload (absent when empty)
-        extremes = (np.asarray([], dtype=object) if self.min_item is None
-                    else np.asarray([self.min_item, self.max_item],
-                                    dtype=object))
-        if self.dtype_code == _DTYPE_LONG and extremes.size:
-            extremes = extremes.astype(np.int64)
-        parts.append(struct.pack("<B", extremes.size))
-        parts.append(_pack_items(extremes, self.dtype_code))
+        extremes = ([] if self.min_item is None
+                    else [self.min_item, self.max_item])
+        parts.append(struct.pack("<B", len(extremes)))
+        parts.append(pack_items(extremes, self.dtype_code))
         for lv in self.levels:
             parts.append(struct.pack("<I", lv.shape[0]))
-            parts.append(_pack_items(lv, self.dtype_code))
+            parts.append(pack_items(lv, self.dtype_code))
         return b"".join(parts)
 
     @staticmethod
@@ -214,15 +140,12 @@ class KllItemsSketch:
         off = _HDR.size
         n_ext = buf[off]
         off += 1
-        ext, off = _unpack_items(buf, off, n_ext, code)
+        ext, off = unpack_items(buf, off, n_ext, code)
         levels = []
         for _ in range(num_levels):
             (cnt,) = struct.unpack_from("<I", buf, off)
             off += 4
-            lv, off = _unpack_items(buf, off, cnt, code)
+            lv, off = unpack_items(buf, off, cnt, code)
             levels.append(lv)
-        mn = ext[0] if n_ext else None
-        mx = ext[1] if n_ext else None
-        if code == _DTYPE_LONG and n_ext:
-            mn, mx = int(mn), int(mx)
+        mn, mx = ext.tolist() if n_ext else (None, None)
         return KllItemsSketch(k, code, n, mn, mx, levels)

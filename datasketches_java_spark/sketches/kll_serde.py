@@ -33,6 +33,8 @@ import struct
 import numpy as np
 
 from .kll import KllDoublesSketch
+from .kll_items import (_DTYPE_LONG, _DTYPE_STRING, KllItemsSketch,
+                        empty_items, pack_items, unpack_items)
 
 _PRE_INTS_EMPTY_SINGLE = 2
 _PRE_INTS_FULL = 5
@@ -92,8 +94,7 @@ def from_java_bytes(buf: bytes) -> KllDoublesSketch:
     if flags & _FLAG_UPDATABLE or ser_ver == 3:
         raise ValueError("updatable-memory KLL format not supported")
     if flags & _FLAG_EMPTY:
-        return KllDoublesSketch(k, 0, np.inf, -np.inf,
-                                [np.empty(0, np.float64)])
+        return KllDoublesSketch.new(k)
     if flags & _FLAG_SINGLE or ser_ver == _SER_VER_SINGLE:
         item = float(np.frombuffer(buf, dtype=fmt, count=1, offset=8)[0])
         return KllDoublesSketch(k, 1, item, item,
@@ -156,8 +157,7 @@ def classic_doubles_from_java_bytes(buf: bytes) -> KllDoublesSketch:
     if ser_ver not in (1, 2, 3):
         raise ValueError(f"unsupported quantiles serVer {ser_ver}")
     if flags & _Q_FLAG_EMPTY:
-        return KllDoublesSketch(k, 0, np.inf, -np.inf,
-                                [np.empty(0, np.float64)])
+        return KllDoublesSketch.new(k)
     n = struct.unpack_from("<q", buf, 8)[0]
     mn, mx = struct.unpack_from("<dd", buf, 16)
     # serVer 1 carries an extra buffer-alloc long before the data
@@ -207,35 +207,6 @@ _ITEMS_SER_VER = 3        # quantiles/ItemsUtil.java:43
 _PRIOR_ITEMS_SER_VER = 2
 
 
-def _items_encode(arr, dtype_code: int) -> bytes:
-    """common/ArrayOfLongsSerDe (8-byte LE longs) or
-    common/ArrayOfStringsSerDe (int32 length + UTF-8 bytes)."""
-    from .kll_items import _DTYPE_LONG
-    if dtype_code == _DTYPE_LONG:
-        return np.asarray(arr, dtype="<i8").tobytes()
-    out = []
-    for s in arr:
-        b = s.encode("utf-8")
-        out.append(struct.pack("<i", len(b)))
-        out.append(b)
-    return b"".join(out)
-
-
-def _items_decode(buf: bytes, off: int, count: int, dtype_code: int):
-    from .kll_items import _DTYPE_LONG
-    if dtype_code == _DTYPE_LONG:
-        arr = np.frombuffer(buf, dtype="<i8", count=count,
-                            offset=off).astype(np.int64)
-        return arr, off + count * 8
-    items = np.empty(count, dtype=object)
-    for i in range(count):
-        (ln,) = struct.unpack_from("<i", buf, off)
-        off += 4
-        items[i] = buf[off:off + ln].decode("utf-8")
-        off += ln
-    return items, off
-
-
 def _next_pow2(x: int) -> int:
     return 1 << max(x - 1, 1).bit_length()
 
@@ -256,7 +227,6 @@ def classic_items_to_java_bytes(sk, classic_k: int | None = None) -> bytes:
     consumer accepts and may keep updating.  Estimation-mode states
     raise ValueError.
     """
-    from .kll_items import KllItemsSketch  # noqa: F401  (type context)
     retained = sum(lv.shape[0] for lv in sk.levels)
     if sk.n == 0:
         k = classic_k or 128
@@ -277,7 +247,7 @@ def classic_items_to_java_bytes(sk, classic_k: int | None = None) -> bytes:
     data = np.empty(items.shape[0] + 2, dtype=object)
     data[0], data[1] = sk.min_item, sk.max_item
     data[2:] = items
-    payload = _items_encode(data, sk.dtype_code)
+    payload = pack_items(data, sk.dtype_code)
     pre0 = struct.pack("<BBBBHxx", 2, _ITEMS_SER_VER, _FAMILY_QUANTILES,
                        _Q_FLAG_COMPACT | _Q_FLAG_ORDERED, classic_k)
     return pre0 + struct.pack("<q", sk.n) + payload
@@ -292,8 +262,6 @@ def classic_items_from_java_bytes(buf: bytes, dtype: str = "long"):
     (weight 2^(i+1)), present iff bit i of n/(2k) is set.  The payload
     is the serde-encoded array [min, max, baseBuffer..., levels...]
     (ItemsByteArrayImpl.combinedBufferToItemsArray:92-124)."""
-    from .kll_items import (_DTYPE_LONG, _DTYPE_STRING, _empty_level,
-                            KllItemsSketch)
     dtype_code = _DTYPE_LONG if dtype == "long" else _DTYPE_STRING
     if len(buf) < 8:
         raise ValueError("classic items image too short")
@@ -304,30 +272,22 @@ def classic_items_from_java_bytes(buf: bytes, dtype: str = "long"):
     if ser_ver not in (_ITEMS_SER_VER, _PRIOR_ITEMS_SER_VER):
         raise ValueError(f"unsupported items serVer {ser_ver}")
     if flags & _Q_FLAG_EMPTY:
-        return KllItemsSketch(k, dtype_code, 0, None, None,
-                              [_empty_level(dtype_code)])
+        return KllItemsSketch.new(k, dtype)
     (n,) = struct.unpack_from("<q", buf, 8)
     bb_cnt = int(n % (2 * k))
     bit_pattern = n // (2 * k)
     total = 2 + bb_cnt + k * int(bin(bit_pattern).count("1"))
-    data, _ = _items_decode(buf, pre_longs << 3, total, dtype_code)
-    mn, mx = data[0], data[1]
-    base = data[2:2 + bb_cnt]
-    if dtype_code == _DTYPE_LONG:
-        base = np.asarray(base, dtype=np.int64)
-    levels = [np.sort(base, kind="stable")]
+    data, _ = unpack_items(buf, pre_longs << 3, total, dtype_code)
+    mn, mx = data[:2].tolist()
+    levels = [np.sort(data[2:2 + bb_cnt], kind="stable")]
     off = 2 + bb_cnt
     bp = bit_pattern
     while bp:
         if bp & 1:
             lv = data[off:off + k]
-            if dtype_code == _DTYPE_LONG:
-                lv = np.asarray(lv, dtype=np.int64)
             off += k
         else:
-            lv = _empty_level(dtype_code)
+            lv = empty_items(dtype_code)
         levels.append(lv)
         bp >>= 1
-    if dtype_code == _DTYPE_LONG:
-        mn, mx = int(mn), int(mx)
     return KllItemsSketch(k, dtype_code, int(n), mn, mx, levels)

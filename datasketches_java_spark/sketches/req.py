@@ -29,7 +29,9 @@ semantic contract:
     (req/BaseReqSketch.java:41-42,200-226);
   - merge: level-wise buffer merge then compress — identical to
     ReqSketch.merge:375-399 (no "special compactions", same as the
-    reference's deviation from the paper).
+    reference's deviation from the paper);
+  - queries (quantile / rank / cdf / pmf) via the cumulative-weight
+    sorted view shared with KLL (sketches/quantiles_common.py).
 
 k must be even in [4, 1024]; default 12 (~1 % relative rank error at
 95 % confidence, ReqSketch.java javadoc).
@@ -43,6 +45,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .murmur3 import hash128_u64
+from .quantiles_common import QuantileQueries, SortedView
 
 MIN_K = 4
 NOM_CAP_MULT = 2
@@ -160,7 +163,7 @@ class _Compactor:
 
 
 @dataclass
-class ReqSketch:
+class ReqSketch(QuantileQueries):
     k: int = 12
     hra: bool = True
     n: int = 0
@@ -242,55 +245,11 @@ class ReqSketch:
             self._compress()
         return self
 
-    # -- queries ----------------------------------------------------------
-    def _sorted_view(self) -> tuple[np.ndarray, np.ndarray]:
-        items = []
-        weights = []
+    def _sorted_view(self) -> SortedView:
         for c in self.compactors:
             c.sort()
-            if c.count():
-                items.append(c.buf)
-                weights.append(np.full(c.count(), 1 << c.lg_weight,
-                                       dtype=np.int64))
-        if not items:
-            return np.empty(0, np.float64), np.empty(0, np.int64)
-        it = np.concatenate(items)
-        w = np.concatenate(weights)
-        order = np.argsort(it, kind="stable")
-        return it[order], np.cumsum(w[order])
-
-    def quantile(self, rank: float, inclusive: bool = True) -> float:
-        """Quantile at normalized rank — same search convention as the
-        KLL module (INCLUSIVE: smallest item with cumWeight ≥ rank·n,
-        quantilescommon search criteria)."""
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        pos = rank * self.n
-        if inclusive:
-            idx = int(np.searchsorted(cw, pos - 1e-9, side="left"))
-        else:
-            idx = int(np.searchsorted(cw, pos, side="right"))
-        idx = min(max(idx, 0), items.shape[0] - 1)
-        return float(items[idx])
-
-    def quantiles(self, ranks: list, inclusive: bool = True) -> list:
-        return [self.quantile(r, inclusive) for r in ranks]
-
-    def rank(self, x: float, inclusive: bool = True) -> float:
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        items, cw = self._sorted_view()
-        idx = int(np.searchsorted(items, x,
-                                  side="right" if inclusive else "left"))
-        return 0.0 if idx == 0 else float(cw[idx - 1]) / self.n
-
-    def pmf(self, split_points: list) -> list:
-        cdf = self.cdf(split_points)
-        return [cdf[0]] + [cdf[i] - cdf[i - 1] for i in range(1, len(cdf))]
-
-    def cdf(self, split_points: list) -> list:
-        return [self.rank(p) for p in split_points] + [1.0]
+        return SortedView([c.buf for c in self.compactors],
+                          [c.lg_weight for c in self.compactors], self.n)
 
     # -- error model (BaseReqSketch.java:200-226) -------------------------
     def _exact_rank(self, rank: float) -> bool:

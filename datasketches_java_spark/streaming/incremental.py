@@ -146,8 +146,9 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
     (asserted in tests/test_multimodal_streaming.py).  Values hash by
     the column's declared type, as in the sketch aggregates
     (``sketch_spec.hash_pairs``); NULLs, and NaN doubles, which pandas
-    cannot tell from NULL, are skipped.  A BIGINT batch holding a NULL
-    reaches pandas as float64, so its longs beyond 2^53 lose precision.
+    cannot tell from NULL, are skipped.  The values reach pandas
+    coalesced, beside a NULL flag, so a BIGINT column holding NULLs
+    stays int64 and is hashed exactly.
     """
     import pandas as pd
     import pyarrow as pa
@@ -169,12 +170,14 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
     ])
 
     spec = sketch_spec.theta(lg_k)
-    arrow_type = to_arrow_type(stream.schema[value_col].dataType)
+    value_type = stream.schema[value_col].dataType
+    arrow_type = to_arrow_type(value_type)
 
     def update(key, pdfs, state: GroupState):
-        vals = pd.concat(list(pdfs))[value_col]
+        pdf = pd.concat(list(pdfs))
+        vals = pdf[value_col][~pdf["_is_null"]]
         image = spec.build(pa.Array.from_pandas(vals, type=arrow_type))
-        rows = len(vals)
+        rows = len(pdf)
         if state.exists:
             prev, prev_rows = state.get
             image = spec.merge([bytes(prev), image])
@@ -185,6 +188,11 @@ def stateful_theta_distinct(stream: DataFrame, key_col: str, value_col: str,
             "distinct_estimate": [ThetaSketch.from_bytes(image).estimate()],
             "rows_seen": [rows]})
 
-    return (stream.groupBy(F.col(key_col).cast("string").alias(key_col))
+    value = F.col(value_col)
+    flagged = stream.select(
+        F.col(key_col).cast("string").alias(key_col),
+        F.coalesce(value, F.lit("0").cast(value_type)).alias(value_col),
+        value.isNull().alias("_is_null"))
+    return (flagged.groupBy(key_col)
             .applyInPandasWithState(update, out_schema, state_schema,
                                     "update", GroupStateTimeout.NoTimeout))

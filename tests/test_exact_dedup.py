@@ -43,31 +43,6 @@ def test_collision_fallback_is_exact(spark):
     assert out[3] == (3, 1) and out[4] == (4, 1)
 
 
-def test_lazy_variant_matches_eager(spark):
-    """eager=False must build the plan WITHOUT running a Spark job and
-    produce identical results on both clean and collided corpora."""
-    docs = _docs(spark, [
-        (1, "Hello   World"), (2, "hello world"), (3, "x y z"),
-    ])
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    lazy = exact_dedup(docs, "doc_id", "text", eager=False)
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "eager=False ran a Spark job at plan time"
-    expect = {r.doc_id: (r.canonical_id, r.group_size)
-              for r in exact_dedup(docs, "doc_id", "text").collect()}
-    got = {r.doc_id: (r.canonical_id, r.group_size)
-           for r in lazy.collect()}
-    assert got == expect
-    # forced-collision corpus through the lazy plan
-    coll = _docs(spark, [(1, "aaa"), (2, "AAA"), (3, "bbb")])
-    got2 = {r.doc_id: (r.canonical_id, r.group_size)
-            for r in exact_dedup(coll, "doc_id", "text",
-                                 key=F.lit(0).cast("long"),
-                                 eager=False).collect()}
-    assert got2 == {1: (1, 2), 2: (1, 2), 3: (3, 1)}
-
-
 def test_every_row_appears_exactly_once(spark):
     docs = _docs(spark, [(i, f"doc {i % 7}") for i in range(50)])
     rows = exact_dedup(docs, "doc_id", "text").collect()

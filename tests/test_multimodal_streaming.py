@@ -168,6 +168,28 @@ _STREAM_VALUES = {"long": lambda v: v,
                   "string": lambda v: f"s{v}"}
 
 
+def _stateful_latest(spark, tmp_path, vtype, batches, name):
+    """Stream ``batches`` (one parquet file per micro-batch) through
+    stateful_theta_distinct; the last emission per key wins (update
+    mode emits per batch): {key: (distinct_estimate, rows_seen)}."""
+    from datasketches_java_spark.streaming.incremental import (
+        stateful_theta_distinct)
+    src = tmp_path / "stream_src"
+    src.mkdir()
+    for i, pdf in enumerate(batches):
+        pdf.to_parquet(src / f"b{i + 1}.parquet")
+    stream = (spark.readStream.schema(f"k string, v {vtype}")
+              .option("maxFilesPerTrigger", "1").parquet(str(src)))
+    out = stateful_theta_distinct(stream, "k", "v", lg_k=12)
+    q = (out.writeStream.format("memory").queryName(name)
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    return {r["key"]: (r["distinct_estimate"], r["rows_seen"])
+            for r in spark.sql(f"SELECT * FROM {name}").collect()}
+
+
 @pytest.mark.parametrize("vtype", list(_STREAM_VALUES))
 def test_stateful_theta_distinct_stream(spark, tmp_path, vtype):
     """applyInPandasWithState theta state: feed the same rows in TWO
@@ -177,35 +199,30 @@ def test_stateful_theta_distinct_stream(spark, tmp_path, vtype):
     value column hashes by its declared type, so the counts do not
     depend on it."""
     import pandas as pd
-    from datasketches_java_spark.streaming.incremental import (
-        stateful_theta_distinct)
     conv = _STREAM_VALUES[vtype]
-    src = tmp_path / "stream_src"
-    src.mkdir()
     # batch 1: keys a,b ; batch 2: overlapping values for a, new key c
-    pd.DataFrame({"k": ["a"] * 60 + ["b"] * 40,
-                  "v": [conv(v) for v in [*range(60), *range(40)]]}) \
-        .to_parquet(src / "b1.parquet")
-    pd.DataFrame({"k": ["a"] * 50 + ["c"] * 30,
-                  "v": [conv(v) for v in [*range(30, 80), *range(30)]]}) \
-        .to_parquet(src / "b2.parquet")
-    stream = (spark.readStream.schema(f"k string, v {vtype}")
-              .option("maxFilesPerTrigger", "1").parquet(str(src)))
-    out = stateful_theta_distinct(stream, "k", "v", lg_k=12)
-    q = (out.writeStream.format("memory").queryName(f"theta_state_{vtype}")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql(f"SELECT * FROM theta_state_{vtype}").collect()
-    # last emission per key wins (update mode emits per batch)
-    latest = {}
-    for r in rows:
-        latest[r["key"]] = (r["distinct_estimate"], r["rows_seen"])
+    latest = _stateful_latest(spark, tmp_path, vtype, [
+        pd.DataFrame({"k": ["a"] * 60 + ["b"] * 40,
+                      "v": [conv(v) for v in [*range(60), *range(40)]]}),
+        pd.DataFrame({"k": ["a"] * 50 + ["c"] * 30,
+                      "v": [conv(v) for v in [*range(30, 80), *range(30)]]}),
+    ], f"theta_state_{vtype}")
     assert round(latest["a"][0]) == 80   # 0..79 across both batches
     assert latest["a"][1] == 110
     assert round(latest["b"][0]) == 40
     assert round(latest["c"][0]) == 30
+
+
+def test_stateful_theta_distinct_bigint_with_null(spark, tmp_path):
+    """A NULL in a BIGINT micro-batch must not turn the longs into
+    doubles: 2^53 and 2^53+1 stay two distinct values, and the NULL
+    row is counted as seen but not sketched."""
+    import pandas as pd
+    latest = _stateful_latest(spark, tmp_path, "long", [
+        pd.DataFrame({"k": ["a"] * 3,
+                      "v": pd.array([2**53, 2**53 + 1, None], dtype="Int64")}),
+    ], "theta_state_bigint_null")
+    assert latest["a"] == (2.0, 3)
 
 
 def test_media_exact_dedup_via_binary_theta(spark, media):
