@@ -8,8 +8,11 @@ cluster (AQE, skew join, Arrow).
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+from datasketches_java_spark.functions import worker_daemon
 
 
 def default_cores() -> int:
@@ -28,30 +31,33 @@ def get_spark(app_name: str = "datasketches_java_spark",
     """`master` overrides the default local[cores], e.g. with
     local-cluster[N, cores, mem] (separate executor JVMs + real shuffle
     transport), for which SPARK_HOME is pointed at the pyspark
-    distribution and the repo is put on the executors' PYTHONPATH
-    (what --py-files provides on a real cluster).  ``cores`` defaults
-    to ``default_cores()``, ``driver_memory`` to a quarter of physical
-    RAM clamped to 1-8 GiB (local mode runs every task in the driver's
-    heap, and the machine may be shared)."""
+    distribution.  ``cores`` defaults to ``default_cores()``,
+    ``driver_memory`` to a quarter of physical RAM clamped to 1-8 GiB
+    (local mode runs every task in the driver's heap, and the machine
+    may be shared).
+
+    On every master the package root, then any inherited PYTHONPATH, is
+    put on the Python workers' PYTHONPATH (what --py-files provides on
+    a real cluster): workers do not inherit the driver's ``sys.path``.
+    When pyspark is importable from a directory (site-packages), the
+    workers' daemon is ``functions.worker_daemon``, which drops Spark's
+    pyspark/py4j archives from their path; with pyspark only in an
+    archive the stock daemon runs."""
     cores = cores or default_cores()
     if driver_memory is None:
         mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
         driver_memory = f"{min(max(mem_mb // 4, 1024), 8192)}m"
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    executor_pythonpath = None
     if master is None:
         master = f"local[{cores}]"
     elif master.startswith("local-cluster"):
         os.environ.setdefault(
             "SPARK_HOME",
             os.path.dirname(os.path.abspath(__import__("pyspark").__file__)))
-        # separate executor JVMs spawn their own Python workers, which
-        # do NOT inherit the driver's sys.path — point them at the repo
-        # (on a real cluster this is what --py-files provides)
-        repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))))
-        executor_pythonpath = os.pathsep.join(
-            p for p in (repo_root, os.environ.get("PYTHONPATH")) if p)
+    package_root = os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    worker_pythonpath = os.pathsep.join(
+        p for p in (package_root, os.environ.get("PYTHONPATH")) if p)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -65,12 +71,13 @@ def get_spark(app_name: str = "datasketches_java_spark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
     )
     if executor_memory is not None:
         builder = builder.config("spark.executor.memory", executor_memory)
-    if executor_pythonpath is not None:
-        builder = builder.config("spark.executorEnv.PYTHONPATH",
-                                 executor_pythonpath)
+    if worker_daemon.importable_from_directory(sys.path):
+        builder = builder.config("spark.python.daemon.module",
+                                 worker_daemon.__name__)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -70,7 +70,9 @@ def pack_items(arr, dtype_code: int) -> bytes:
 def unpack_items(buf: bytes, off: int, count: int,
                  dtype_code: int) -> tuple[np.ndarray, int]:
     """``count`` items written by :func:`pack_items` at ``off`` → (items,
-    offset past them)."""
+    offset past them).  Raises ``ValueError`` when a string's length
+    prefix is negative or runs past the end of ``buf`` (a truncated or
+    corrupt image)."""
     if dtype_code == _DTYPE_LONG:
         arr = np.frombuffer(buf, dtype="<i8", count=count,
                             offset=off).astype(np.int64)
@@ -79,6 +81,9 @@ def unpack_items(buf: bytes, off: int, count: int,
     for i in range(count):
         (ln,) = struct.unpack_from("<i", buf, off)
         off += 4
+        if ln < 0 or off + ln > len(buf):
+            raise ValueError(f"string item {i} of {count}: length {ln} at "
+                             f"offset {off} exceeds the {len(buf)}-byte image")
         items[i] = buf[off:off + ln].decode("utf-8")
         off += ln
     return items, off

@@ -16,7 +16,7 @@ import numpy as np
 import pytest
 
 from datasketches_java_spark.sketches import kll_serde as ks
-from datasketches_java_spark.sketches.kll_items import KllItemsSketch
+from datasketches_java_spark.sketches.kll_items import _HDR, KllItemsSketch
 
 
 def _sk(values, dtype="long", k=2048):
@@ -135,3 +135,24 @@ def test_rejects_wrong_family_and_server():
         ks.classic_items_from_java_bytes(b"\x02\x03\x0f" + img[3:], "long")
     with pytest.raises(ValueError, match="serVer"):
         ks.classic_items_from_java_bytes(img[:1] + b"\x07" + img[2:], "long")
+
+
+# (write, read, offset of the first string's int32 length prefix)
+_STRING_READERS = {
+    "native": (KllItemsSketch.to_bytes, KllItemsSketch.from_bytes,
+               _HDR.size + 1),
+    "classic": (ks.classic_items_to_java_bytes,
+                lambda b: ks.classic_items_from_java_bytes(b, "string"), 16),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(_STRING_READERS))
+def test_string_length_past_image_or_negative_rejected(reader):
+    write, read, first_len_at = _STRING_READERS[reader]
+    img = write(_sk(["alpha", "beta", "gamma"], dtype="string"))
+    with pytest.raises(ValueError, match="exceeds"):
+        read(img[:-3])   # used to read back 'gamma' clipped to 'ga'
+    bad = bytearray(img)
+    struct.pack_into("<i", bad, first_len_at, -1)
+    with pytest.raises(ValueError, match="length -1"):
+        read(bytes(bad))
