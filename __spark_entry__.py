@@ -612,15 +612,15 @@ def _q_simhash_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
     set whenever the Hamming-12 ball recalls it (gated in
     tests/test_simhash_containment.py, which also independently recomputes
     the Hamming distances the driver no longer sees)."""
+    from datasketches_java_spark.functions.text import shingle_hashes
     from datasketches_java_spark.operators.lsh import (
-        add_signatures, simhash_hamming_pairs, verify_pairs)
+        add_simhash, simhash_hamming_pairs, verify_pairs)
     docs = _read(spark, sf, "documents")
     # lazy localCheckpoint, not persist(): computed once for both band
     # join sides and verify, blocks released with the DataFrame (no
-    # CacheManager entries across a long session); text/minhash dropped
-    # before materialization.
-    sig = (add_signatures(docs.select("doc_id", "text"), "text")
-           .select("doc_id", "shingles", "simhash")
+    # CacheManager entries across a long session).
+    sig = (add_simhash(docs.select(
+               "doc_id", shingle_hashes("text").alias("shingles")))
            .localCheckpoint(eager=False))
     pairs = simhash_hamming_pairs(sig, "doc_id", max_hamming=12)
     return _integer_jaccard_pairs(verify_pairs(pairs, sig, "doc_id"))

@@ -1,9 +1,19 @@
-"""128-permutation MinHash + 64-bit SimHash — vectorized Arrow UDFs.
+"""Shingle hashes, 128-permutation MinHash and 64-bit SimHash — numpy
+kernels over flat Arrow list buffers.
+
+Shingle hash (``shingle_hashes_flat``, the one definition): Catalyst
+hashes each token once (xxhash64, functions/text.token_hashes), and a
+w-shingle's hash is a polynomial over its w token hashes — Horner with
+an odd multiplier mod 2^64, seeded with the run length — finished with
+the murmur3 64-bit finalizer.  A doc with fewer than w tokens gets one
+shingle over all of them, so every doc, NULL and empty text included,
+has at least one.  Per doc the hashes are sorted ascending as signed
+int64 and deduplicated.
 
 Design (SURVEY.md §2.1 "MinHash relationship"): the reference's theta
 sketch is a single-hash bottom-k KMV; the LSH pipeline needs classic
 fixed-width MinHash (one minimum per permutation, Broder 1997).  Both
-are built here from the same shingle-hash arrays.
+MinHash and SimHash are built here from the same shingle-hash arrays.
 
 Permutation family: sig_j(S) = min_{h in S} (a_j * h + b_j) mod 2^64
 with odd a_j — an affine bijection of Z_2^64, i.e. a genuine
@@ -20,10 +30,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F, types as T
 
-from ..config import MINHASH_PERMS, MINHASH_SEED, SIMHASH_BITS
-from ..sketches.murmur3 import hash128_u64_pair
+from ..config import MINHASH_PERMS, MINHASH_SEED, SHINGLE_W, SIMHASH_BITS
+from ..sketches.murmur3 import _fmix64, hash128_u64_pair
 
 _EMPTY_SIG = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -42,16 +53,96 @@ _A, _B = _permutation_params()
 
 def _flatten(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Ragged array<long> column -> (values u64, row starts, row lengths)."""
-    lengths = np.fromiter((0 if v is None else len(v) for v in series),
-                          dtype=np.int64, count=len(series))
-    if lengths.sum() == 0:
-        return np.empty(0, np.uint64), np.zeros(len(series), np.int64), lengths
-    values = np.concatenate(
-        [np.asarray(v, dtype=np.int64) for v in series if v is not None and len(v)]
-    ).view(np.uint64)
-    starts = np.zeros(len(series), dtype=np.int64)
-    np.cumsum(lengths[:-1], out=starts[1:])
+    return arrow_flat(pa.array(series, pa.list_(pa.int64())))
+
+
+def arrow_flat(la) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Arrow list<int64> array -> (values u64, row starts, row lengths),
+    zero-copy where Arrow allows.  NULL rows become empty rows; a
+    sliced array's nonzero offset base is taken off the starts."""
+    if isinstance(la, pa.ChunkedArray):
+        la = la.combine_chunks()
+    offsets = la.offsets.to_numpy().astype(np.int64)
+    base = offsets[0]
+    values = la.values.to_numpy(zero_copy_only=False)
+    values = values[base: offsets[-1]].astype(np.int64).view(np.uint64)
+    starts = offsets[:-1] - base
+    lengths = np.diff(offsets)
+    if la.null_count:
+        lengths = np.where(np.asarray(la.is_valid()), lengths, 0)
     return values, starts, lengths
+
+
+def arrow_list(values: np.ndarray, offsets: np.ndarray):
+    """int64 values + (n+1) row offsets -> Arrow list<int64> array."""
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                    pa.array(values.view(np.int64)))
+
+
+_SHINGLE_MUL = np.uint64(0x9E3779B97F4A7C15)   # odd: 2^64 / golden ratio
+# any nonzero seed: keeps the zero-token run off fmix64's fixed point 0
+_SHINGLE_SEED = np.uint64(0x5BD1E9955BD1E995)
+
+
+def shingle_runs(values: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+                 w: int = SHINGLE_W) -> tuple[np.ndarray, np.ndarray]:
+    """Shingle hashes in document order from flat per-token hashes:
+    (u64 hashes, (n+1) row offsets).
+
+    The hash of a run t_1..t_m of token hashes is
+    fmix64(Horner(SEED + m; t_1..t_m)) with multiplier _SHINGLE_MUL.  A
+    doc of n >= w tokens yields its n - w + 1 windows; a doc of n < w
+    tokens (n = 0 for NULL and empty rows) yields one run over all n.
+    The full windows come from one w-step Horner over the whole flat
+    buffer; windows straddling two docs are computed and never read."""
+    n = len(lengths)
+    full = lengths >= w
+    counts = np.where(full, lengths - w + 1, 1)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        docs = np.nonzero(full)[0]
+        if docs.size:
+            win = np.full(values.size - w + 1, _SHINGLE_SEED + np.uint64(w))
+            for k in range(w):
+                win *= _SHINGLE_MUL
+                win += values[k: k + win.size]
+            n_win = counts[docs]
+            # each window's index within its doc
+            loc = np.arange(int(n_win.sum())) - np.repeat(np.cumsum(n_win) - n_win, n_win)
+            out[np.repeat(offsets[docs], n_win) + loc] = \
+                win[np.repeat(starts[docs], n_win) + loc]
+        docs = np.nonzero(~full)[0]
+        if docs.size:
+            m = lengths[docs]
+            h = _SHINGLE_SEED + m.astype(np.uint64)
+            for k in range(int(m.max(initial=0))):
+                live = m > k
+                t = values[starts[docs[live]] + k]
+                h[live] = h[live] * _SHINGLE_MUL + t
+            out[offsets[docs]] = h
+    return _fmix64(out), offsets
+
+
+def shingle_hashes_flat(values: np.ndarray, starts: np.ndarray,
+                        lengths: np.ndarray,
+                        w: int = SHINGLE_W) -> tuple[np.ndarray, np.ndarray]:
+    """Each doc's distinct shingle hashes, sorted ascending as signed
+    int64: (int64 values, (n+1) row offsets).  One lexsort on (doc,
+    value) over the whole batch, no per-doc loop; every row keeps at
+    least one shingle."""
+    runs, offsets = shingle_runs(values, starts, lengths, w)
+    n = len(lengths)
+    doc = np.repeat(np.arange(n), np.diff(offsets))
+    signed = runs.view(np.int64)
+    order = np.lexsort((signed, doc))
+    doc, signed = doc[order], signed[order]
+    keep = np.ones(signed.size, dtype=bool)
+    keep[1:] = (doc[1:] != doc[:-1]) | (signed[1:] != signed[:-1])
+    out_offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(doc[keep], minlength=n), out=out_offsets[1:])
+    return signed[keep], out_offsets
 
 
 _BLOCK_VALUES = 32768  # 256 KiB of u64 — L2-resident with the temp

@@ -1,19 +1,23 @@
-"""Text analysis columns — JVM-side Column expressions (no Python).
+"""Text analysis columns.
 
-Everything here compiles to Catalyst expressions inside whole-stage
-codegen: tokenization, w-shingling, shingle hashing, token counts,
-quality scores, language-ID heuristic, rolling fingerprints.  Each has
-a matching ANSI-SQL oracle formulation in __spark_entry__.oracle_sql().
+Tokenization, token counts, quality scores, the language-ID heuristic
+and string w-shingles are Catalyst expressions inside whole-stage
+codegen; each has a matching ANSI-SQL oracle formulation in
+__spark_entry__.oracle_sql().
 
-The shingle hash uses F.xxhash64 (the reference ships the same family,
-hash/XxHash.java:44; exact murmur3 reference-parity is only needed for
-sketch update hashes, which hash these int64s again Python-side —
-SURVEY.md §2.8).
+Shingle hashes are the exception: Catalyst hashes each token once
+(``token_hashes``, F.xxhash64 — the reference ships the same family,
+hash/XxHash.java:44), and an Arrow UDF combines each run of w token
+hashes in numpy (functions/minhash.shingle_hashes_flat, the one
+definition of a shingle hash).  Exact murmur3 reference-parity is only
+needed for sketch update hashes, which hash these int64s again
+Python-side (SURVEY.md §2.8).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, functions as F, types as T
 
 from ..config import SHINGLE_W
 
@@ -37,7 +41,13 @@ def tokens(text: Column | str) -> Column:
 
 def shingles(toks: Column, w: int = SHINGLE_W) -> Column:
     """w-word shingles as strings; short docs fall back to one shingle
-    of all tokens (keeps every doc LSH-able)."""
+    of all tokens (keeps every doc LSH-able).  The oracle-expressible
+    form: the hashed pipeline uses ``shingle_hashes``.
+
+    NOTE: the lambdas read ``toks``, and inside higher-order-function
+    lambdas a non-trivial argument subtree is re-evaluated per element
+    — O(tokens²) per doc if the tokenizer rides inside.  Bind the token
+    array to a real column first."""
     n = F.size(toks)
     full = F.transform(
         F.sequence(F.lit(0), n - F.lit(w)),
@@ -46,33 +56,41 @@ def shingles(toks: Column, w: int = SHINGLE_W) -> Column:
     return F.when(n >= F.lit(w), full).otherwise(short)
 
 
+def token_hashes(toks: Column | str) -> Column:
+    """xxhash64 of each token, in document order — O(tokens)."""
+    c = F.col(toks) if isinstance(toks, str) else toks
+    return F.transform(c, lambda t: F.xxhash64(t))
+
+
+def _shingle_udf(w: int, distinct: bool):
+    """A fresh Arrow UDF per call: a UDF object binds the SparkContext
+    it first runs in."""
+    from .minhash import arrow_flat, arrow_list, shingle_hashes_flat, shingle_runs
+
+    kernel = shingle_hashes_flat if distinct else shingle_runs
+
+    def udf(hashes: pa.Array) -> pa.Array:
+        return arrow_list(*kernel(*arrow_flat(hashes), w))
+
+    return F.arrow_udf(udf, T.ArrayType(T.LongType()))
+
+
 def shingle_hashes(text: Column | str, w: int = SHINGLE_W) -> Column:
     """Distinct int64 shingle-set of a document — the input to MinHash,
-    SimHash and exact-Jaccard verification.  Sorted for deterministic
-    downstream numpy ops.
-
-    NOTE: inside higher-order-function lambdas, non-trivial argument
-    subtrees are re-evaluated per element — O(tokens²) per doc if the
-    tokenizer rides inside.  Hot paths must bind the token array to a
-    real column first and use ``shingle_hashes_from_tokens``
-    (operators/lsh.add_signatures does)."""
+    SimHash and exact-Jaccard verification.  Sorted ascending as signed
+    int64; NULL and empty texts get one shingle, like short docs."""
     return shingle_hashes_from_tokens(tokens(text), w)
 
 
 def shingle_hashes_from_tokens(toks: Column | str, w: int = SHINGLE_W) -> Column:
-    """Same as shingle_hashes but over a pre-bound token-array column —
-    the O(tokens·w) path."""
-    c = F.col(toks) if isinstance(toks, str) else toks
-    sh = shingles(c, w)
-    return F.array_sort(F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s))))
+    """Same as shingle_hashes but over a token-array column."""
+    return _shingle_udf(w, True)(token_hashes(toks))
 
 
 def ordered_shingle_hashes(toks: Column | str, w: int = SHINGLE_W) -> Column:
     """Shingle hashes in DOCUMENT ORDER (not sorted/deduped) — the
-    input winnowing fingerprints require; bind ``toks`` to a real
-    column first (see shingle_hashes NOTE)."""
-    c = F.col(toks) if isinstance(toks, str) else toks
-    return F.transform(shingles(c, w), lambda s: F.xxhash64(s))
+    input winnowing fingerprints require."""
+    return _shingle_udf(w, False)(token_hashes(toks))
 
 
 def exact_jaccard(inter: Column, uni: Column) -> Column:

@@ -12,14 +12,15 @@ lineage would grow unboundedly across iterations, so every round is
 cut with localCheckpoint (cluster deployments should set a checkpoint
 dir and use checkpoint(); the dedup plan's parquet stage checkpoints
 cover durable resume).  Convergence is detected by an exact
-edge-set fixpoint (count of changed edges == 0); a run that has not
-reached it after ``max_iterations`` rounds raises instead of returning
-partial components.
+edge-set fixpoint: the (count, xor-hash) fingerprint of the edge set,
+observed inside each round's checkpoint job, stops changing.  A run
+that has not reached it after ``max_iterations`` rounds raises instead
+of returning partial components.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -68,6 +69,20 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst"))
 
 
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eagerly local-checkpoint a canonical edge set and return it with
+    its fingerprint (count, bit_xor of xxhash64(src, dst)), observed
+    inside the checkpoint's own job rather than by a second action.
+    The set is distinct, so the pair identifies it (collision odds
+    ~2^-64 per round)."""
+    obs = Observation()
+    out = edges.observe(
+        obs, F.count(F.lit(1)).alias("c"),
+        F.expr("bit_xor(xxhash64(src, dst))").alias("h")).localCheckpoint()
+    m = obs.get
+    return out, (m["c"], m["h"])
+
+
 def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
                          max_iterations: int = 50) -> DataFrame:
     """Edge list → (id, component) with component = min node id of the
@@ -76,29 +91,18 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     Raises RuntimeError if the edge set has not reached its fixpoint
     after ``max_iterations`` rounds.
     """
-    e = _canonical(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    e = e.localCheckpoint()
-
-    def fingerprint(df: DataFrame):
-        # one narrow aggregate instead of two exceptAll shuffles; the
-        # edge set is canonical+distinct so (count, sum-of-hash)
-        # identifies it (collision odds ~2^-64 per iteration)
-        row = df.agg(F.count(F.lit(1)).alias("c"),
-                     F.expr("bit_xor(xxhash64(src, dst))").alias("h")).first()
-        return row["c"], row["h"]
-
-    fp = fingerprint(e)
+    e, fp = _checkpoint(_canonical(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))))
     for _ in range(max_iterations):
         # the intermediate checkpoint between the two star ops both cuts
         # plan growth and sidesteps a Catalyst resolver failure ("key
         # not found" during optimization) on the nested self-join over a
         # shared union subtree that the composed plan otherwise forms
-        # lazy: the large-star RDD materializes inside e2's job (one job
-        # per round), while the logical plan is cut immediately
+        # lazy: the large-star RDD materializes inside the small-star
+        # checkpoint's job (one job per round), while the logical plan
+        # is cut immediately
         ls = _large_star(e).localCheckpoint(eager=False)
-        e2 = _canonical(_small_star(ls)).localCheckpoint()
-        fp2 = fingerprint(e2)
-        e = e2
+        e, fp2 = _checkpoint(_canonical(_small_star(ls)))
         if fp2 == fp:
             break
         fp = fp2

@@ -47,58 +47,65 @@ from ..functions.text import exact_jaccard
 
 def add_signatures(df: DataFrame, text_col: str = "text",
                    shingle_col: str = "shingles",
-                   minhash_col: str = "minhash",
-                   simhash_col: str = "simhash") -> DataFrame:
-    """text → distinct shingle-hash array → 128-perm MinHash + SimHash.
+                   minhash_col: str = "minhash") -> DataFrame:
+    """text → distinct shingle-hash array → 128-perm MinHash.
 
-    Shingling is JVM-side (functions/text.py, token column bound once).
-    Signatures run in ONE ``mapInArrow`` pass: the list column arrives
-    as a flat value buffer + offsets, numpy computes both signatures
-    over the flat buffer, and the outputs are rebuilt as Arrow
-    ListArrays directly — no pandas Series of per-row arrays on either
-    side (that object churn, not the math, was 85 % of the stage cost).
+    Catalyst tokenizes and hashes each token once
+    (functions/text.token_hashes); ONE ``mapInArrow`` pass then turns
+    the token hashes into each doc's shingle set
+    (functions/minhash.shingle_hashes_flat) and its MinHash signature,
+    over the flat Arrow value buffer + offsets, and rebuilds both as
+    Arrow ListArrays directly — no string per shingle on the JVM, no
+    pandas Series of per-row arrays.  SimHash is ``add_simhash``, for
+    the callers that read it.
     """
     import pyarrow as pa
 
-    from ..functions.minhash import minhash_flat, simhash_flat
-    from ..functions.text import shingle_hashes_from_tokens, tokens
+    from ..functions.minhash import (
+        arrow_flat, arrow_list, minhash_flat, shingle_hashes_flat)
+    from ..functions.text import token_hashes, tokens
     from pyspark.sql import types as T
 
-    df = (df.withColumn("_toks", tokens(text_col))
-            .withColumn(shingle_col, shingle_hashes_from_tokens("_toks"))
-            .drop("_toks"))
-
+    df = df.withColumn(shingle_col, token_hashes(tokens(text_col)))
     out_schema = T.StructType(
-        list(df.schema)
-        + [T.StructField(minhash_col, T.ArrayType(T.LongType())),
-           T.StructField(simhash_col, T.LongType())])
+        list(df.schema) + [T.StructField(minhash_col, T.ArrayType(T.LongType()))])
     sh_idx = df.columns.index(shingle_col)
-    out_names = [*df.columns, minhash_col, simhash_col]
+    out_names = [*df.columns, minhash_col]
 
     def gen(batches):
         for batch in batches:
-            la = batch.column(sh_idx)
-            if isinstance(la, pa.ChunkedArray):
-                la = la.combine_chunks()
-            offsets = la.offsets.to_numpy().astype(np.int64)
-            base = offsets[0]          # sliced arrays have nonzero base
-            values = la.values.to_numpy(zero_copy_only=False)
-            values = values[base: offsets[-1]].astype(np.int64).view(np.uint64)
-            starts = offsets[:-1] - base
-            lengths = np.diff(offsets)
-            if la.null_count:          # null list rows -> empty rows
-                valid = np.asarray(la.is_valid())
-                lengths = np.where(valid, lengths, 0)
-            sig = minhash_flat(values, starts, lengths)
-            sim = simhash_flat(values, starts, lengths)
-            n = len(lengths)
-            mh = pa.ListArray.from_arrays(
-                pa.array(np.arange(n + 1, dtype=np.int32) * sig.shape[1]),
-                pa.array(sig.ravel()))
+            sh, offsets = shingle_hashes_flat(*arrow_flat(batch.column(sh_idx)))
+            sig = minhash_flat(sh.view(np.uint64), offsets[:-1], np.diff(offsets))
+            cols = list(batch.columns)
+            cols[sh_idx] = arrow_list(sh, offsets)
+            n = len(offsets) - 1
+            cols.append(arrow_list(sig.ravel(),
+                                   np.arange(n + 1, dtype=np.int64) * sig.shape[1]))
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
+
+    return df.mapInArrow(gen, out_schema)
+
+
+def add_simhash(df: DataFrame, shingle_col: str = "shingles",
+                simhash_col: str = "simhash") -> DataFrame:
+    """Append the 64-bit SimHash of each row's shingle-hash array, in
+    one ``mapInArrow`` over the flat Arrow buffer
+    (functions/minhash.simhash_flat)."""
+    import pyarrow as pa
+
+    from ..functions.minhash import arrow_flat, simhash_flat
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(
+        list(df.schema) + [T.StructField(simhash_col, T.LongType())])
+    sh_idx = df.columns.index(shingle_col)
+    out_names = [*df.columns, simhash_col]
+
+    def gen(batches):
+        for batch in batches:
+            sim = simhash_flat(*arrow_flat(batch.column(sh_idx)))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [mh, pa.array(sim)],
-                names=out_names)
+                [*batch.columns, pa.array(sim)], names=out_names)
 
     return df.mapInArrow(gen, out_schema)
 

@@ -1,6 +1,6 @@
 """The north-star plan: near-duplicate detection + clustering.
 
-text → shingles → MinHash128/SimHash64 → LSH band buckets → capped
+text → shingles → MinHash128 → LSH band buckets → capped
 candidate explode → exact-Jaccard verification → connected components
 → cluster assignments, with optional per-stage checkpointing
 (operators/checkpoint.py) and skew/cardinality metrics from the sketch
@@ -9,9 +9,9 @@ UDAF library.
 This is the one composition of those stages: scripts/submit_dedup.py
 (the spark-submit job), bench.py and the entry point's LSH queries
 all call ``dedup_pipeline``.  Every stage is a DataFrame
-transformation; the only Python in the hot path is the two
-Arrow-batched signature UDFs, and the plan object is stateless so the
-same code runs at any parallelism.
+transformation; the only Python in the hot path is the one
+``mapInArrow`` that builds shingle sets and MinHash signatures, and
+the plan object is stateless so the same code runs at any parallelism.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from ..operators.suffix_array import attach_texts, pair_lcs
 
 @dataclass
 class DedupResult:
-    signatures: DataFrame     # id, shingles, minhash, simhash, _sid
+    signatures: DataFrame     # id, shingles, minhash, _sid
     dup_pairs: DataFrame      # id_a, id_b, jaccard, i, u
     clusters: DataFrame       # id, cluster_id
     hot_buckets: DataFrame    # band, band_hash, bucket_size

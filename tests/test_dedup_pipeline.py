@@ -147,6 +147,26 @@ def test_connected_components_chain_and_star(spark):
     assert star_ids == {100}
 
 
+def test_connected_components_runs_no_action_beyond_checkpoints(spark, monkeypatch):
+    """Each round's (count, xor-hash) fingerprint is observed inside
+    the round's eager checkpoint job: CC runs no action of its own."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(20)] + [(40, 41)],
+                                  "id_a long, id_b long")
+    DataFrame = type(edges)
+    calls = []
+    for name in ("first", "head", "take", "collect", "count", "toPandas",
+                 "toArrow"):
+        def spy(df, *a, _name=name, _orig=getattr(DataFrame, name), **k):
+            calls.append(_name)
+            return _orig(df, *a, **k)
+        monkeypatch.setattr(DataFrame, name, spy)
+    comp = connected_components(edges)
+    assert calls == []
+    monkeypatch.undo()
+    got = {r["id"]: r["component"] for r in comp.collect()}
+    assert got == {**{i: 0 for i in range(21)}, 40: 40, 41: 40}
+
+
 def test_connected_components_raises_when_not_converged(spark):
     """Too few rounds for a long path must fail loudly, not return
     partial components."""

@@ -9,6 +9,12 @@ every input type the reference's ``update`` overloads take: BIGINT
 The numpy side hashes strings and bytes with the scalar murmur3, not
 the batch kernel the surfaces use.  KLL and frequent items must agree
 on n, min, max, quantiles and item estimates.
+
+Byte identity across surfaces holds for theta, HLL and CPC, and for
+KLL only in exact mode.  Once a key holds more than level 0's capacity
+(k = 200), the DataFrame agg merges per-batch partials while the SQL
+aggregate updates one sketch, so they compact in a different order and
+their images differ; both must still answer within KLL's rank error.
 """
 
 from __future__ import annotations
@@ -23,7 +29,7 @@ from datasketches_java_spark.config import DEFAULT_UPDATE_SEED as SEED
 from datasketches_java_spark.functions import sketch_aggs as A
 from datasketches_java_spark.functions.sql_registry import (
     register_sql_functions)
-from datasketches_java_spark.sketches import cpc, hll, theta
+from datasketches_java_spark.sketches import cpc, hll, kll, theta
 from datasketches_java_spark.sketches.frequencies import ItemsSketch
 from datasketches_java_spark.sketches.hash_adaptors import canonical_double_bits
 from datasketches_java_spark.sketches.kll import KllDoublesSketch
@@ -140,6 +146,27 @@ def test_kll_and_frequent_items_agree_across_surfaces(spark, typed):
         items = [x[4] for x in ROWS if x[0] == r[0] and x[4] is not None]
         for it in set(items) | {"zzz"}:
             assert a.estimate(it) == b.estimate(it) == items.count(it)
+
+
+def test_kll_estimation_mode_within_rank_error(spark):
+    """A 5,000-value group, spread over four partitions: both surfaces'
+    quantiles at 0.01..0.99 lie within rank_error(200) of exact ranks."""
+    register_sql_functions(spark)
+    vals = np.random.default_rng(17).normal(size=5000)
+    df = spark.createDataFrame([(1, float(v)) for v in vals],
+                               "g int, d double").repartition(4)
+    df.createOrReplaceTempView("kll_estimation")
+    sql_img = spark.sql("SELECT kll_sketch_build(d) FROM kll_estimation "
+                        "GROUP BY g").first()[0]
+    df_img = A.kll_sketch_agg(df, "d", by=["g"]).first()[1]
+    ranks = [i / 100 for i in range(1, 100)]
+    exact = np.sort(vals)
+    eps = kll.rank_error(200)
+    for img in (df_img, sql_img):
+        sk = KllDoublesSketch.from_bytes(bytes(img))
+        assert sk.n == 5000 and sk._total_retained() < 5000
+        true = np.searchsorted(exact, sk.quantiles(ranks), side="right") / 5000
+        assert np.abs(true - np.array(ranks)).max() <= eps
 
 
 def test_unsupported_type_raises_naming_it():
