@@ -622,7 +622,7 @@ def _q_simhash_near_pairs(spark: SparkSession, sf: str) -> DataFrame:
     sig = (add_simhash(docs.select(
                "doc_id", shingle_hashes("text").alias("shingles")))
            .localCheckpoint(eager=False))
-    pairs = simhash_hamming_pairs(sig, "doc_id", max_hamming=12)
+    pairs = simhash_hamming_pairs(sig, "doc_id")
     return _integer_jaccard_pairs(verify_pairs(pairs, sig, "doc_id"))
 
 
@@ -636,7 +636,7 @@ def _q_winnow_fingerprints_documents(spark: SparkSession, sf: str) -> DataFrame:
     production path uses xxhash64 k-grams (same operator, cheaper
     hash).  Window semantics under oracle: full windows only
     (positions p ≤ n-7); docs with ≤ 8 grams contribute their global
-    min, exactly winnow_batch's short-doc rule."""
+    min, exactly winnow_flat's short-doc rule."""
     from datasketches_java_spark.functions.minhash import winnow_fingerprints
     from datasketches_java_spark.functions.text import shingles, tokens
     docs = _read(spark, sf, "documents")

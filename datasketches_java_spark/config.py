@@ -28,6 +28,9 @@ SHINGLE_W = 5  # 5-word shingles (FIXTURES.md)
 MINHASH_PERMS = 128  # 128-permutation MinHash (BASELINE.json north_star)
 MINHASH_SEED = DEFAULT_UPDATE_SEED
 SIMHASH_BITS = 64
+# SimHash near-duplicate radius: pairs within this Hamming distance on
+# the 64-bit fingerprint (operators/lsh.simhash_hamming_pairs).
+SIMHASH_MAX_HAMMING = 12
 # LSH banding: 32 bands x 4 rows. Detection probability at Jaccard J is
 # 1-(1-J^r)^b: J=0.8 -> 0.99998, J=0.7 -> 0.9998 — comfortably above the
 # recall >= 0.99 target (BASELINE.json:14); false candidates at J~0.05 are

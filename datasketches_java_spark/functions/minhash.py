@@ -1,5 +1,11 @@
-"""Shingle hashes, 128-permutation MinHash and 64-bit SimHash — numpy
-kernels over flat Arrow list buffers.
+"""Shingle hashes, 128-permutation MinHash, 64-bit SimHash and
+winnowing fingerprints — numpy kernels over flat Arrow list buffers.
+
+Every kernel takes ``arrow_flat``'s (u64 values, row starts, row
+lengths) and is reached only through Arrow: operators/lsh's
+``mapInArrow`` passes, the functions/text shingle UDFs and
+``winnow_fingerprints`` cross the UDF boundary once per Arrow batch,
+with no pandas Series and no per-row Python.
 
 Shingle hash (``shingle_hashes_flat``, the one definition): Catalyst
 hashes each token once (xxhash64, functions/text.token_hashes), and a
@@ -29,9 +35,8 @@ reference's per-item update loop (theta/HeapQuickSelectSketch.java:239).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import Column, functions as F, types as T
 
 from ..config import MINHASH_PERMS, MINHASH_SEED, SHINGLE_W, SIMHASH_BITS
 from ..sketches.murmur3 import _fmix64, hash128_u64_pair
@@ -49,11 +54,6 @@ def _permutation_params(n_perms: int = MINHASH_PERMS,
 
 
 _A, _B = _permutation_params()
-
-
-def _flatten(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Ragged array<long> column -> (values u64, row starts, row lengths)."""
-    return arrow_flat(pa.array(series, pa.list_(pa.int64())))
 
 
 def arrow_flat(la) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -77,6 +77,16 @@ def arrow_list(values: np.ndarray, offsets: np.ndarray):
     """int64 values + (n+1) row offsets -> Arrow list<int64> array."""
     return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
                                     pa.array(values.view(np.int64)))
+
+
+def list_udf(kernel, **kw):
+    """Arrow UDF applying a flat kernel, (values, starts, lengths, **kw)
+    -> (values, offsets), to an array<long> column.  Build one per call:
+    a UDF object binds the SparkContext it first runs in."""
+    def udf(la: pa.Array) -> pa.Array:
+        return arrow_list(*kernel(*arrow_flat(la), **kw))
+
+    return F.arrow_udf(udf, T.ArrayType(T.LongType()))
 
 
 _SHINGLE_MUL = np.uint64(0x9E3779B97F4A7C15)   # odd: 2^64 / golden ratio
@@ -125,17 +135,14 @@ def shingle_runs(values: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
     return _fmix64(out), offsets
 
 
-def shingle_hashes_flat(values: np.ndarray, starts: np.ndarray,
-                        lengths: np.ndarray,
-                        w: int = SHINGLE_W) -> tuple[np.ndarray, np.ndarray]:
-    """Each doc's distinct shingle hashes, sorted ascending as signed
-    int64: (int64 values, (n+1) row offsets).  One lexsort on (doc,
-    value) over the whole batch, no per-doc loop; every row keeps at
-    least one shingle."""
-    runs, offsets = shingle_runs(values, starts, lengths, w)
-    n = len(lengths)
+def _distinct_per_doc(values: np.ndarray,
+                      offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each doc's distinct values sorted ascending as signed int64:
+    (int64 values, (n+1) row offsets).  One lexsort on (doc, value)
+    over the whole batch, no per-doc loop."""
+    n = len(offsets) - 1
     doc = np.repeat(np.arange(n), np.diff(offsets))
-    signed = runs.view(np.int64)
+    signed = values.view(np.int64)
     order = np.lexsort((signed, doc))
     doc, signed = doc[order], signed[order]
     keep = np.ones(signed.size, dtype=bool)
@@ -143,6 +150,15 @@ def shingle_hashes_flat(values: np.ndarray, starts: np.ndarray,
     out_offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(np.bincount(doc[keep], minlength=n), out=out_offsets[1:])
     return signed[keep], out_offsets
+
+
+def shingle_hashes_flat(values: np.ndarray, starts: np.ndarray,
+                        lengths: np.ndarray,
+                        w: int = SHINGLE_W) -> tuple[np.ndarray, np.ndarray]:
+    """Each doc's distinct shingle hashes, sorted ascending as signed
+    int64: (int64 values, (n+1) row offsets).  Every row keeps at
+    least one shingle."""
+    return _distinct_per_doc(*shingle_runs(values, starts, lengths, w))
 
 
 _BLOCK_VALUES = 32768  # 256 KiB of u64 — L2-resident with the temp
@@ -194,14 +210,6 @@ def minhash_flat(values: np.ndarray, starts: np.ndarray,
     return out.view(np.int64)
 
 
-def minhash_batch(series: pd.Series, n_perms: int = MINHASH_PERMS) -> np.ndarray:
-    """(n_docs, n_perms) uint64 MinHash signatures for a pandas
-    Series of shingle-hash arrays — flat-buffer kernel, no per-row
-    Python."""
-    values, starts, lengths = _flatten(series)
-    return minhash_flat(values, starts, lengths, n_perms)
-
-
 def simhash_flat(values: np.ndarray, starts: np.ndarray,
                  lengths: np.ndarray, bits: int = SIMHASH_BITS) -> np.ndarray:
     """int64 SimHash per doc: majority vote per bit over shingle
@@ -238,75 +246,45 @@ def simhash_flat(values: np.ndarray, starts: np.ndarray,
     return out.view(np.int64)
 
 
-def simhash_batch(series: pd.Series, bits: int = SIMHASH_BITS) -> np.ndarray:
-    """int64 SimHash fingerprints for a pandas Series of shingle-hash
-    arrays (bit-majority over the flat buffer)."""
-    values, starts, lengths = _flatten(series)
-    return simhash_flat(values, starts, lengths, bits)
+def winnow_flat(values: np.ndarray, starts: np.ndarray, lengths: np.ndarray,
+                window: int = 8) -> tuple[np.ndarray, np.ndarray]:
+    """Winnowing fingerprints (Schleimer et al., SIGMOD'03) over per-doc
+    k-gram hash sequences: the minimum (as u64) of each sliding window
+    of ``window`` hashes, per doc distinct and sorted ascending as
+    signed int64: (int64 values, (n+1) row offsets).  Any shared run of
+    >= window k-grams yields a shared fingerprint.  A doc of 1..window
+    hashes has one fingerprint, its minimum; an empty or NULL row none.
 
-
-def winnow_batch(series: pd.Series, window: int = 8) -> list:
-    """Winnowing fingerprints (Schleimer et al., SIGMOD'03) over
-    per-doc k-gram hash sequences: minimum hash of each sliding
-    window, deduplicated — the rolling-hash document fingerprint
-    guaranteeing any shared run of ≥ window k-grams yields a shared
-    fingerprint.
-
-    Fully batch-vectorized over the flat value buffer (the same
-    starts/lengths layout as minhash_flat): ONE sliding-window min
-    across all documents' concatenated hashes, a gather of the
-    in-document window positions, and one lexsort-based per-doc
-    dedupe — no per-document Python loop."""
-    values, starts, lengths = _flatten(series)
+    One sliding-window min over the whole flat buffer (windows that
+    straddle two docs are computed and never read), a gather of each
+    doc's window positions, and one lexsort-based per-doc dedupe."""
     n = len(lengths)
-    results: list = [[] for _ in range(n)]
-    if values.size == 0:
-        return results
-
-    nonempty = np.nonzero(lengths > 0)[0]
-    # per-doc global min covers every doc with length <= window
-    doc_min = np.minimum.reduceat(values, starts[nonempty]).view(np.int64)
-    short = lengths[nonempty] <= window
-    for i, mn in zip(nonempty[short], doc_min[short]):
-        results[i] = [int(mn)]
-
-    long_docs = nonempty[~short]
-    if long_docs.size == 0:
-        return results
-    # one windowed min over the whole flat buffer; windows that span
-    # document boundaries exist in `sw` but are never gathered below
-    sw = np.lib.stride_tricks.sliding_window_view(values, window).min(axis=1)
-    n_wins = lengths[long_docs] - window + 1
-    total = int(n_wins.sum())
-    doc_rep = np.repeat(np.arange(long_docs.size), n_wins)
-    # position within each doc: global arange minus each doc's offset
-    win_off = np.zeros(long_docs.size, dtype=np.int64)
-    np.cumsum(n_wins[:-1], out=win_off[1:])
-    pos = np.repeat(starts[long_docs] - win_off, n_wins) + np.arange(total)
-    w = sw[pos].view(np.int64)
-    # per-doc sorted dedupe in one lexsort
-    order = np.lexsort((w, doc_rep))
-    ds, ws = doc_rep[order], w[order]
-    keep = np.ones(total, dtype=bool)
-    keep[1:] = (ds[1:] != ds[:-1]) | (ws[1:] != ws[:-1])
-    ds, ws = ds[keep], ws[keep]
-    counts = np.bincount(ds, minlength=long_docs.size)
-    bounds = np.cumsum(counts[:-1])
-    for i, chunk in zip(long_docs, np.split(ws, bounds)):
-        results[i] = chunk.tolist()
-    return results
+    long_doc = lengths > window
+    n_wins = np.where(long_doc, lengths - window + 1, np.minimum(lengths, 1))
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(n_wins, out=offsets[1:])
+    out = np.empty(int(offsets[-1]), dtype=np.uint64)
+    docs = np.nonzero(~long_doc & (lengths > 0))[0]
+    if docs.size:
+        m = lengths[docs]
+        mn = values[starts[docs]]
+        for k in range(1, int(m.max())):
+            live = m > k
+            mn[live] = np.minimum(mn[live], values[starts[docs[live]] + k])
+        out[offsets[docs]] = mn
+    docs = np.nonzero(long_doc)[0]
+    if docs.size:
+        sw = np.lib.stride_tricks.sliding_window_view(values, window).min(axis=1)
+        n_win = n_wins[docs]
+        # each window's index within its doc
+        loc = np.arange(int(n_win.sum())) - np.repeat(np.cumsum(n_win) - n_win, n_win)
+        out[np.repeat(offsets[docs], n_win) + loc] = \
+            sw[np.repeat(starts[docs], n_win) + loc]
+    return _distinct_per_doc(out, offsets)
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def winnow_fingerprints(kgram_hashes: pd.Series) -> pd.Series:
+def winnow_fingerprints(kgram_hashes: Column | str) -> Column:
     """Winnowing over an (ordered!) k-gram hash array column — feed it
     shingles in document order, NOT the sorted distinct set."""
-    return pd.Series(winnow_batch(kgram_hashes))
+    return list_udf(winnow_flat)(kgram_hashes)
 
-
-def hamming64(a, b):
-    """JVM-side Hamming distance between two int64 SimHash columns —
-    bit_count of xor, stays inside codegen."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(ca.bitwiseXOR(cb))

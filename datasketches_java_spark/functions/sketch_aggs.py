@@ -481,16 +481,21 @@ def tuple_sketch_agg(df: DataFrame, key_col: str, value_cols: list[str],
     """groupBy(by).agg(tuple_sketch(key, values)) — distinct keys with
     per-key summary algebra (tuple/UpdatableSketch.java:40).
 
-    ``values_dtype="long"`` carries int64 summaries end-to-end
-    (IntegerSummary counterpart): integer totals never touch a float,
-    so exact-mode sums are order/partition deterministic.
+    Keys are hashed by their type like theta's values
+    (``sketch_spec.hash_pairs``); a row whose key is NULL or empty is
+    dropped with its values.  ``values_dtype="long"`` carries int64
+    summaries end-to-end (IntegerSummary counterpart): integer totals
+    never touch a float, so exact-mode sums are order/partition
+    deterministic.
     """
     np_dtype = np.int64 if values_dtype == "long" else np.float64
 
     def build(keys: pa.Array, *values: pa.Array) -> bytes:
-        vals = np.column_stack([to_numpy(v, np_dtype) for v in values])
-        return tpl.sketch_keyed_values(to_numpy(keys, np.int64), vals, lg_k,
-                                       seed, mode, values_dtype=np_dtype).to_bytes()
+        keep = S.kept(keys)
+        vals = np.column_stack([to_numpy(v, np_dtype)[keep] for v in values])
+        uh = S.hash_pairs(keys, seed)[0] >> np.uint64(1)
+        return tpl.from_update_hashes(uh, vals, lg_k, seed, mode,
+                                      values_dtype=np_dtype).to_bytes()
 
     return _two_phase(df, by, [key_col, *value_cols], S.Spec(
         build, lambda imgs: tpl.union_many(

@@ -27,6 +27,7 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 
@@ -64,26 +65,39 @@ def to_numpy(values: pa.Array, dtype) -> np.ndarray:
     return values.to_numpy(zero_copy_only=False).astype(dtype)
 
 
+def _is_bytes(t: pa.DataType) -> bool:
+    return (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t))
+
+
+def kept(values: pa.Array) -> np.ndarray:
+    """Mask of the rows ``hash_pairs`` hashes: non-NULL, and non-empty
+    for STRING and BINARY.  Callers drop a parallel column with it."""
+    keep = np.asarray(values.is_valid(), dtype=bool)
+    if _is_bytes(values.type):
+        keep &= np.asarray(pc.binary_length(values).fill_null(0)) > 0
+    return keep
+
+
 def hash_pairs(values: pa.Array, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """murmur3 x64-128 (h1, h2) of the non-NULL, non-empty values,
     dispatched on the Arrow type (see the module docstring)."""
     t = values.type
-    values = values.drop_null()
+    keep = kept(values)
+    if not keep.all():
+        values = values.filter(pa.array(keep))
     if pa.types.is_integer(t):
         return hash128_u64(to_numpy(values, np.int64), seed)
     if pa.types.is_floating(t):
         return hash128_u64(canonical_double_bits(to_numpy(values, np.float64)),
                            seed)
-    if (pa.types.is_string(t) or pa.types.is_large_string(t)
-            or pa.types.is_binary(t) or pa.types.is_large_binary(t)):
+    if _is_bytes(t):
         a = values.cast(pa.large_binary())
         _, offsets, data = a.buffers()
         offsets = np.frombuffer(offsets, np.int64)[a.offset: a.offset + len(a) + 1]
         flat = (np.frombuffer(data, np.uint8) if data is not None
                 else np.empty(0, np.uint8))
-        lengths = np.diff(offsets)
-        keep = lengths > 0
-        return hash128_bytes_batch(flat, offsets[:-1][keep], lengths[keep], seed)
+        return hash128_bytes_batch(flat, offsets[:-1], np.diff(offsets), seed)
     raise TypeError(f"cannot sketch values of type {t}: expected an "
                     "integral, floating, STRING or BINARY column")
 

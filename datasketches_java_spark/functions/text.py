@@ -16,8 +16,7 @@ Python-side (SURVEY.md §2.8).
 
 from __future__ import annotations
 
-import pyarrow as pa
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import Column, functions as F
 
 from ..config import SHINGLE_W
 
@@ -62,19 +61,6 @@ def token_hashes(toks: Column | str) -> Column:
     return F.transform(c, lambda t: F.xxhash64(t))
 
 
-def _shingle_udf(w: int, distinct: bool):
-    """A fresh Arrow UDF per call: a UDF object binds the SparkContext
-    it first runs in."""
-    from .minhash import arrow_flat, arrow_list, shingle_hashes_flat, shingle_runs
-
-    kernel = shingle_hashes_flat if distinct else shingle_runs
-
-    def udf(hashes: pa.Array) -> pa.Array:
-        return arrow_list(*kernel(*arrow_flat(hashes), w))
-
-    return F.arrow_udf(udf, T.ArrayType(T.LongType()))
-
-
 def shingle_hashes(text: Column | str, w: int = SHINGLE_W) -> Column:
     """Distinct int64 shingle-set of a document — the input to MinHash,
     SimHash and exact-Jaccard verification.  Sorted ascending as signed
@@ -84,13 +70,15 @@ def shingle_hashes(text: Column | str, w: int = SHINGLE_W) -> Column:
 
 def shingle_hashes_from_tokens(toks: Column | str, w: int = SHINGLE_W) -> Column:
     """Same as shingle_hashes but over a token-array column."""
-    return _shingle_udf(w, True)(token_hashes(toks))
+    from .minhash import list_udf, shingle_hashes_flat
+    return list_udf(shingle_hashes_flat, w=w)(token_hashes(toks))
 
 
 def ordered_shingle_hashes(toks: Column | str, w: int = SHINGLE_W) -> Column:
     """Shingle hashes in DOCUMENT ORDER (not sorted/deduped) — the
     input winnowing fingerprints require."""
-    return _shingle_udf(w, False)(token_hashes(toks))
+    from .minhash import list_udf, shingle_runs
+    return list_udf(shingle_runs, w=w)(token_hashes(toks))
 
 
 def exact_jaccard(inter: Column, uni: Column) -> Column:

@@ -83,16 +83,16 @@ def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
     return out, (m["c"], m["h"])
 
 
-def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-                         max_iterations: int = 50) -> DataFrame:
-    """Edge list → (id, component) with component = min node id of the
-    component.  Nodes appearing only in ``edges`` are covered; isolated
-    nodes are the caller's concern (left-join and coalesce to self).
+def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
+    """Edge list (id_a, id_b) → (id, component) with component = min
+    node id of the component.  Nodes appearing only in ``edges`` are
+    covered; isolated nodes are the caller's concern (left-join and
+    coalesce to self).
     Raises RuntimeError if the edge set has not reached its fixpoint
     after ``max_iterations`` rounds.
     """
     e, fp = _checkpoint(_canonical(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))))
     for _ in range(max_iterations):
         # the intermediate checkpoint between the two star ops both cuts
         # plan growth and sidesteps a Catalyst resolver failure ("key
@@ -120,11 +120,11 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
         F.min("component").alias("component"))
 
 
-def assign_clusters(df: DataFrame, edges: DataFrame, id_col: str,
-                    src: str = "id_a", dst: str = "id_b") -> DataFrame:
-    """Attach cluster ids to every row of ``df``; singletons get their
-    own id (cluster_id = min member id, deterministic)."""
-    comp = connected_components(edges, src, dst).withColumnRenamed("id", id_col)
+def assign_clusters(df: DataFrame, edges: DataFrame, id_col: str) -> DataFrame:
+    """Attach cluster ids to every row of ``df`` from an (id_a, id_b)
+    edge list; singletons get their own id (cluster_id = min member
+    id, deterministic)."""
+    comp = connected_components(edges).withColumnRenamed("id", id_col)
     # comp comes out of the iterative fixpoint (checkpointed, no
     # Catalyst stats) so Spark would default to sort-merge and SORT the
     # full df side; hint shuffle-hash — comp (one row per clustered

@@ -14,10 +14,12 @@ Scale design (100 TB / 10^12 docs):
     the north rule requires.  Connectivity is preserved (star edges
     keep the bucket one component for clustering) while edge count is
     bounded.
-  - Hot buckets are counted with a plain ``groupBy(band, band_hash)``
-    count for metrics (``hot_buckets``).  Buckets above
-    ``bucket_cap · hot_factor`` members take a pair-generation path
-    salted by doc hash, so that even a pathological band hash
+  - Bucket size has one definition, ``hot_buckets``: a plain
+    ``groupBy(band, band_hash)`` count filtered above a size.  The
+    dedup plan reads it as a lazy metric view (buckets above the cap);
+    ``candidate_pairs`` reads it to pick the buckets above
+    ``bucket_cap · hot_factor`` members, which take a pair-generation
+    path salted by doc hash, so that even a pathological band hash
     distributes across ``n_salts`` tasks instead of one window sort.
   - Pair dedup across the 32 bands is a map-side-combinable distinct.
   - The verification join (``verify_pairs``) re-attaches shingle
@@ -27,7 +29,10 @@ Scale design (100 TB / 10^12 docs):
     their ratio — JVM-side, codegen (counterpart of
     theta/JaccardSimilarity.java:55 exact mode).
 
-The stages are composed once, in plans/dedup.dedup_pipeline.
+Column names are fixed: signatures carry ``shingles`` and ``minhash``,
+SimHash is ``simhash``, and the SimHash Hamming radius is
+config.SIMHASH_MAX_HAMMING.  The stages are composed once, in
+plans/dedup.dedup_pipeline.
 """
 
 from __future__ import annotations
@@ -40,15 +45,14 @@ from ..config import (
     LSH_BANDS,
     LSH_BUCKET_CAP,
     LSH_ROWS,
-    MINHASH_PERMS,
+    SIMHASH_MAX_HAMMING,
 )
 from ..functions.text import exact_jaccard
 
 
-def add_signatures(df: DataFrame, text_col: str = "text",
-                   shingle_col: str = "shingles",
-                   minhash_col: str = "minhash") -> DataFrame:
-    """text → distinct shingle-hash array → 128-perm MinHash.
+def add_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """text → distinct shingle-hash array ``shingles`` → 128-perm
+    MinHash ``minhash``.
 
     Catalyst tokenizes and hashes each token once
     (functions/text.token_hashes); ONE ``mapInArrow`` pass then turns
@@ -66,11 +70,11 @@ def add_signatures(df: DataFrame, text_col: str = "text",
     from ..functions.text import token_hashes, tokens
     from pyspark.sql import types as T
 
-    df = df.withColumn(shingle_col, token_hashes(tokens(text_col)))
+    df = df.withColumn("shingles", token_hashes(tokens(text_col)))
     out_schema = T.StructType(
-        list(df.schema) + [T.StructField(minhash_col, T.ArrayType(T.LongType()))])
-    sh_idx = df.columns.index(shingle_col)
-    out_names = [*df.columns, minhash_col]
+        list(df.schema) + [T.StructField("minhash", T.ArrayType(T.LongType()))])
+    sh_idx = df.columns.index("shingles")
+    out_names = [*df.columns, "minhash"]
 
     def gen(batches):
         for batch in batches:
@@ -86,20 +90,19 @@ def add_signatures(df: DataFrame, text_col: str = "text",
     return df.mapInArrow(gen, out_schema)
 
 
-def add_simhash(df: DataFrame, shingle_col: str = "shingles",
-                simhash_col: str = "simhash") -> DataFrame:
-    """Append the 64-bit SimHash of each row's shingle-hash array, in
-    one ``mapInArrow`` over the flat Arrow buffer
-    (functions/minhash.simhash_flat)."""
+def add_simhash(df: DataFrame) -> DataFrame:
+    """Append ``simhash``, the 64-bit SimHash of each row's
+    ``shingles`` array, in one ``mapInArrow`` over the flat Arrow
+    buffer (functions/minhash.simhash_flat)."""
     import pyarrow as pa
 
     from ..functions.minhash import arrow_flat, simhash_flat
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
-        list(df.schema) + [T.StructField(simhash_col, T.LongType())])
-    sh_idx = df.columns.index(shingle_col)
-    out_names = [*df.columns, simhash_col]
+        list(df.schema) + [T.StructField("simhash", T.LongType())])
+    sh_idx = df.columns.index("shingles")
+    out_names = [*df.columns, "simhash"]
 
     def gen(batches):
         for batch in batches:
@@ -110,24 +113,34 @@ def add_simhash(df: DataFrame, shingle_col: str = "shingles",
     return df.mapInArrow(gen, out_schema)
 
 
-def band_buckets(df: DataFrame, id_col: str, minhash_col: str = "minhash",
-                 n_bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> DataFrame:
-    """Explode each signature into (id, band, band_hash) bucket keys.
+def band_buckets(df: DataFrame, id_col: str) -> DataFrame:
+    """Explode each ``minhash`` signature into (id, band, band_hash)
+    bucket keys, LSH_BANDS bands of LSH_ROWS rows.
 
     band_hash = xxhash64(band_index, r-row signature slice) — pure
     Catalyst; the band index participates in the hash so identical row
     values in different bands never collide into one bucket.
     """
-    assert n_bands * rows == MINHASH_PERMS
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
-            F.xxhash64(F.lit(b), F.slice(F.col(minhash_col), b * rows + 1, rows))
+            F.xxhash64(F.lit(b),
+                       F.slice(F.col("minhash"), b * LSH_ROWS + 1, LSH_ROWS))
             .alias("band_hash"))
-        for b in range(n_bands)])
+        for b in range(LSH_BANDS)])
     return (df.select(F.col(id_col), F.explode(bands).alias("bb"))
               .select(id_col, F.col("bb.band").alias("band"),
                       F.col("bb.band_hash").alias("band_hash")))
+
+
+def hot_buckets(buckets: DataFrame, min_size: int = LSH_BUCKET_CAP) -> DataFrame:
+    """Buckets with more than ``min_size`` members: (band, band_hash,
+    bucket_size) — the one definition of bucket size.  The skew metric
+    of the dedup plan (frequent-items use case, SURVEY.md §2.5) and the
+    hot-path selector of ``candidate_pairs``."""
+    return (buckets.groupBy("band", "band_hash")
+            .agg(F.count("*").alias("bucket_size"))
+            .filter(F.col("bucket_size") > min_size))
 
 
 def candidate_pairs(buckets: DataFrame, id_col: str,
@@ -150,10 +163,7 @@ def candidate_pairs(buckets: DataFrame, id_col: str,
     global hub.  No single task ever sees more than ~|bucket|/n_salts
     rows, edge count stays O(n), connectivity is preserved.
     """
-    sizes = buckets.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_size"))
-    hot_keys = sizes.filter(
-        F.col("bucket_size") > bucket_cap * hot_factor)
+    hot_keys = hot_buckets(buckets, min_size=bucket_cap * hot_factor)
     marked = buckets.join(F.broadcast(hot_keys.select("band", "band_hash")
                                       .withColumn("_hot", F.lit(True))),
                           on=["band", "band_hash"], how="left")
@@ -202,27 +212,26 @@ def candidate_pairs(buckets: DataFrame, id_col: str,
             .unionByName(hot_member).unionByName(hub_chain).distinct())
 
 
-def simhash_band_buckets(df: DataFrame, id_col: str,
-                         simhash_col: str = "simhash",
-                         max_hamming: int = 12) -> DataFrame:
-    """Explode a 64-bit SimHash into (id, band, band_bits) bucket keys.
+def simhash_band_buckets(df: DataFrame, id_col: str) -> DataFrame:
+    """Explode a 64-bit ``simhash`` into (id, band, band_bits) bucket
+    keys.
 
-    The fingerprint is split into ``max_hamming + 1`` contiguous bit
-    bands (12 + 1 = 13 bands of ~5 bits for the default).  Pigeonhole:
-    two fingerprints within Hamming distance ``max_hamming`` differ in
-    at most ``max_hamming`` bands, so they agree exactly on at least
-    one band — banding is a lossless candidate generator for the
-    Hamming ball, unlike MinHash banding which is probabilistic.
-    Pure Catalyst (shift/mask), whole-stage codegen.
+    The fingerprint is split into SIMHASH_MAX_HAMMING + 1 contiguous
+    bit bands (12 + 1 = 13 bands of ~5 bits).  Pigeonhole: two
+    fingerprints within Hamming distance SIMHASH_MAX_HAMMING differ in
+    at most that many bands, so they agree exactly on at least one
+    band — banding is a lossless candidate generator for the Hamming
+    ball, unlike MinHash banding which is probabilistic.  Pure Catalyst
+    (shift/mask), whole-stage codegen.
     """
-    n_bands = max_hamming + 1
+    n_bands = SIMHASH_MAX_HAMMING + 1
     base, extra = divmod(64, n_bands)
     sizes = [base + (1 if b < extra else 0) for b in range(n_bands)]
     offsets = [sum(sizes[:b]) for b in range(n_bands)]
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col(simhash_col), offsets[b])
+            F.shiftrightunsigned(F.col("simhash"), offsets[b])
             .bitwiseAND(F.lit((1 << sizes[b]) - 1)).alias("band_bits"))
         for b in range(n_bands)])
     return (df.select(F.col(id_col), F.explode(bands).alias("bb"))
@@ -230,52 +239,41 @@ def simhash_band_buckets(df: DataFrame, id_col: str,
                       F.col("bb.band_bits").alias("band_bits")))
 
 
-def simhash_hamming_pairs(sig: DataFrame, id_col: str,
-                          simhash_col: str = "simhash",
-                          max_hamming: int = 12) -> DataFrame:
-    """All pairs within ``max_hamming`` of each other on the 64-bit
-    SimHash — EXACT result via the lossless band equi-join (no
+def simhash_hamming_pairs(sig: DataFrame, id_col: str) -> DataFrame:
+    """All pairs within SIMHASH_MAX_HAMMING of each other on the 64-bit
+    ``simhash`` — EXACT result via the lossless band equi-join (no
     CartesianProduct node; one shuffle on (band, band_bits) plus the
     verification join).  Output: id_a, id_b, hamming.
     """
-    from ..functions.minhash import hamming64
-
-    buckets = simhash_band_buckets(sig, id_col, simhash_col, max_hamming)
+    buckets = simhash_band_buckets(sig, id_col)
     a, b = buckets.alias("a"), buckets.alias("b")
     cand = (a.join(b, on=["band", "band_bits"])
             .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
             .select(F.col(f"a.{id_col}").alias("id_a"),
                     F.col(f"b.{id_col}").alias("id_b"))
             .distinct())
-    sh = sig.select(F.col(id_col), F.col(simhash_col))
+    sh = sig.select(F.col(id_col), F.col("simhash"))
     joined = (cand
-              .join(sh.withColumnRenamed(id_col, "id_a")
-                      .withColumnRenamed(simhash_col, "sh_a"), on="id_a")
-              .join(sh.withColumnRenamed(id_col, "id_b")
-                      .withColumnRenamed(simhash_col, "sh_b"), on="id_b"))
+              .join(sh.withColumnsRenamed({id_col: "id_a", "simhash": "sh_a"}),
+                    on="id_a")
+              .join(sh.withColumnsRenamed({id_col: "id_b", "simhash": "sh_b"}),
+                    on="id_b"))
     return (joined
-            .withColumn("hamming", hamming64("sh_a", "sh_b"))
-            .where(F.col("hamming") <= max_hamming)
+            # bit_count of the xor: JVM-side, inside codegen
+            .withColumn("hamming",
+                        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+            .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
             .select("id_a", "id_b", "hamming"))
 
 
-def hot_buckets(buckets: DataFrame, min_size: int = LSH_BUCKET_CAP) -> DataFrame:
-    """Buckets exceeding the cap — the skew metric the checkpoint
-    lineage records (frequent-items use case, SURVEY.md §2.5)."""
-    return (buckets.groupBy("band", "band_hash")
-            .agg(F.count("*").alias("bucket_size"))
-            .filter(F.col("bucket_size") > min_size))
-
-
 def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
-                 shingle_col: str = "shingles",
                  threshold: float = DUP_JACCARD_THRESHOLD) -> DataFrame:
-    """Exact-Jaccard verification join: pairs (id_a, id_b) → rows with
-    jaccard ≥ threshold.  Output: id_a, id_b, jaccard, i, u — ``i`` and
-    ``u`` are the exact sizes, as longs, of the intersection and the
-    union of the two ids' shingle sets, and jaccard is the double
-    quotient i / u.  For u < 2^52 the double test i / u ≥ 0.8 keeps
-    exactly the pairs with 5·i ≥ 4·u.
+    """Exact-Jaccard verification join: pairs (id_a, id_b) + each id's
+    ``shingles`` → rows with jaccard ≥ threshold.  Output: id_a, id_b,
+    jaccard, i, u — ``i`` and ``u`` are the exact sizes, as longs, of
+    the intersection and the union of the two ids' shingle sets, and
+    jaccard is the double quotient i / u.  For u < 2^52 the double test
+    i / u ≥ 0.8 keeps exactly the pairs with 5·i ≥ 4·u.
 
     The shingle arrays must hold distinct elements, as shingle_hashes
     builds them; then |A∩B| = |A| + |B| − |A∪B|, and one
@@ -295,12 +293,12 @@ def verify_pairs(pairs: DataFrame, shingled: DataFrame, id_col: str,
     pair side and streams the arrays (14 s → 11 s, scaling restored).
     Same reasoning holds at cluster scale: never sort array payloads.
     """
-    sh = shingled.select(F.col(id_col), F.col(shingle_col))
+    sh = shingled.select(F.col(id_col), F.col("shingles"))
     joined = (pairs.select("id_a", "id_b").hint("shuffle_hash")
-              .join(sh.withColumnsRenamed({id_col: "id_a", shingle_col: "sh_a"}),
+              .join(sh.withColumnsRenamed({id_col: "id_a", "shingles": "sh_a"}),
                     on="id_a")
               .hint("shuffle_hash")
-              .join(sh.withColumnsRenamed({id_col: "id_b", shingle_col: "sh_b"}),
+              .join(sh.withColumnsRenamed({id_col: "id_b", "shingles": "sh_b"}),
                     on="id_b"))
     sizes = joined.select(
         "id_a", "id_b", "sh_a", "sh_b",

@@ -12,6 +12,13 @@ all call ``dedup_pipeline``.  Every stage is a DataFrame
 transformation; the only Python in the hot path is the one
 ``mapInArrow`` that builds shingle sets and MinHash signatures, and
 the plan object is stateless so the same code runs at any parallelism.
+
+The checkpointed stages are ``01_signatures``, ``02_band_buckets``,
+``04_candidate_pairs``, ``05_verified_pairs`` (``05b_pair_lcs`` with
+``with_lcs``) and ``06_clusters``.  Hot buckets are a lazy view over
+``02_band_buckets``, not a stage: a run that never reads them never
+counts them.  A tree written when ``03_hot_buckets`` was a stage still
+resumes; its ``03`` directory is not read.
 """
 
 from __future__ import annotations
@@ -38,13 +45,14 @@ class DedupResult:
     signatures: DataFrame     # id, shingles, minhash, _sid
     dup_pairs: DataFrame      # id_a, id_b, jaccard, i, u
     clusters: DataFrame       # id, cluster_id
-    hot_buckets: DataFrame    # band, band_hash, bucket_size
+    # band, band_hash, bucket_size: a view over 02_band_buckets,
+    # computed when read
+    hot_buckets: DataFrame
 
 
 def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
                    text_col: str = "text",
                    threshold: float = DUP_JACCARD_THRESHOLD,
-                   bucket_cap: int = LSH_BUCKET_CAP,
                    checkpoint_dir: str | None = None,
                    with_lcs: bool = False) -> DedupResult:
     """Run (or resume) the full dedup pipeline."""
@@ -89,13 +97,9 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
     buckets = stage(
         "02_band_buckets", lambda: band_buckets(sig, "_sid"), lineage="_sid")
 
-    hot = stage(
-        "03_hot_buckets",
-        lambda: hot_buckets(buckets, min_size=bucket_cap), lineage="bucket_size")
-
     pairs = stage(
         "04_candidate_pairs",
-        lambda: candidate_pairs(buckets, "_sid", bucket_cap), lineage="id_a")
+        lambda: candidate_pairs(buckets, "_sid", LSH_BUCKET_CAP), lineage="id_a")
 
     verified = stage(
         "05_verified_pairs",
@@ -135,7 +139,8 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
     clusters = stage("06_clusters", build_clusters, lineage=id_col)
 
     return DedupResult(signatures=sig, dup_pairs=dup_pairs,
-                       clusters=clusters, hot_buckets=hot)
+                       clusters=clusters,
+                       hot_buckets=hot_buckets(buckets, min_size=LSH_BUCKET_CAP))
 
 
 def dedup_metrics(result: DedupResult, id_col: str = "url") -> DataFrame:

@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from ..config import FREQ_DEFAULT_MAX_MAP_SIZE
+from .image_pickle import load_image
 
 NO_FALSE_POSITIVES = "NO_FALSE_POSITIVES"
 NO_FALSE_NEGATIVES = "NO_FALSE_NEGATIVES"
@@ -118,5 +119,5 @@ class ItemsSketch:
     def from_bytes(buf: bytes) -> "ItemsSketch":
         if buf[:4] != b"FQ01":
             raise ValueError("bad frequent-items image")
-        m, off, sw, counts = pickle.loads(buf[4:])
+        m, off, sw, counts = load_image(buf[4:])
         return ItemsSketch(m, counts, off, sw)

@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from .image_pickle import load_image
 from .murmur3 import hash128_u64
 
 # ---------------------------------------------------------------------------
@@ -107,7 +108,7 @@ class ReservoirSketch:
     def from_bytes(buf: bytes) -> "ReservoirSketch":
         if buf[:4] != b"RS01":
             raise ValueError("bad reservoir image")
-        k, n, samples = pickle.loads(buf[4:])
+        k, n, samples = load_image(buf[4:])
         return ReservoirSketch(k, n, samples)
 
 
@@ -229,5 +230,5 @@ class PrioritySample:
     def from_bytes(buf: bytes) -> "PrioritySample":
         if buf[:4] != b"VO01":
             raise ValueError("bad priority-sample image")
-        k, n, tw, tau, items, weights, prios = pickle.loads(buf[4:])
+        k, n, tw, tau, items, weights, prios = load_image(buf[4:])
         return PrioritySample(k, n, tw, items, weights, prios, tau)

@@ -127,19 +127,29 @@ def sketch_keyed_values(keys: np.ndarray, values: np.ndarray,
                         seed: int = DEFAULT_UPDATE_SEED,
                         mode: str = "Sum",
                         values_dtype=np.float64) -> TupleSketch:
-    """Batch build: update(key_i, values_i) for every row
-    (tuple/UpdatableSketch.java:100-157, vectorized).
+    """Batch build: update(long key_i, values_i) for every row
+    (tuple/UpdatableSketch.java:100-157, vectorized)."""
+    return from_update_hashes(
+        theta_hash_u64(np.asarray(keys, dtype=np.int64), seed), values,
+        lg_k, seed, mode, values_dtype)
+
+
+def from_update_hashes(h: np.ndarray, values: np.ndarray,
+                       lg_k: int = DEFAULT_LG_K,
+                       seed: int = DEFAULT_UPDATE_SEED,
+                       mode: str = "Sum",
+                       values_dtype=np.float64) -> TupleSketch:
+    """Batch build from each row's 63-bit update hash (murmur3 h1 >>> 1
+    of its key) and its values.
 
     Duplicate keys combine by ``mode`` BEFORE the k-cut — the
     reference applies the summary combiner on every colliding update.
     ``values_dtype=np.int64`` keeps integer summaries (e.g. cents)
     exact end-to-end — no float path anywhere.
     """
-    keys = np.asarray(keys, dtype=np.int64)
     values = np.asarray(values, dtype=values_dtype)
     if values.ndim == 1:
         values = values[:, None]
-    h = theta_hash_u64(keys, seed)
     order = np.argsort(h, kind="stable")
     h, values = h[order], values[order]
     uniq, start = np.unique(h, return_index=True)

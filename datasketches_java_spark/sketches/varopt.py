@@ -35,6 +35,8 @@ import pickle
 
 import numpy as np
 
+from .image_pickle import load_image
+
 
 class VarOptSketch:
     """Variance-optimal weighted sample of at most k items."""
@@ -288,7 +290,7 @@ class VarOptSketch:
     def from_bytes(buf: bytes) -> "VarOptSketch":
         if buf[:4] != b"VO02":
             raise ValueError("bad varopt image")
-        k, n, heap, r_items, twr, marks, tie = pickle.loads(buf[4:])
+        k, n, heap, r_items, twr, marks, tie = load_image(buf[4:])
         out = VarOptSketch(k)
         out.n, out.heap, out.r_items = n, heap, r_items
         out.total_wt_r, out.num_marks_in_h, out._tie = twr, marks, tie

@@ -99,7 +99,28 @@ def test_pipeline_checkpoint_resume(spark, pages, tmp_path):
     store = CheckpointStore(spark, ckpt)
     m = store.all_metrics()
     assert {"partition_id", "rows", "stage", "wall_ms"} <= set(m.columns)
-    assert m.select("stage").distinct().count() >= 5
+    # hot buckets are a view over 02, not a stage of their own
+    assert {r.stage for r in m.select("stage").distinct().collect()} == {
+        "01_signatures", "02_band_buckets", "04_candidate_pairs",
+        "05_verified_pairs", "06_clusters"}
+
+
+def test_dedup_metrics_counts_hot_buckets(spark):
+    """``n_hot_buckets`` is the hot-bucket view over the band table: a
+    template copied past the cap fills one bucket per band."""
+    from datasketches_java_spark.config import LSH_BANDS, LSH_BUCKET_CAP
+    from datasketches_java_spark.operators.lsh import band_buckets, hot_buckets
+    from datasketches_java_spark.plans.dedup import dedup_metrics
+
+    base = spark.createDataFrame(
+        generate_webtext(60, seed=7)["pages"]).select("url", "text")
+    text = base.first()["text"]
+    farm = spark.createDataFrame(
+        [(f"farm{i}", text) for i in range(LSH_BUCKET_CAP + 6)],
+        "url string, text string")
+    res = dedup_pipeline(spark, base.unionByName(farm))
+    direct = hot_buckets(band_buckets(res.signatures, "_sid")).count()
+    assert dedup_metrics(res).first().n_hot_buckets == direct == LSH_BANDS
 
 
 def test_resume_from_frozen_checkpoint(spark, tmp_path):

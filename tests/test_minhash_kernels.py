@@ -11,10 +11,14 @@ None docs interleaved.
 """
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from datasketches_java_spark.functions import minhash as mh
+
+
+def _flat(docs):
+    return mh.arrow_flat(pa.array(docs, pa.list_(pa.int64())))
 
 
 def _reference_minhash(docs, n_perms):
@@ -67,7 +71,7 @@ def test_minhash_blocked_equals_reference(monkeypatch, block):
     rng = np.random.default_rng(7)
     docs = _boundary_docs(block, rng)
     monkeypatch.setattr(mh, "_BLOCK_VALUES", block)
-    got = mh.minhash_batch(pd.Series(docs), n_perms=16)
+    got = mh.minhash_flat(*_flat(docs), n_perms=16)
     want = _reference_minhash(docs, n_perms=16)
     np.testing.assert_array_equal(got, want)
 
@@ -77,7 +81,7 @@ def test_simhash_blocked_equals_reference(monkeypatch, block):
     rng = np.random.default_rng(11)
     docs = _boundary_docs(block, rng)
     monkeypatch.setattr(mh, "_BLOCK_VALUES", block)
-    got = mh.simhash_batch(pd.Series(docs), bits=64)
+    got = mh.simhash_flat(*_flat(docs), bits=64)
     want = _reference_simhash(docs, bits=64)
     np.testing.assert_array_equal(got, want)
 
@@ -87,7 +91,7 @@ def test_blocked_matches_unblocked_default():
     rng = np.random.default_rng(3)
     docs = [rng.integers(-2**63, 2**63, size=n, dtype=np.int64).tolist()
             for n in rng.integers(1, 400, size=50)]
-    sig = mh.minhash_batch(pd.Series(docs))
-    fp = mh.simhash_batch(pd.Series(docs))
+    sig = mh.minhash_flat(*_flat(docs))
+    fp = mh.simhash_flat(*_flat(docs))
     np.testing.assert_array_equal(sig, _reference_minhash(docs, mh.MINHASH_PERMS))
     np.testing.assert_array_equal(fp, _reference_simhash(docs, mh.SIMHASH_BITS))

@@ -51,16 +51,17 @@ def test_simhash_pairs_equal_verified_set(spark):
     # recompute fingerprints + Hamming independently of operators/lsh:
     # every emitted pair must actually lie inside the Hamming-12 ball
     # the query claims to search.
-    from datasketches_java_spark.functions.minhash import simhash_batch
+    from datasketches_java_spark.functions.minhash import (
+        arrow_flat, simhash_flat)
     from datasketches_java_spark.functions.text import (
         shingle_hashes_from_tokens, tokens)
-    import pandas as pd
 
     docs = (spark.read.parquet(os.path.join(SF, "documents.parquet"))
             .withColumn("_toks", tokens("text"))
             .withColumn("sh", shingle_hashes_from_tokens("_toks"))
-            .select("doc_id", "sh").toPandas())
-    fp = dict(zip(docs.doc_id, simhash_batch(pd.Series(list(docs.sh)))))
+            .select("doc_id", "sh").toArrow())
+    fp = dict(zip(docs.column("doc_id").to_pylist(),
+                  simhash_flat(*arrow_flat(docs.column("sh")))))
     for (a, b) in emitted:
         d = int(bin(np.uint64(fp[a]) ^ np.uint64(fp[b])).count("1"))
         assert d <= 12, (a, b, d)

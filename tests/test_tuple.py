@@ -164,3 +164,37 @@ def test_tuple_jaccard_api():
     assert tpl.dissimilarity_test(
         a, tpl.sketch_keyed_values(np.arange(k, 2 * k), np.ones(k), lg_k=12),
         0.05)
+
+
+def _tuple_agg(spark, rows, key_type):
+    from datasketches_java_spark.functions.sketch_aggs import (
+        tuple_estimate, tuple_sketch_agg, tuple_sum_value)
+    df = spark.createDataFrame(rows, f"k {key_type}, v double")
+    sk = tuple_sketch_agg(df, "k", ["v"], lg_k=12, mode="Sum")
+    return sk.select("tuple_sketch",
+                     tuple_estimate("tuple_sketch").alias("d"),
+                     tuple_sum_value(0)("tuple_sketch").alias("s")).head()
+
+
+def test_tuple_agg_skips_null_keys_with_their_values(spark):
+    r = _tuple_agg(spark, [(1, 1.0), (None, 2.0)], "long")
+    assert (r.d, r.s) == (1.0, 1.0)
+
+
+def test_tuple_agg_double_keys_stay_distinct(spark):
+    r = _tuple_agg(spark, [(0.25, 1.0), (0.5, 2.0), (0.75, 4.0)], "double")
+    assert (r.d, r.s) == (3.0, 7.0)
+
+
+def test_tuple_agg_string_keys(spark):
+    r = _tuple_agg(spark, [("a", 1.0), ("b", 2.0), ("a", 4.0), ("", 8.0),
+                           (None, 16.0)], "string")
+    assert (r.d, r.s) == (2.0, 7.0)
+
+
+def test_tuple_agg_bigint_image_equals_numpy_build(spark):
+    rows = [(i % 97, float(i % 7)) for i in range(3000)]
+    r = _tuple_agg(spark, rows, "long")
+    keys, vals = np.array(rows).T
+    want = tpl.sketch_keyed_values(keys.astype(np.int64), vals, lg_k=12)
+    assert bytes(r.tuple_sketch) == want.to_bytes()

@@ -7,20 +7,28 @@ fingerprint (no false negatives for long matches)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from datasketches_java_spark.functions.minhash import (
-    winnow_batch,
+    arrow_flat,
     winnow_fingerprints,
+    winnow_flat,
 )
+
+
+def winnow_batch(docs: list, window: int = 8) -> list[list[int]]:
+    """Per-doc fingerprint lists from the flat kernel."""
+    vals, offsets = winnow_flat(
+        *arrow_flat(pa.array(docs, pa.list_(pa.int64()))), window)
+    return [vals[offsets[i]:offsets[i + 1]].tolist() for i in range(len(docs))]
 
 
 def test_winnow_deterministic_and_subset():
     rng = np.random.default_rng(2)
     h = list(rng.integers(-2**62, 2**62, 100))
-    a = winnow_batch(pd.Series([h]))[0]
-    b = winnow_batch(pd.Series([h]))[0]
+    a = winnow_batch([h])[0]
+    b = winnow_batch([h])[0]
     assert a == b
     assert set(a) <= set(int(x) for x in h)
     assert 0 < len(a) < len(h)
@@ -31,12 +39,12 @@ def test_winnow_shared_run_guarantee():
     shared = list(rng.integers(-2**62, 2**62, 40))  # run of 40 k-grams
     doc1 = list(rng.integers(-2**62, 2**62, 80)) + shared
     doc2 = shared + list(rng.integers(-2**62, 2**62, 80))
-    f1, f2 = winnow_batch(pd.Series([doc1, doc2]), window=8)
+    f1, f2 = winnow_batch([doc1, doc2], window=8)
     assert set(f1) & set(f2), "shared 40-gram run must share a fingerprint"
 
 
 def test_winnow_short_and_empty_docs():
-    out = winnow_batch(pd.Series([[], None, [5], list(range(4))]), window=8)
+    out = winnow_batch([[], None, [5], list(range(4))], window=8)
     assert out[0] == [] and out[1] == []
     assert out[2] == [5]
     assert out[3] == [0]  # min of 0..3
@@ -68,7 +76,7 @@ def test_winnow_vectorized_equals_per_doc_reference():
         docs.append(rng.integers(-2**62, 2**62, size=n).tolist() or None
                     if n == 0 else
                     rng.integers(-2**62, 2**62, size=n).tolist())
-    got = winnow_batch(pd.Series(docs), window=8)
+    got = winnow_batch(docs, window=8)
 
     def ref_one(v, window=8):
         if v is None or len(v) == 0:
