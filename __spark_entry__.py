@@ -507,8 +507,7 @@ def _q_tuple_spend_by_nation(spark: SparkSession, sf: str) -> DataFrame:
               .withColumn("cents", F.round(F.col("o_totalprice") * 100)
                           .cast("long")))
     sk = tuple_sketch_agg(joined, "o_custkey", ["cents"],
-                          by=["c_nationkey"], lg_k=12, mode="Sum",
-                          values_dtype="long")
+                          by=["c_nationkey"], lg_k=12, values_dtype="long")
     return (sk.select(
         "c_nationkey",
         F.round(tuple_estimate("tuple_sketch")).cast("long")

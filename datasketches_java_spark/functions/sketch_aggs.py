@@ -15,8 +15,14 @@ final is an Arrow GROUPED_AGG union.  No per-row Python anywhere
 frequent-items builders are the ``functions/sketch_spec`` specs the
 SQL registry registers too.
 
-Every scalar UDF here reads image columns row by row and returns NULL
-for a row whose image (or argument) is NULL.
+Every scalar here is a scalar Arrow UDF (``F.arrow_udf``): it receives
+one Arrow batch per call, reads its image column(s) row by row and
+returns NULL for a row whose image (or argument) is NULL.  A scalar
+whose arguments are all columns is one module-level UDF; the ones SQL
+offers too (``theta_estimate``, ``kll_quantile``, ...) are registered
+unchanged by ``functions/sql_registry`` under their SQL names.  A
+factory (``kll_quantiles(ranks)``, ``freq_items(threshold)``, ...)
+binds its Python arguments and builds a new UDF per call.
 """
 
 from __future__ import annotations
@@ -24,9 +30,9 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..config import (
     DEFAULT_LG_K,
@@ -80,17 +86,19 @@ def _two_phase(df: DataFrame, by: list[str] | None, value_cols: list[str],
 
 
 def _image_udf(rtype: T.DataType) -> Callable:
-    """Decorator: ``fn(image, *args)`` per row → scalar pandas UDF over
+    """Decorator: ``fn(image, *args)`` per row → scalar Arrow UDF over
     image column(s).  A row with a NULL argument gives NULL, never a
     worker error — the one NULL rule of every image-reading scalar."""
+    atype = to_arrow_type(rtype)
+
     def wrap(fn: Callable) -> Callable:
-        def udf(*cols: pd.Series) -> pd.Series:
-            null = np.logical_or.reduce([c.isna().to_numpy() for c in cols])
-            return pd.Series([None if n else fn(*row)
-                              for n, *row in zip(null, *cols)], dtype=object)
+        def udf(*cols: pa.Array) -> pa.Array:
+            rows = zip(*(c.to_pylist() for c in cols))
+            return pa.array([None if None in row else fn(*row) for row in rows],
+                            type=atype)
         udf.__name__ = udf.__qualname__ = fn.__name__
         udf.__doc__, udf.__module__ = fn.__doc__, fn.__module__
-        return F.pandas_udf(udf, rtype)
+        return F.arrow_udf(udf, rtype)
     return wrap
 
 
@@ -100,9 +108,7 @@ def _image_udf(rtype: T.DataType) -> Callable:
 
 def theta_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
                      lg_k: int = DEFAULT_LG_K,
-                     seed: int = DEFAULT_UPDATE_SEED,
-                     prehashed: bool = False,
-                     p: float = 1.0) -> DataFrame:
+                     prehashed: bool = False) -> DataFrame:
     """groupBy(by).agg(theta_sketch(col)) -> by + theta_sketch:binary.
 
     Values hash through the reference's update overloads
@@ -112,11 +118,9 @@ def theta_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
     sketches built here are hash-equal to reference sketches of the
     same items (cross-system set operations work).  If ``prehashed``
     the column already holds 63-bit update hashes (the union
-    "backdoor", theta/UnionImpl.java:328).  ``p`` is the builder's
-    up-front sampling probability (UpdateSketchBuilder.setP).
+    "backdoor", theta/UnionImpl.java:328).
     """
-    return _two_phase(df, by, [col], S.theta(lg_k, seed, p, prehashed),
-                      "theta_sketch")
+    return _two_phase(df, by, [col], S.theta(lg_k, prehashed), "theta_sketch")
 
 
 def theta_union_agg(df: DataFrame, sketch_col: str = "theta_sketch",
@@ -199,12 +203,11 @@ def theta_jaccard_pair(x: bytes, y: bytes) -> float:
 # ---------------------------------------------------------------------------
 
 def hll_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                   lg_k: int = HLL_DEFAULT_LG_K,
-                   seed: int = DEFAULT_UPDATE_SEED) -> DataFrame:
+                   lg_k: int = HLL_DEFAULT_LG_K) -> DataFrame:
     """Values hash through the reference's update overloads like the
     theta agg (hll/BaseHllSketch.java:292-393): integral, floating,
     STRING (UTF-8 bytes) and BINARY (raw bytes) columns."""
-    return _two_phase(df, by, [col], S.hll(lg_k, seed), "hll_sketch")
+    return _two_phase(df, by, [col], S.hll(lg_k), "hll_sketch")
 
 
 @_image_udf(T.DoubleType())
@@ -308,52 +311,39 @@ def kll_items_from_java(dtype: str = "long") -> Callable:
     return dec
 
 
-def kll_items_quantiles(ranks: list[float], dtype: str = "long",
-                        inclusive: bool = True) -> Callable:
+def kll_items_quantiles(ranks: list[float], dtype: str = "long") -> Callable:
     """Scalar UDF factory: quantiles at ``ranks`` from a generic-item
     KLL image column of the given dtype ('long' | 'string')."""
     elem = T.LongType() if dtype == "long" else T.StringType()
 
     @_image_udf(T.ArrayType(elem))
     def qs(b: bytes) -> list:
-        return KllItemsSketch.from_bytes(b).quantiles(ranks, inclusive)
+        return KllItemsSketch.from_bytes(b).quantiles(ranks)
     return qs
 
 
-def kll_items_rank(value, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a
-    generic-item KLL image column (comparator order)."""
-    @_image_udf(T.DoubleType())
-    def r(b: bytes) -> float:
-        return KllItemsSketch.from_bytes(b).rank(value, inclusive)
-    return r
+@_image_udf(T.DoubleType())
+def kll_quantile(b: bytes, rank) -> float:
+    """Quantile at the ``rank`` column from a KLL image column
+    (kll/KllDoublesSketch.getQuantile counterpart); SQL
+    ``kll_sketch_quantile``."""
+    return KllDoublesSketch.from_bytes(b).quantile(float(rank))
 
 
-def kll_quantile(rank: float, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: quantile at ``rank`` from a KLL image
-    column (kll/KllDoublesSketch.getQuantile counterpart)."""
-    @_image_udf(T.DoubleType())
-    def q(b: bytes) -> float:
-        return KllDoublesSketch.from_bytes(b).quantile(rank, inclusive)
-    return q
-
-
-def kll_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
+def kll_quantiles(ranks: list[float]) -> Callable:
     """Scalar UDF factory: array of quantiles at ``ranks`` from a
     KLL image column (one deserialize per row, not per rank)."""
     @_image_udf(T.ArrayType(T.DoubleType()))
     def qs(b: bytes) -> list:
-        return KllDoublesSketch.from_bytes(b).quantiles(ranks, inclusive)
+        return KllDoublesSketch.from_bytes(b).quantiles(ranks)
     return qs
 
 
-def kll_rank(value: float) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a KLL
-    image column (kll/KllDoublesSketch.getRank counterpart)."""
-    @_image_udf(T.DoubleType())
-    def r(b: bytes) -> float:
-        return KllDoublesSketch.from_bytes(b).rank(value)
-    return r
+@_image_udf(T.DoubleType())
+def kll_rank(b: bytes, value) -> float:
+    """Normalized rank of the ``value`` column from a KLL image column
+    (kll/KllDoublesSketch.getRank counterpart); SQL ``kll_sketch_rank``."""
+    return KllDoublesSketch.from_bytes(b).rank(float(value))
 
 
 @_image_udf(T.LongType())
@@ -379,13 +369,13 @@ def kll_max(b: bytes) -> float:
 # ---------------------------------------------------------------------------
 
 def req_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                   k: int = 12, hra: bool = True) -> DataFrame:
+                   k: int = 12) -> DataFrame:
     """groupBy(by).agg(req_sketch(col)) — relative-error quantiles
     (req/ReqSketch.java:82): HRA mode keeps extreme-tail ranks
     near-exact, the regime KLL's uniform rank error can't serve
     (length/score distribution tails in data pipelines)."""
     return _two_phase(df, by, [col], S.Spec(
-        lambda v: ReqSketch(k, hra).update_batch(
+        lambda v: ReqSketch(k).update_batch(
             to_numpy(v.drop_null(), np.float64)).to_bytes(),
         lambda imgs: fold(ReqSketch.from_bytes(imgs[0]), ReqSketch, imgs[1:])),
         "req_sketch")
@@ -403,22 +393,13 @@ def req_from_java(b: bytes) -> bytes:
     return req_serde.from_java_bytes(b).to_bytes()
 
 
-def req_quantiles(ranks: list[float], inclusive: bool = True) -> Callable:
+def req_quantiles(ranks: list[float]) -> Callable:
     """Scalar UDF factory: quantiles at ``ranks`` from a REQ image
     column (req/ReqSketch.getQuantile counterpart)."""
     @_image_udf(T.ArrayType(T.DoubleType()))
     def qs(b: bytes) -> list:
-        return ReqSketch.from_bytes(b).quantiles(ranks, inclusive)
+        return ReqSketch.from_bytes(b).quantiles(ranks)
     return qs
-
-
-def req_rank(value: float, inclusive: bool = True) -> Callable:
-    """Scalar UDF factory: normalized rank of ``value`` from a REQ
-    image column."""
-    @_image_udf(T.DoubleType())
-    def r(b: bytes) -> float:
-        return ReqSketch.from_bytes(b).rank(value, inclusive)
-    return r
 
 
 # ---------------------------------------------------------------------------
@@ -426,13 +407,11 @@ def req_rank(value: float, inclusive: bool = True) -> Callable:
 # ---------------------------------------------------------------------------
 
 def freq_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                    max_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE,
-                    weight_col: str | None = None) -> DataFrame:
-    """groupBy(by).agg(frequent_items(col[, weight])) -> by +
-    freq_sketch:binary — two-phase heavy-hitters aggregation
-    (frequencies/ItemsSketch update/merge with median-purge)."""
-    return _two_phase(df, by, [col] + ([weight_col] if weight_col else []),
-                      S.freq(max_map_size), "freq_sketch")
+                    max_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE) -> DataFrame:
+    """groupBy(by).agg(frequent_items(col)) -> by + freq_sketch:binary
+    — two-phase heavy-hitters aggregation (frequencies/ItemsSketch
+    update/merge with median-purge)."""
+    return _two_phase(df, by, [col], S.freq(max_map_size), "freq_sketch")
 
 
 _FREQ_ROW = T.ArrayType(T.StructType([
@@ -457,14 +436,14 @@ def freq_items_from_java(b: bytes) -> bytes:
     return freq_serde.items_from_java_bytes(b).to_bytes()
 
 
-def freq_items(threshold: int, error_type: str = "NO_FALSE_POSITIVES") -> Callable:
+def freq_items(threshold: int) -> Callable:
     """Scalar UDF factory: (item, estimate, lb, ub) heavy-hitter rows
-    above ``threshold`` from a freq image column, under the chosen
-    error regime (NO_FALSE_POSITIVES | NO_FALSE_NEGATIVES)."""
+    above ``threshold`` from a freq image column, without false
+    positives (frequencies/ErrorType.NO_FALSE_POSITIVES)."""
     @_image_udf(_FREQ_ROW)
     def items(b: bytes) -> list:
         return [(str(i), e, lb, ub) for i, e, lb, ub in
-                ItemsSketch.from_bytes(b).frequent_items(threshold, error_type)]
+                ItemsSketch.from_bytes(b).frequent_items(threshold)]
     return items
 
 
@@ -475,11 +454,9 @@ def freq_items(threshold: int, error_type: str = "NO_FALSE_POSITIVES") -> Callab
 def tuple_sketch_agg(df: DataFrame, key_col: str, value_cols: list[str],
                      by: list[str] | None = None,
                      lg_k: int = DEFAULT_LG_K,
-                     seed: int = DEFAULT_UPDATE_SEED,
-                     mode: str = "Sum",
                      values_dtype: str = "double") -> DataFrame:
     """groupBy(by).agg(tuple_sketch(key, values)) — distinct keys with
-    per-key summary algebra (tuple/UpdatableSketch.java:40).
+    summed per-key values (tuple/UpdatableSketch.java:40, Sum mode).
 
     Keys are hashed by their type like theta's values
     (``sketch_spec.hash_pairs``); a row whose key is NULL or empty is
@@ -493,8 +470,8 @@ def tuple_sketch_agg(df: DataFrame, key_col: str, value_cols: list[str],
     def build(keys: pa.Array, *values: pa.Array) -> bytes:
         keep = S.kept(keys)
         vals = np.column_stack([to_numpy(v, np_dtype)[keep] for v in values])
-        uh = S.hash_pairs(keys, seed)[0] >> np.uint64(1)
-        return tpl.from_update_hashes(uh, vals, lg_k, seed, mode,
+        uh = S.hash_pairs(keys, DEFAULT_UPDATE_SEED)[0] >> np.uint64(1)
+        return tpl.from_update_hashes(uh, vals, lg_k,
                                       values_dtype=np_dtype).to_bytes()
 
     return _two_phase(df, by, [key_col, *value_cols], S.Spec(
@@ -561,27 +538,18 @@ def aod_from_java(b: bytes) -> bytes:
     return tuple_serde.aod_from_java_bytes(b).to_bytes()
 
 
-@_image_udf(T.DoubleType())
-def tuple_jaccard_pair(x: bytes, y: bytes) -> float:
-    """Jaccard estimate of two tuple-sketch images
-    (tuple/JaccardSimilarity.java:41)."""
-    return tpl.jaccard(tpl.TupleSketch.from_bytes(x),
-                       tpl.TupleSketch.from_bytes(y))[1]
-
-
 # ---------------------------------------------------------------------------
 # CPC
 # ---------------------------------------------------------------------------
 
 def cpc_sketch_agg(df: DataFrame, col: str, by: list[str] | None = None,
-                   lg_k: int = 11,
-                   seed: int = DEFAULT_UPDATE_SEED) -> DataFrame:
+                   lg_k: int = 11) -> DataFrame:
     """groupBy(by).agg(cpc_sketch(col)) — the CPC bit-matrix core
     (cpc/CpcSketch.java:64) in the standard two-phase shape; shuffle
     payloads are the engine's sparse-pairs/dense-matrix images.
     Values hash through the reference's update overloads like the
     theta agg (update(String), cpc/CpcSketch.java:342, and the rest)."""
-    return _two_phase(df, by, [col], S.cpc(lg_k, seed), "cpc_sketch")
+    return _two_phase(df, by, [col], S.cpc(lg_k), "cpc_sketch")
 
 
 @_image_udf(T.DoubleType())

@@ -114,36 +114,35 @@ def fold(start, cls, imgs: list[bytes]) -> bytes:
     return start.to_bytes()
 
 
-def theta(lg_k: int = DEFAULT_LG_K, seed: int = DEFAULT_UPDATE_SEED,
-          p: float = 1.0, prehashed: bool = False) -> Spec:
+def theta(lg_k: int = DEFAULT_LG_K, prehashed: bool = False) -> Spec:
     """Theta: ``prehashed`` values are 63-bit update hashes already
-    (the union backdoor, theta/UnionImpl.java:328); ``p`` is the
-    up-front sampling probability (UpdateSketchBuilder.setP)."""
+    (the union backdoor, theta/UnionImpl.java:328)."""
     def build(values: pa.Array) -> bytes:
         if prehashed:
             uh = to_numpy(values.drop_null(), np.uint64)
         else:
-            uh = hash_pairs(values, seed)[0] >> np.uint64(1)
-        return _theta.from_update_hashes(uh, lg_k, seed, p).to_bytes()
+            uh = hash_pairs(values, DEFAULT_UPDATE_SEED)[0] >> np.uint64(1)
+        return _theta.from_update_hashes(uh, lg_k).to_bytes()
     return Spec(build, _merger(_theta.ThetaSketch, _theta.union_many),
-                lambda: _theta.empty(lg_k, seed).to_bytes())
+                lambda: _theta.empty(lg_k).to_bytes())
 
 
-def hll(lg_k: int = HLL_DEFAULT_LG_K, seed: int = DEFAULT_UPDATE_SEED) -> Spec:
+def hll(lg_k: int = HLL_DEFAULT_LG_K) -> Spec:
     """HLL-8 (hll/BaseHllSketch.java:292-393 update overloads)."""
     return Spec(
-        lambda v: _hll.from_hash_pair(*hash_pairs(v, seed), lg_k, seed).to_bytes(),
+        lambda v: _hll.from_hash_pair(
+            *hash_pairs(v, DEFAULT_UPDATE_SEED), lg_k).to_bytes(),
         _merger(_hll.HllSketch, _hll.union_many),
-        lambda: _hll.empty(lg_k, seed).to_bytes())
+        lambda: _hll.empty(lg_k).to_bytes())
 
 
-def cpc(lg_k: int = _cpc.DEFAULT_CPC_LG_K,
-        seed: int = DEFAULT_UPDATE_SEED) -> Spec:
+def cpc(lg_k: int = _cpc.DEFAULT_CPC_LG_K) -> Spec:
     """CPC (cpc/CpcSketch.java:310-398 update overloads)."""
     return Spec(
-        lambda v: _cpc.from_hash_pair(*hash_pairs(v, seed), lg_k, seed).to_bytes(),
+        lambda v: _cpc.from_hash_pair(
+            *hash_pairs(v, DEFAULT_UPDATE_SEED), lg_k).to_bytes(),
         _merger(_cpc.CpcSketch, _cpc.union_many),
-        lambda: _cpc.empty(lg_k, seed).to_bytes())
+        lambda: _cpc.empty(lg_k).to_bytes())
 
 
 def kll(k: int = KLL_DEFAULT_K) -> Spec:
@@ -156,16 +155,12 @@ def kll(k: int = KLL_DEFAULT_K) -> Spec:
 
 
 def freq(max_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE) -> Spec:
-    """Frequent items, optionally weighted; NULL items are skipped."""
-    def build(values: pa.Array, weights: pa.Array | None = None) -> bytes:
-        keep = values.is_valid()
-        w = None if weights is None else to_numpy(weights.filter(keep), np.int64)
-        return ItemsSketch(max_map_size).update_batch(
-            values.filter(keep).to_pylist(), w).to_bytes()
-    return Spec(build,
-                lambda imgs: fold(ItemsSketch.from_bytes(imgs[0]), ItemsSketch,
-                                  imgs[1:]),
-                lambda: ItemsSketch(max_map_size).to_bytes())
+    """Frequent items; NULL items are skipped."""
+    return Spec(
+        lambda v: ItemsSketch(max_map_size).update_batch(
+            v.drop_null().to_pylist()).to_bytes(),
+        lambda imgs: fold(ItemsSketch.from_bytes(imgs[0]), ItemsSketch, imgs[1:]),
+        lambda: ItemsSketch(max_map_size).to_bytes())
 
 
 def aggregate(fn: Callable[[pa.Array], bytes], name: str):

@@ -36,9 +36,18 @@ aggs in ``functions/sketch_aggs.py`` — those remain the scale path
 for BUILDING sketches.  Two SQL patterns carry no such penalty:
 
 - QUERYING sketch images (``theta_sketch_estimate``, ``kll_sketch_
-  quantile``, the pairwise set ops): scalar Arrow-batched UDFs over
-  already-built sketch columns.  Every one returns NULL for a NULL
-  image.
+  quantile``, the pairwise set ops): scalar Arrow UDFs over
+  already-built sketch columns.  Every one returns NULL for a row
+  whose image or argument is NULL.  Each is the DataFrame scalar of
+  ``functions/sketch_aggs`` under its SQL name: ``theta_sketch_
+  {estimate,lower_bound,upper_bound,to_java,from_java}`` are
+  ``theta_{estimate,...}``; ``theta_sketch_{union_pair,intersect,
+  a_not_b,jaccard}`` are ``theta_{union,intersect,a_not_b,jaccard}_
+  pair``; ``{hll,cpc}_sketch_estimate`` are ``{hll,cpc}_estimate``;
+  ``kll_sketch_{quantile,rank,n,min,max}`` are ``kll_{quantile,rank,
+  n,min,max}``.  Only ``frequent_strings_sketch_result(sk, threshold)``
+  is SQL's own: its (item, estimate) rows are a different query from
+  ``freq_items``.
 - MERGING sketch images (``theta_sketch_union``, ``hll_sketch_union``,
   ...): the input rows are already bounded-size partials (e.g. from a
   checkpoint or a two-phase build), so the raw-value shuffle IS the
@@ -54,27 +63,10 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, types as T
 
-from ..config import (
-    DEFAULT_LG_K,
-    DEFAULT_UPDATE_SEED,
-    FREQ_DEFAULT_MAX_MAP_SIZE,
-    HLL_DEFAULT_LG_K,
-    KLL_DEFAULT_K,
-)
+from ..config import DEFAULT_LG_K
 from ..sketches.frequencies import ItemsSketch
-from ..sketches.kll import KllDoublesSketch
 from . import sketch_aggs as A, sketch_spec as S
 from .sketch_aggs import _image_udf
-
-
-@_image_udf(T.DoubleType())
-def _kll_sketch_quantile(b: bytes, rank: float) -> float:
-    return KllDoublesSketch.from_bytes(b).quantile(float(rank))
-
-
-@_image_udf(T.DoubleType())
-def _kll_sketch_rank(b: bytes, x: float) -> float:
-    return KllDoublesSketch.from_bytes(b).rank(float(x))
 
 
 @_image_udf(T.ArrayType(T.StructType([
@@ -82,31 +74,26 @@ def _kll_sketch_rank(b: bytes, x: float) -> float:
     T.StructField("estimate", T.LongType())])))
 def _frequent_strings_sketch_result(b: bytes, threshold: int) -> list:
     return [(it, int(est)) for it, est, _, _ in
-            ItemsSketch.from_bytes(b).frequent_items(
-                threshold=int(threshold), error_type="NO_FALSE_POSITIVES")]
+            ItemsSketch.from_bytes(b).frequent_items(threshold=int(threshold))]
 
 
 def register_sql_functions(spark: SparkSession,
-                           lg_k: int = DEFAULT_LG_K,
-                           hll_lg_k: int = HLL_DEFAULT_LG_K,
-                           kll_k: int = KLL_DEFAULT_K,
-                           freq_map_size: int = FREQ_DEFAULT_MAX_MAP_SIZE,
-                           seed: int = DEFAULT_UPDATE_SEED) -> list[str]:
+                           lg_k: int = DEFAULT_LG_K) -> list[str]:
     """Register the sketch SQL functions on ``spark``; returns the
-    registered names.  Config (lg_k, k, seed) binds at registration —
-    one registry per config, matching the Hive adaptor model where the
-    UDAF instance owns its parameters."""
-    theta, hll = S.theta(lg_k, seed), S.hll(hll_lg_k, seed)
-    kll = S.kll(kll_k)
+    registered names.  ``lg_k`` (theta) binds at registration — one
+    registry per config, matching the Hive adaptor model where the
+    UDAF instance owns its parameters; the other families use their
+    default size."""
+    theta, hll, kll = S.theta(lg_k), S.hll(), S.kll()
     aggregates = {
         "theta_sketch_build": theta.build,
         "theta_sketch_union": theta.union,
         "hll_sketch_build": hll.build,
         "hll_sketch_union": hll.union,
-        "cpc_sketch_build": S.cpc(seed=seed).build,
+        "cpc_sketch_build": S.cpc().build,
         "kll_sketch_build": kll.build,
         "kll_sketch_merge": kll.union,
-        "frequent_strings_sketch_build": S.freq(freq_map_size).build,
+        "frequent_strings_sketch_build": S.freq().build,
     }
     fns = {name: S.aggregate(fn, name) for name, fn in aggregates.items()}
     fns.update({
@@ -121,8 +108,8 @@ def register_sql_functions(spark: SparkSession,
         "theta_sketch_from_java": A.theta_from_java,
         "hll_sketch_estimate": A.hll_estimate,
         "cpc_sketch_estimate": A.cpc_estimate,
-        "kll_sketch_quantile": _kll_sketch_quantile,
-        "kll_sketch_rank": _kll_sketch_rank,
+        "kll_sketch_quantile": A.kll_quantile,
+        "kll_sketch_rank": A.kll_rank,
         "kll_sketch_n": A.kll_n,
         "kll_sketch_min": A.kll_min,
         "kll_sketch_max": A.kll_max,

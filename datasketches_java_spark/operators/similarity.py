@@ -34,6 +34,20 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _cosine(a, b):
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim) → the k best neighbors of each
+    query as (query_id, neighbor_id, rank), ranked by sim desc then
+    neighbor_id asc — the one total order every top-k path shares."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank"))
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                 vec_col: str, k: int = 10) -> DataFrame:
     """Exact cosine top-k of each query against the corpus
@@ -58,11 +72,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
               .where(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
                       _dot("qv", "cv").alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _topk(scored, k)
 
 
 def cosine_topk_blas(queries: DataFrame, corpus: DataFrame, id_col: str,
@@ -116,11 +126,7 @@ def cosine_topk_blas(queries: DataFrame, corpus: DataFrame, id_col: str,
                         rows.append((int(qid), int(ids[i]), float(sims[i, j])))
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _topk(corpus.select(id_col, vec_col).mapInPandas(score, out_schema), k)
 
 
 def cosine_pairs_blocked(df: DataFrame, id_col: str, vec_col: str,
@@ -249,15 +255,10 @@ def ivf_cosine_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     q = (queries.select(F.col(id_col).alias("query_id"),
                         _as_double(F.col(vec_col)).alias("qv"))
          .withColumn("cell", F.explode(probes)))
-    sim = _dot("qv", "cv") / (
-        F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
     scored = (q.join(corp, on="cell")
               .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id", sim.alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+              .select("query_id", "neighbor_id", _cosine("qv", "cv").alias("sim")))
+    return _topk(scored, k)
 
 
 def simhash_ann_buckets(queries: DataFrame, corpus: DataFrame, id_col: str,
@@ -270,12 +271,7 @@ def simhash_ann_buckets(queries: DataFrame, corpus: DataFrame, id_col: str,
     cb = embedding_simhash(
         corpus.select(F.col(id_col).alias("neighbor_id"),
                       _as_double(F.col(vec_col)).alias("cv")), "cv", bits)
-    sim = _dot("qv", "cv") / (
-        F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
     scored = (qb.join(cb, on="bucket")
               .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id", sim.alias("sim")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+              .select("query_id", "neighbor_id", _cosine("qv", "cv").alias("sim")))
+    return _topk(scored, k)

@@ -15,7 +15,8 @@ the plan object is stateless so the same code runs at any parallelism.
 
 The checkpointed stages are ``01_signatures``, ``02_band_buckets``,
 ``04_candidate_pairs``, ``05_verified_pairs`` (``05b_pair_lcs`` with
-``with_lcs``) and ``06_clusters``.  Hot buckets are a lazy view over
+``with_lcs``) and ``06_clusters``; the last runs when
+``DedupResult.clusters`` is first read.  Hot buckets are a lazy view over
 ``02_band_buckets``, not a stage: a run that never reads them never
 counts them.  A tree written when ``03_hot_buckets`` was a stage still
 resumes; its ``03`` directory is not read.
@@ -23,7 +24,9 @@ resumes; its ``03`` directory is not read.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -44,10 +47,17 @@ from ..operators.suffix_array import attach_texts, pair_lcs
 class DedupResult:
     signatures: DataFrame     # id, shingles, minhash, _sid
     dup_pairs: DataFrame      # id_a, id_b, jaccard, i, u
-    clusters: DataFrame       # id, cluster_id
     # band, band_hash, bucket_size: a view over 02_band_buckets,
     # computed when read
     hot_buckets: DataFrame
+    build_clusters: Callable[[], DataFrame] = field(repr=False)
+
+    @cached_property
+    def clusters(self) -> DataFrame:
+        """id, cluster_id: stage ``06_clusters``, run (or resumed) the
+        first time it is read, so a caller of the pairs alone never
+        runs connected components."""
+        return self.build_clusters()
 
 
 def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
@@ -136,11 +146,11 @@ def dedup_pipeline(spark: SparkSession, pages: DataFrame, id_col: str = "url",
                 .withColumn("cluster_id",
                             F.coalesce("cluster_id", F.col(id_col))))
 
-    clusters = stage("06_clusters", build_clusters, lineage=id_col)
-
-    return DedupResult(signatures=sig, dup_pairs=dup_pairs,
-                       clusters=clusters,
-                       hot_buckets=hot_buckets(buckets, min_size=LSH_BUCKET_CAP))
+    return DedupResult(
+        signatures=sig, dup_pairs=dup_pairs,
+        hot_buckets=hot_buckets(buckets, min_size=LSH_BUCKET_CAP),
+        build_clusters=lambda: stage("06_clusters", build_clusters,
+                                     lineage=id_col))
 
 
 def dedup_metrics(result: DedupResult, id_col: str = "url") -> DataFrame:

@@ -105,6 +105,19 @@ def test_pipeline_checkpoint_resume(spark, pages, tmp_path):
         "05_verified_pairs", "06_clusters"}
 
 
+def test_clusters_run_only_when_read(spark, pages, tmp_path):
+    """A caller of the pairs alone never runs connected components:
+    ``06_clusters`` is written the first time ``clusters`` is read, and
+    later reads reuse it."""
+    ckpt = tmp_path / "ckpt"
+    res = dedup_pipeline(spark, pages.limit(200), checkpoint_dir=str(ckpt))
+    res.dup_pairs.count()
+    assert (ckpt / "05_verified_pairs").exists()
+    assert not (ckpt / "06_clusters").exists()
+    assert res.clusters is res.clusters
+    assert (ckpt / "06_clusters").exists()
+
+
 def test_dedup_metrics_counts_hot_buckets(spark):
     """``n_hot_buckets`` is the hot-bucket view over the band table: a
     template copied past the cap fills one bucket per band."""

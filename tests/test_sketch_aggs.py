@@ -69,10 +69,12 @@ def test_hll_grouped(spark, lineitem):
 def test_kll_quantiles(spark, lineitem):
     out = SA.kll_sketch_agg(lineitem, "l_extendedprice", k=200)
     row = out.select(
-        SA.kll_quantile(0.5)("kll_sketch").alias("p50"),
+        SA.kll_quantile("kll_sketch", F.lit(0.5)).alias("p50"),
+        # a NULL rank gives NULL beside a valid one, not a worker error
+        SA.kll_quantile("kll_sketch", F.lit(None)).alias("null"),
         SA.kll_n("kll_sketch").alias("n")).collect()[0]
     n = lineitem.count()
-    assert row["n"] == n
+    assert row["n"] == n and row["null"] is None
     prices = [r[0] for r in lineitem.select("l_extendedprice").collect()]
     true_rank = sum(1 for p in prices if p <= row["p50"]) / n
     assert abs(true_rank - 0.5) < 0.04

@@ -173,3 +173,24 @@ def test_null_images_beside_valid_ones(sql):
     got = {r["n"]: r["q"] for r in rows}
     assert set(got) == {exact_n, None}
     assert got[None] is None and got[exact_n] is not None
+
+
+def test_null_arguments_beside_valid_rows(sql):
+    """A NULL non-image argument gives NULL for its row only; the row
+    beside it with a valid argument still answers."""
+    rows = sql("""
+        WITH k AS (SELECT kll_sketch_build(c_acctbal) sk FROM customer),
+             f AS (SELECT frequent_strings_sketch_build(o_orderpriority) fs
+                   FROM orders),
+             a AS (SELECT * FROM VALUES (CAST(0.5 AS DOUBLE), 0),
+                                        (CAST(NULL AS DOUBLE), CAST(NULL AS INT))
+                   AS t(x, th))
+        SELECT th, kll_sketch_quantile(sk, x) q, kll_sketch_rank(sk, x) r,
+               frequent_strings_sketch_result(fs, th) it
+        FROM k CROSS JOIN f CROSS JOIN a""").collect()
+    got = {r["th"]: r for r in rows}
+    assert set(got) == {0, None}
+    assert got[None]["q"] is None and got[None]["r"] is None
+    assert got[None]["it"] is None
+    assert got[0]["q"] is not None and got[0]["r"] is not None
+    assert len(got[0]["it"]) == 5   # the five order priorities

@@ -1,7 +1,8 @@
 """perfbench's traced run (``perfbench/run.py --trace 1``) re-composes
 the dedup plan from the library's public functions, one stage at a
-time.  Each call it makes must still bind, so a signature change fails
-here rather than in the next traced benchmark."""
+time, and its ``sketch_rollup`` workload builds and unions sketches
+through both sketch surfaces.  Each call they make must still bind, so
+a signature change fails here rather than in the next benchmark."""
 
 from __future__ import annotations
 
@@ -9,7 +10,8 @@ import inspect
 
 import pytest
 
-from datasketches_java_spark.functions import minhash
+from datasketches_java_spark.functions import minhash, sketch_aggs as A
+from datasketches_java_spark.functions.sql_registry import register_sql_functions
 from datasketches_java_spark.functions.text import (
     shingle_hashes_from_tokens,
     tokens,
@@ -25,7 +27,9 @@ from datasketches_java_spark.operators.lsh import (
 )
 from datasketches_java_spark.plans.dedup import dedup_pipeline
 
-# (function, positional args, keyword args) as the traced run calls them
+KEY = "l_suppkey"
+
+# (function, positional args, keyword args) as the benchmark calls them
 CALLS = [
     (tokens, ("text",), {}),
     (shingle_hashes_from_tokens, ("_toks",), {}),
@@ -43,6 +47,12 @@ CALLS = [
      {"lineage_col": "url"}),
     (dedup_pipeline, ("spark", "pages"),
      {"id_col": "url", "text_col": "text", "checkpoint_dir": "ckpt"}),
+    *((agg, ("df", "col"), {"by": [KEY]}) for agg in (
+        A.theta_sketch_agg, A.hll_sketch_agg, A.cpc_sketch_agg,
+        A.kll_sketch_agg, A.freq_sketch_agg)),
+    (A.theta_sketch_agg, ("df", "col"), {}),
+    (A.theta_union_agg, ("stored", "theta_sketch"), {}),
+    (register_sql_functions, ("spark",), {}),
 ]
 
 

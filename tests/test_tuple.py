@@ -94,7 +94,7 @@ def test_tuple_agg_spark(spark):
         tuple_estimate, tuple_sketch_agg, tuple_sum_value)
     rows = [(i % 7, i % 500, float(i % 13)) for i in range(5000)]
     df = spark.createDataFrame(rows, "g int, cust long, spend double")
-    sk = tuple_sketch_agg(df, "cust", ["spend"], by=["g"], lg_k=12, mode="Sum")
+    sk = tuple_sketch_agg(df, "cust", ["spend"], by=["g"], lg_k=12)
     got = {r["g"]: (int(round(r["d"])), round(r["s"], 6)) for r in sk.select(
         "g", tuple_estimate("tuple_sketch").alias("d"),
         tuple_sum_value(0)("tuple_sketch").alias("s")).collect()}
@@ -170,7 +170,7 @@ def _tuple_agg(spark, rows, key_type):
     from datasketches_java_spark.functions.sketch_aggs import (
         tuple_estimate, tuple_sketch_agg, tuple_sum_value)
     df = spark.createDataFrame(rows, f"k {key_type}, v double")
-    sk = tuple_sketch_agg(df, "k", ["v"], lg_k=12, mode="Sum")
+    sk = tuple_sketch_agg(df, "k", ["v"], lg_k=12)
     return sk.select("tuple_sketch",
                      tuple_estimate("tuple_sketch").alias("d"),
                      tuple_sum_value(0)("tuple_sketch").alias("s")).head()

@@ -237,8 +237,7 @@ def test_spark_udf_wire_roundtrip(spark):
 
     df = spark.createDataFrame(
         [(i % 97, (i % 7) + 1) for i in range(3000)], ["k", "v"])
-    sk = tuple_sketch_agg(df, "k", ["v"], lg_k=12, mode="Sum",
-                          values_dtype="long")
+    sk = tuple_sketch_agg(df, "k", ["v"], lg_k=12, values_dtype="long")
     wire = sk.select(
         tuple_from_java("int_java")(tuple_to_java("int_java")("tuple_sketch"))
         .alias("tuple_sketch"))
@@ -252,7 +251,7 @@ def test_spark_udf_wire_roundtrip(spark):
     assert total == expected
 
     skd = tuple_sketch_agg(df.withColumn("v", F.col("v").cast("double")),
-                           "k", ["v"], lg_k=12, mode="Sum")
+                           "k", ["v"], lg_k=12)
     wired = skd.select(aod_from_java(aod_to_java("tuple_sketch"))
                        .alias("tuple_sketch"))
     totald = wired.select(
